@@ -293,7 +293,7 @@ def main() -> None:
         if qi and qi % SEGMENT_EVERY == 0:
             calib["segments"].append({"at": qi, **_calibrate()})
         # release operator-internal caches from the previous query (the
-        # ownership convention: operators tracked_cache, callers release),
+        # ownership convention: operators materialize, callers release),
         # then clearCache for any caller-level leftovers.
         unpersist_operator_caches()
         clear_session_memos()
@@ -304,7 +304,7 @@ def main() -> None:
             pass
         # Round-13 measurement fix (round-12 verdict item 1): reset AGAIN
         # between the warm and the timed pass. Previously the reset ran
-        # only BEFORE the warm pass, so tracked_cache materializations and
+        # only BEFORE the warm pass, so operator materializations and
         # localCheckpoint-backed session memos (MinHash+CC components,
         # k-means/PQ codebooks, edge lists) were built in the untimed warm
         # run and consumed by the timed run — and memos additionally

@@ -27,14 +27,12 @@ __version__ = "0.1.0"
 
 from redcap_omop_etl_spark.caching import (  # noqa: E402
     clear_session_memos,
-    tracked_cache,
-    tracked_persist,
+    materialize,
     unpersist_operator_caches,
 )
 
 __all__ = [
     "clear_session_memos",
-    "tracked_cache",
-    "tracked_persist",
+    "materialize",
     "unpersist_operator_caches",
 ]

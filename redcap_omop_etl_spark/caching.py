@@ -1,127 +1,129 @@
-"""Cache-ownership discipline for operators that persist intermediates.
+"""The one materialization primitive and the one session memo.
 
-Several operators ``.cache()``/``.persist()`` an intermediate that feeds
-multiple branches of their plan (shingle tables, daily series, Gram
-partials …). The DataFrame they RETURN references that cached
-intermediate lazily, so the operator itself can never safely unpersist —
-only the caller knows when the last action over the result has run. In a
-one-query-per-process run that's moot, but a long-lived session composing
-many operators would accumulate storage blocks until eviction pressure
-hurts (``spark.catalog.clearCache()`` works but nukes caller-owned caches
-too).
+Every operator-internal materialization goes through ``materialize`` and
+every cross-query memo through ``session_memo``; nothing else in the
+package calls ``.cache()``, ``.persist()`` or ``.localCheckpoint()``
+(``tests/test_caching.py`` lints this).
 
-Convention: every operator-internal cache goes through ``tracked_cache``
-(or ``tracked_persist``); session owners call
-``unpersist_operator_caches()`` at their operator-composition boundaries
-(bench.py does so between queries). Caller-created caches are untouched —
-the registry only ever holds what operators created internally.
+``materialize(df, mode)`` — ``mode`` is one of:
 
-The registry holds STRONG references deliberately: the Python DataFrame
-handle is the only way to unpersist later, and the operator's local
-reference dies with its frame while the JVM-side cache lives on (a
-weakref registry was tried — every entry was already dead by release
-time). The held object is just a plan handle; the storage it pins is
-pinned by the cache itself, which is exactly what release reclaims, and
-the registry drains on every ``unpersist_operator_caches()`` call.
+- ``"eager"`` (default): eager localCheckpoint. One job now, and the
+  returned frame's plan is a leaf (a PLAN barrier), so downstream
+  actions re-plan from the barrier instead of re-analyzing the upstream
+  lineage — the tick/transition boundary materialization.
+- ``"lazy"``: lazy localCheckpoint. No job now; the first action over
+  the frame materializes it as a side effect (iterative loops whose
+  per-round probe is that action).
+- ``"persist"``: ``DataFrame.persist()`` for an intermediate that feeds
+  several branches of one plan; recomputable after release.
+
+Ownership. A materialization belongs to whoever was running when it was
+made: the innermost ``session_memo`` build in progress, otherwise the
+operator layer. Session owners (bench, oracle sweep, maintenance loop,
+streaming micro-batch handler) call ``unpersist_operator_caches()`` at
+their composition boundaries to free everything the operator layer made;
+memo-owned blocks survive that call and are freed only by
+``clear_session_memos()``, which also drops the memo entries (the next
+call rebuilds). Caller-created caches are never touched.
+
+Release contract. A checkpoint is registered by its RDD id alone and
+released with ``SparkContext.unpersistRDD`` — deterministic, and it
+pins nothing, so a session that never releases still gets the
+ContextCleaner's garbage-collected cleanup. A checkpoint is NOT
+recomputable: an action on a released checkpoint frame (or anything
+derived from it) raises, it never returns rows. So release only at a
+boundary after the outputs are collected, written or re-materialized,
+never mid-plan; a pin shared across several consumers (a micro-batch's
+ids shared by every applier) is released once, after the last consumer.
+A released ``"persist"`` frame simply recomputes on its next action.
+
+``session_memo(spark, key, build)`` returns ``build()``'s value, built
+once per (``applicationId``, ``key``) — keyed by the application so a
+stopped session's checkpoints are never served to its successor. The
+first element of ``key`` names the memo; the rest is its corpus (and
+whatever else selects the entry).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable, TypeVar
 
-_TRACKED: list[DataFrame] = []
-_TRACKED_CKPT_RDDS: list = []  # JVM RDDs backing tracked_checkpoint frames
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
+Release = Callable[[bool], None]  # frees one materialization's blocks
+
+_OPERATOR_OWNED: list[Release] = []
+_MEMOS: dict[tuple, tuple[object, list[Release]]] = {}
+_OWNERS: list[list[Release]] = [_OPERATOR_OWNED]  # innermost last
 
 
-def tracked_cache(df: DataFrame) -> DataFrame:
-    """``df.cache()`` + register for ``unpersist_operator_caches``."""
-    out = df.cache()
-    _TRACKED.append(out)
+def materialize(df: DataFrame, mode: str = "eager") -> DataFrame:
+    """Materialize ``df`` (see the module docstring for the modes) and
+    register its release with the current owner."""
+    if mode == "persist":
+        out = df.persist()
+
+        def release(blocking: bool) -> None:
+            out.unpersist(blocking=blocking)
+
+    elif mode in ("eager", "lazy"):
+        out = df.localCheckpoint(eager=mode == "eager")
+        # The blocks belong to the LogicalRDD's backing RDD, which
+        # df.unpersist() does not reach (it only consults the SQL
+        # CacheManager); holding the id and the context, not the frame,
+        # leaves garbage-collected cleanup intact.
+        sc = out.sparkSession.sparkContext
+        rdd_id = out._jdf.queryExecution().logical().rdd().id()
+
+        def release(blocking: bool) -> None:
+            if sc._jsc is not None:  # a stopped context freed everything already
+                sc._jsc.sc().unpersistRDD(rdd_id, blocking)
+
+    else:
+        raise ValueError(f"materialize mode: {mode!r}")
+    _OWNERS[-1].append(release)
     return out
 
 
-def tracked_persist(df: DataFrame) -> DataFrame:
-    """``df.persist()`` + register for ``unpersist_operator_caches``."""
-    out = df.persist()
-    _TRACKED.append(out)
-    return out
-
-
-def tracked_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` + register for release.
-
-    Same single-materialization purpose as ``tracked_persist``, plus a
-    PLAN barrier: the returned frame's logical plan is a leaf (LogicalRDD),
-    so every downstream action re-plans from the barrier instead of
-    re-analyzing the full upstream lineage. Use at tick/transition
-    boundaries of deeply composed maintenance queries, where profiling
-    showed ~1 s Catalyst stalls per action over persisted-but-not-
-    truncated plans (the persisted node still carries its whole subtree
-    through analysis). Release: ``unpersist_operator_caches`` drops the
-    registry reference and the checkpoint RDD blocks are freed by the
-    ContextCleaner once the frame is garbage-collected — same lifecycle
-    as the per-round loop checkpoints in connected_components/kcore."""
-    out = df.localCheckpoint(eager=True)
+def session_memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """``build()`` once per (application, ``key``); materializations made
+    while it runs belong to the memo entry."""
+    full = (spark.sparkContext.applicationId, *key)
+    if full in _MEMOS:
+        return _MEMOS[full][0]
+    owned: list[Release] = []
+    _OWNERS.append(owned)
     try:
-        # The materialized blocks belong to the LogicalRDD's backing RDD,
-        # which df.unpersist() does NOT reach (it only consults the SQL
-        # CacheManager). Capture it so release is deterministic instead
-        # of GC-timed — lingering checkpoint blocks from one query were
-        # measured inflating later queries in a long bench run.
-        _TRACKED_CKPT_RDDS.append(out._jdf.queryExecution().logical().rdd())
-    except Exception:  # noqa: BLE001 - plan shape is an implementation detail
-        pass
-    _TRACKED.append(out)
-    return out
+        value = build()
+    finally:
+        _OWNERS.pop()
+    _MEMOS[full] = (value, owned)
+    return value
 
 
-_MEMO_REGISTRIES: list[dict] = []
-
-
-def register_memo(registry: dict) -> dict:
-    """Register a module-level session memo (localCheckpoint-backed
-    materialized projections like the co-purchase edge list or a trained
-    IVF index) for ``clear_session_memos``. Returns the registry so the
-    call composes with the declaration site."""
-    _MEMO_REGISTRIES.append(registry)
-    return registry
+def _release(releases: list[Release], blocking: bool) -> int:
+    n = len(releases)
+    for release in releases:
+        try:
+            release(blocking)
+        except Exception:  # noqa: BLE001 - session may already be stopped
+            pass
+    releases.clear()
+    return n
 
 
 def clear_session_memos() -> int:
-    """Drop every registered session memo; returns how many entries were
-    dropped. The checkpointed RDD blocks are released once the memoized
-    DataFrames are garbage-collected (ContextCleaner); the next operator
-    call simply re-materializes. Complements ``unpersist_operator_caches``
-    for sessions that switch corpora or want a clean storage footprint."""
-    n = 0
-    for reg in _MEMO_REGISTRIES:
-        n += len(reg)
-        reg.clear()
+    """Drop every session memo and free the blocks its build made;
+    returns how many entries were dropped. The next call re-builds."""
+    n = len(_MEMOS)
+    for _value, owned in _MEMOS.values():
+        _release(owned, blocking=False)
+    _MEMOS.clear()
     return n
 
 
 def unpersist_operator_caches(blocking: bool = False) -> int:
-    """Unpersist every operator-internal cache; returns how many.
-
-    Idempotent. For ``tracked_cache``/``tracked_persist`` frames, safe
-    while results are still lazily pending — Spark just recomputes on
-    the next action. ``tracked_checkpoint`` frames are NOT recomputable
-    after release (their lineage is the checkpoint); call only at
-    operator-composition boundaries (between queries / pipeline stages,
-    after outputs are collected or pinned), never mid-plan.
-    """
-    n = 0
-    for df in _TRACKED:
-        try:
-            df.unpersist(blocking=blocking)
-            n += 1
-        except Exception:  # noqa: BLE001 - session may already be stopped
-            pass
-    _TRACKED.clear()
-    for rdd in _TRACKED_CKPT_RDDS:
-        try:
-            rdd.unpersist(blocking)
-        except Exception:  # noqa: BLE001 - session may already be stopped
-            pass
-    _TRACKED_CKPT_RDDS.clear()
-    return n
+    """Free every operator-owned materialization; returns how many.
+    Idempotent; memo-owned blocks are left alone."""
+    return _release(_OPERATOR_OWNED, blocking)

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from redcap_omop_etl_spark.caching import tracked_cache
+from redcap_omop_etl_spark.caching import materialize
 
 
 def try_timestamp(col: Column | str) -> Column:
@@ -52,7 +52,7 @@ def read_json_with_errors(
     raw = spark.read.schema(full_schema).option("mode", "PERMISSIVE").option(
         "columnNameOfCorruptRecord", corrupt_col
     ).json(path)
-    raw = raw.transform(tracked_cache)  # one scan serves both channels; also required by
+    raw = materialize(raw, "persist")  # one scan serves both channels; also required by
     # Spark before referencing the corrupt column in a filter
     clean = raw.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
     errors = raw.filter(F.col(corrupt_col).isNotNull()).select(

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from redcap_omop_etl_spark.operators.textstats import fingerprint_md5, normalized_text, ws_tokens
 from redcap_omop_etl_spark.sources.readers import Catalog, fan_out
 from redcap_omop_etl_spark.workload import register
-from redcap_omop_etl_spark.caching import tracked_cache, tracked_persist
+from redcap_omop_etl_spark.caching import materialize, session_memo
 
 # Mersenne-31 prime for the (a*h + b) mod p minhash family. 31-bit hash
 # space keeps a*h < 2^62 — no signed-long overflow under ANSI arithmetic.
@@ -846,7 +846,7 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3, text_col: str = "tex
     # both sides and the doc-keyed agg exchange is NOT reused across alias
     # branches, so without this the tokenize→hash→60-sum pipeline runs
     # twice. One long per document — negligible storage at any scale.
-    fp = simhash_fingerprints(df, text_col, id_col).localCheckpoint(eager=False)
+    fp = materialize(simhash_fingerprints(df, text_col, id_col), "lazy")
     segs = fp.select(
         "doc",
         "fp",
@@ -1824,7 +1824,7 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("df") > _AUDIT_DF_CAP)
         .select("h")
     )
-    h = h0.join(hot, "h", "left_anti").transform(tracked_persist)
+    h = h0.join(hot, "h", "left_anti").transform(materialize, "persist")
     sizes = h.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     inter = (
         h.alias("a")
@@ -2089,8 +2089,6 @@ def corpus_span_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup_minhash_clusters_append ingest tick)
 # ---------------------------------------------------------------------------
 
-from redcap_omop_etl_spark.caching import register_memo as _register_memo
-
 # derived ingest batch: every 30th doc (mod-class 21) appended TWICE with
 # a shared 3-token suffix — each copy pairs with its source doc
 # (J = |orig|/(|orig|+3) >= 0.6 at any realistic length: base-vs-new
@@ -2098,8 +2096,6 @@ from redcap_omop_etl_spark.caching import register_memo as _register_memo
 _PPJ_APPEND_MOD, _PPJ_APPEND_RES = 30, 21
 _PPJ_APPEND_SHIFT = 10_000_000_000  # above any bench_scale replica id (m*1e7)
 _PPJ_APPEND_SUFFIX = " zzpp zzjoin zztail"
-
-_PPJOIN_STATE_MEMO: dict = _register_memo({})
 
 
 def ppjoin_frozen_state(spark: SparkSession, sf_dir: str):
@@ -2109,33 +2105,32 @@ def ppjoin_frozen_state(spark: SparkSession, sf_dir: str):
     shingles under that order, plus its shingle-set size). Computed once
     per (session, corpus), localCheckpoint-pinned — exactly what a
     production incremental PPJoin stores next to the corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PPJOIN_STATE_MEMO:
-        return _PPJOIN_STATE_MEMO[key]
     from pyspark.sql.window import Window
 
-    docs = Catalog(spark, sf_dir)["documents"]
-    toks = fan_out(docs).select(
-        F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"), 3)).alias("t")
-    )
-    dfreq = (
-        toks.groupBy("t").agg(F.count(F.lit(1)).alias("dfr")).localCheckpoint(eager=True)
-    )
-    wdoc = Window.partitionBy("doc")
-    ranked = (
-        toks.join(dfreq.hint("merge"), "t")
-        .withColumn("rn", F.row_number().over(wdoc.orderBy("dfr", "t")))
-        .withColumn("sz", F.count(F.lit(1)).over(wdoc))
-    )
-    prefix = (
-        ranked.filter(
-            F.col("rn") <= F.col("sz") - F.ceil(F.col("sz") * F.lit(0.6)) + 1
+    def build():
+        docs = Catalog(spark, sf_dir)["documents"]
+        toks = fan_out(docs).select(
+            F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"), 3)).alias("t")
         )
-        .select("doc", "t", "sz")
-        .localCheckpoint(eager=True)
-    )
-    _PPJOIN_STATE_MEMO[key] = (dfreq, prefix)
-    return dfreq, prefix
+        dfreq = (
+            toks.groupBy("t").agg(F.count(F.lit(1)).alias("dfr")).transform(materialize)
+        )
+        wdoc = Window.partitionBy("doc")
+        ranked = (
+            toks.join(dfreq.hint("merge"), "t")
+            .withColumn("rn", F.row_number().over(wdoc.orderBy("dfr", "t")))
+            .withColumn("sz", F.count(F.lit(1)).over(wdoc))
+        )
+        prefix = (
+            ranked.filter(
+                F.col("rn") <= F.col("sz") - F.ceil(F.col("sz") * F.lit(0.6)) + 1
+            )
+            .select("doc", "t", "sz")
+            .transform(materialize)
+        )
+        return dfreq, prefix
+
+    return session_memo(spark, ("ppjoin_frozen_state", sf_dir), build)
 
 
 def _ppj_append_batch(
@@ -2148,7 +2143,7 @@ def _ppj_append_batch(
     """Shared batch derivation + frozen-order prefix ranking for the
     incremental PPJoin family: returns ``(docs, batch, btoks, bprefix)``
     — the derived batch docs, their distinct shingle table
-    (tracked_cache'd), and their prefix under the FROZEN base order
+    (persisted), and their prefix under the FROZEN base order
     extended with unseen shingles at frequency 0.
 
     ``batch`` overrides the registered derived batch with a caller-
@@ -2184,7 +2179,7 @@ def _ppj_append_batch(
         )
     btoks = fan_out(batch).select(
         F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"), 3)).alias("t")
-    ).transform(tracked_cache)
+    ).transform(materialize, "persist")
     wdoc = Window.partitionBy("doc")
     brank = (
         btoks.join(dfreq.hint("merge"), "t", "left")
@@ -2194,7 +2189,7 @@ def _ppj_append_batch(
     )
     bprefix = brank.filter(
         F.col("rn") <= F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)) + 1
-    ).select("doc", "t").transform(tracked_cache)
+    ).select("doc", "t").transform(materialize, "persist")
     return docs, batch, btoks, bprefix
 
 
@@ -2225,7 +2220,7 @@ def _ppj_append_exact(
         .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
         .distinct()
     )
-    cand = cand_nb.unionByName(cand_bb).distinct().transform(tracked_cache)
+    cand = cand_nb.unionByName(cand_bb).distinct().transform(materialize, "persist")
     # verify tokens: candidate BASE docs re-shingled (candidate-sized) + batch
     base_cand = cand.filter(F.col("d1") < _PPJ_APPEND_SHIFT).select(
         F.col("d1").alias("doc_id")
@@ -2233,7 +2228,7 @@ def _ppj_append_exact(
     vtoks_base = fan_out(docs.join(base_cand.hint("merge"), "doc_id", "left_semi")).select(
         F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"), 3)).alias("t")
     )
-    vtoks = vtoks_base.unionByName(btoks).transform(tracked_cache)
+    vtoks = vtoks_base.unionByName(btoks).transform(materialize, "persist")
     x, y = vtoks.alias("x"), vtoks.alias("y")
     inter = (
         cand.join(x.hint("merge"), F.col("x.doc") == F.col("d1"))
@@ -2396,20 +2391,20 @@ def _ppj_append_capped_tick(
             F.coalesce("bc", F.lit(0)) + F.coalesce("nc", F.lit(0)) > cap
         )
         .select("t")
-        .transform(tracked_cache)
+        .transform(materialize, "persist")
     )
     o_base = (
         base_prefix.join(hot.hint("merge"), "t", "left_semi")
         .select("doc")
         .distinct()
-        .transform(tracked_cache)
+        .transform(materialize, "persist")
     )
     o_batch = (
         bprefix.join(hot.hint("merge"), "t", "left_semi").select("doc").distinct()
-        .transform(tracked_cache)
+        .transform(materialize, "persist")
     )
     clean_base = base_prefix.join(o_base, "doc", "left_anti")
-    clean_batch = bprefix.join(o_batch, "doc", "left_anti").transform(tracked_cache)
+    clean_batch = bprefix.join(o_batch, "doc", "left_anti").transform(materialize, "persist")
     cand_nb = (
         clean_base.select(F.col("doc").alias("d1"), "t")
         .join(clean_batch.select(F.col("doc").alias("d2"), "t").hint("merge"), "t")
@@ -2425,7 +2420,7 @@ def _ppj_append_capped_tick(
         .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
         .distinct()
     )
-    cand = cand_nb.unionByName(cand_bb).distinct().transform(tracked_cache)
+    cand = cand_nb.unionByName(cand_bb).distinct().transform(materialize, "persist")
     base_cand = (
         cand.filter(F.col("d1") < _PPJ_APPEND_SHIFT)
         .select(F.col("d1").alias("doc_id"))
@@ -2436,7 +2431,7 @@ def _ppj_append_capped_tick(
     ).select(
         F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"), 3)).alias("t")
     )
-    vtoks = vtoks_base.unionByName(btoks).transform(tracked_cache)
+    vtoks = vtoks_base.unionByName(btoks).transform(materialize, "persist")
     x, y = vtoks.alias("x"), vtoks.alias("y")
     inter = (
         cand.join(x.hint("merge"), F.col("x.doc") == F.col("d1"))
@@ -2660,16 +2655,14 @@ def _ppj_cluster_route_delta(spark: SparkSession, sf_dir: str, batch: DataFrame)
     )
 
     comp, hubs = _minhash_cluster_state(spark, sf_dir, family="md5")
-    # Checkpointed (round 13 final session; was tracked_persist): the
+    # Checkpointed (round 13 final session; was a persist): the
     # merge consumes the batch band table twice (shared-bucket join +
     # batch-only anti-join), the signature fold behind it is a pure
     # projection no ReuseExchange can share (round 12), and the eager
     # localCheckpoint additionally truncates the tick's lineage so the
     # downstream merge/delta actions re-plan from a leaf (the measured
     # Catalyst-stall fix of the graph.py tick boundaries).
-    from redcap_omop_etl_spark.caching import tracked_checkpoint
-
-    banded = minhash_band_table(batch).transform(tracked_checkpoint)
+    banded = materialize(minhash_band_table(batch))
     merged = incremental_minhash_components(comp, hubs, banded, check_ids=False)
     bid = batch.select(F.col("doc_id").alias("node"))
     batch_rows = merged.join(bid, "node", "left_semi").select("node", "component")

@@ -32,17 +32,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# tracked_checkpoint (round 13, final session): the tick/transition
-# boundary materializations below were tracked_persist; profiling the
+# Eager checkpoints (round 13, final session): the tick/transition
+# boundary materializations below were persists; profiling the
 # composed maintenance queries showed ~0.7-1.1 s DRIVER stalls per
 # downstream action (7.7 s of inter-job gaps in the 13 s upsert tick) —
 # Catalyst re-analyzing the full persisted-but-not-truncated lineage.
-# tracked_checkpoint is the same single-materialization with a PLAN
+# An eager checkpoint is the same single-materialization with a PLAN
 # BARRIER: downstream actions plan from a LogicalRDD leaf. Alternating
 # A/B over the 9-query tick family (3 rounds, same JVM): persist
 # 60.2/61.7/56.8 s vs checkpoint 52.2/54.5/50.8 s; the upsert tick
 # alone 13.5/14.9/12.6 -> 8.9/10.4/8.3 s.
-from redcap_omop_etl_spark.caching import tracked_checkpoint
+from redcap_omop_etl_spark.caching import materialize, session_memo
 from redcap_omop_etl_spark.operators.dedup import (
     _PPJOIN_GATE_CAP,
     components_sql_cte,
@@ -133,7 +133,7 @@ def connected_components(
     selfloops = (
         raw.filter(F.col("u") == F.col("v")).select(F.col("u").alias("n")).distinct()
     )
-    # eager=False: the signature aggregation below is the loop's one
+    # lazy: the signature aggregation below is the loop's one
     # blocking action per round and its job MATERIALIZES the checkpoint
     # as a side effect — round 12 halved the per-round job count (the
     # eager checkpoint ran one job, the signature a second; on the
@@ -145,7 +145,7 @@ def connected_components(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize, "lazy")
     )
 
     def _with_singletons(comp: DataFrame) -> DataFrame:
@@ -167,8 +167,6 @@ def connected_components(
         ).collect()[0]
         return (row.n, row.h)
 
-    from pyspark.sql.window import Window
-
     sig = _signature(e)
     # the signature's count doubles as the emptiness probe (the old
     # separate take(1) was one more job per call)
@@ -181,51 +179,26 @@ def connected_components(
     # round materializes as its OWN job (QueryStageExec), so a round is
     # ~4-5 driver-paced jobs; profiled at sf0.1 that scheduling overhead
     # — not data — is most of the loop wall across the whole cluster/tick
-    # family. AQE's value (runtime coalescing, skew splits) is nil once
-    # the edge table is far below one advisory partition, so rounds whose
-    # MEASURED edge count (the signature's n, free) is below the
-    # threshold plan with AQE off and run as ONE job. Large graphs keep
-    # AQE for every round; a shrinking graph flips mode when contraction
-    # crosses the threshold — at any scale the tail rounds are tiny, so
-    # this is a cluster win too, derived from input size rather than a
-    # local core count. 256k edges ≈ 6 MB shuffled — under a tenth of one
-    # advisory (64 MB) partition.
-    _CC_SMALL_EDGES = 256 * 1024
-    conf = e.sparkSession.conf
-    aqe_was = conf.get("spark.sql.adaptive.enabled")
-    parts_was = conf.get("spark.sql.shuffle.partitions")
-
-    def _round_conf(n_edges: int) -> None:
-        small_graph = n_edges < _CC_SMALL_EDGES
-        conf.set(
-            "spark.sql.adaptive.enabled", "false" if small_graph else aqe_was
-        )
-        # without AQE's runtime coalescing the static shuffle width must
-        # itself derive from the measured size, or each tiny round pays
-        # full-width task launches (~64k edges ≈ 1.5 MB per partition)
-        conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(1, n_edges // (64 * 1024))) if small_graph else parts_was,
-        )
-
-    try:
-        for rounds in range(1, max_iter + 1):
-            _round_conf(sig[0])
+    # family. Each round is gated on the MEASURED edge count of its input
+    # (the signature's n, free): below small_plan_rounds' threshold it
+    # plans with AQE off and a derived shuffle width, as ONE job. Large
+    # graphs keep AQE for every round; a shrinking graph flips mode when
+    # contraction crosses the threshold — at any scale the tail rounds
+    # are tiny, so this is a cluster win too.
+    for rounds in range(1, max_iter + 1):
+        with small_plan_rounds(e.sparkSession, sig[0]):
             e = _cc_round(e, neighborhood_min)
             # ONE job per round: the signature materializes the checkpoint
             new_sig = _signature(e)
-            if new_sig == sig:
-                CC_LAST_ROUNDS = rounds
-                break
-            sig = new_sig
-        else:
-            raise RuntimeError(
-                f"connected_components: no fixpoint within {max_iter} "
-                "star-contraction rounds"
-            )
-    finally:
-        conf.set("spark.sql.adaptive.enabled", aqe_was)
-        conf.set("spark.sql.shuffle.partitions", parts_was)
+        if new_sig == sig:
+            CC_LAST_ROUNDS = rounds
+            break
+        sig = new_sig
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint within {max_iter} "
+            "star-contraction rounds"
+        )
     # At the fixpoint the edge set is a union of stars (u -> component
     # min); roots appear only on the v side and label themselves.
     comp = e.select(F.col("u").alias("node"), F.col("v").alias("component")).unionByName(
@@ -285,7 +258,7 @@ def _cc_round(e: DataFrame, neighborhood_min: str) -> DataFrame:
         .where(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize, "lazy")
     )
     return small
 
@@ -331,42 +304,27 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # components is the expensive prefix shared by every cluster consumer
 # (dedup_clusters, dedup_survivorship, sampling_leakage_safe_split), and a
 # production deployment materializes that table once per corpus snapshot,
-# not once per downstream query. Keyed by applicationId so a stopped
-# session's checkpoints are never reused.
-from redcap_omop_etl_spark.caching import register_memo
-
-_DOC_CLUSTER_MEMO: dict = register_memo({})
-
-
+# not once per downstream query.
 def _doc_near_dup_clusters(spark: SparkSession, sf_dir: str):
     """(pairs, components) for the stop-shingle-guarded Jaccard>=0.6
     document graph, computed once per (session, corpus). Both frames are
     localCheckpoint-pinned: they are cluster-member-sized (≪ corpus), and
     downstream consumers reference them under differing partitionings
     that would otherwise recompute the pair join per query."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DOC_CLUSTER_MEMO:
-        return _DOC_CLUSTER_MEMO[key]
-    docs = Catalog(spark, sf_dir)["documents"]
-    pairs = ngram_jaccard_pairs(docs, threshold=0.6, n=3, df_cap=100).localCheckpoint(
-        eager=True
-    )
-    comp = connected_components(pairs)
-    _DOC_CLUSTER_MEMO[key] = (pairs, comp)
-    return pairs, comp
+
+    def build():
+        docs = Catalog(spark, sf_dir)["documents"]
+        pairs = materialize(ngram_jaccard_pairs(docs, threshold=0.6, n=3, df_cap=100))
+        return pairs, connected_components(pairs)
+
+    return session_memo(spark, ("doc_near_dup_clusters", sf_dir), build)
 
 
 # Materialized-view memo for the co-purchase projection: every graph query
 # (triangles, PageRank, components) starts from the same support-2 edge
 # list, and the expensive pair-generation join should run once per
 # (session, corpus), not once per query invocation — exactly the shared
-# materialized projection a production deployment would persist. Keyed by
-# applicationId so a stopped session's checkpoints are never reused.
-from redcap_omop_etl_spark.caching import register_memo
-
-_EDGE_MEMO: dict[tuple[str, str], DataFrame] = register_memo({})
-
-
+# materialized projection a production deployment would persist.
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Support-2 co-purchase edge list (u < v), materialized once per
     (session, corpus).
@@ -379,39 +337,38 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch. ``localCheckpoint`` (eager) pins the small result; the module
     memo shares it across graph queries in the same session.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _EDGE_MEMO:
-        return _EDGE_MEMO[key]
-    # One exchange instead of two (round 13): hash-partitioning by
-    # l_orderkey alone satisfies BOTH the distinct's clustered
-    # distribution on (l_orderkey, l_partkey) — equal pairs share the
-    # orderkey — AND the self-join's requirement on l_orderkey, so the
-    # distinct's own (ok, pk) exchange and the join's re-exchange
-    # collapse into this one (A/B at sf0.1: 1.24 s vs 1.54 s warm,
-    # identical edge set; same bytes shuffled, strictly fewer exchanges
-    # at any scale).
-    li = (
-        Catalog(spark, sf_dir)["lineitem"]
-        .select("l_orderkey", "l_partkey")
-        .repartition("l_orderkey")
-        .distinct()
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+
+    def build():
+        # One exchange instead of two (round 13): hash-partitioning by
+        # l_orderkey alone satisfies BOTH the distinct's clustered
+        # distribution on (l_orderkey, l_partkey) — equal pairs share the
+        # orderkey — AND the self-join's requirement on l_orderkey, so the
+        # distinct's own (ok, pk) exchange and the join's re-exchange
+        # collapse into this one (A/B at sf0.1: 1.24 s vs 1.54 s warm,
+        # identical edge set; same bytes shuffled, strictly fewer exchanges
+        # at any scale).
+        li = (
+            Catalog(spark, sf_dir)["lineitem"]
+            .select("l_orderkey", "l_partkey")
+            .repartition("l_orderkey")
+            .distinct()
         )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
-    )
-    _EDGE_MEMO[key] = edges
-    return edges
+        a = li.alias("a")
+        b = li.alias("b")
+        return (
+            a.join(
+                b,
+                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+                & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+            )
+            .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
+            .agg(F.count(F.lit(1)).alias("w"))
+            .filter(F.col("w") >= 2)
+            .select("u", "v")
+            .transform(materialize)
+        )
+
+    return session_memo(spark, ("copurchase_edges", sf_dir), build)
 
 
 @register(
@@ -467,7 +424,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         # either alias branch — this replaces the join's own
         # ENSURE_REQUIREMENTS shuffle rather than adding one.
         .repartition(edges.sparkSession.sparkContext.defaultParallelism, "s")
-        .localCheckpoint(eager=False)
+        .transform(materialize, "lazy")
     )
     # wedges around each source; closing edge is looked up in normalized
     # (u < v) form — p < q already by the wedge ordering
@@ -516,17 +473,15 @@ def pagerank(
     )
     # lazy: contrib_edges' eager checkpoint below materializes it (its agg
     # stage runs first and persists the marked RDD for the join stage)
-    both = both.localCheckpoint(eager=False)
+    both = materialize(both, "lazy")
     # degree is static — fold it into the edge list ONCE so each iteration
     # is a single rank⋈edges join + agg instead of rank⋈degrees⋈edges.
     # Round 13 prep fusion: the symmetrized edge list gives every node
     # out-degree >= 1, so the degree table IS the node table — the old
     # separate nodes.distinct() + count() ran one more full exchange and
     # job over `both` for a set the degree aggregate already computes.
-    degrees = both.groupBy("s").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-        eager=False
-    )
-    contrib_edges = both.join(degrees, "s").localCheckpoint()
+    degrees = materialize(both.groupBy("s").agg(F.count(F.lit(1)).alias("deg")), "lazy")
+    contrib_edges = both.join(degrees, "s").transform(materialize)
     n = degrees.count()
     ranks = degrees.select(F.col("s").alias("node"), F.lit(1.0 / n).alias("rank"))
     # each iteration's shuffle carries ~one row per node (map-side
@@ -541,10 +496,10 @@ def pagerank(
                 )
                 .groupBy("node")
                 .agg((F.lit((1.0 - damping) / n) + damping * F.sum("c")).alias("rank"))
-                # eager=False: lineage is still truncated once the next
+                # lazy: lineage is still truncated once the next
                 # iteration's join materializes this frame, but the loop no
                 # longer pays a blocking job per round (~20% wall at sf0.1).
-                .localCheckpoint(eager=False)
+                .transform(materialize, "lazy")
             )
     return ranks.select("node", F.round("rank", 8).alias("rank"))
 
@@ -661,13 +616,11 @@ def _kcore_oracle_sql(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
     "degree hash-agg + two semi-join-shaped inner joins against the "
     "bounded keep set; rounds are a FIXED driver-side plan unroll (no "
     "per-round collect — the whole profile is one job), intermediate "
-    "edge sets tracked_cache'd so round r+1 and round r's stats share "
+    "edge sets materialized so round r+1 and round r's stats share "
     "one materialization. The full fixpoint is the same loop with a "
     "convergence check, exactly like pagerank/components.",
 )
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from redcap_omop_etl_spark.caching import tracked_cache
-
     cur = _copurchase_edges(spark, sf_dir)
     out = None
     # per-round lazy checkpoints + the size gate (round 13): without the
@@ -675,7 +628,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4-6 stage jobs per round on a peeled graph that only shrinks; the
     # gate plans each round as one job below 256k measured edges (the
     # memoized edge list is pinned, so the count is a ~free job). The
-    # checkpoint replaces the round-12 tracked_cache of `nxt` (same
+    # checkpoint replaces the round-12 persist of `nxt` (same
     # single-materialization purpose — nxt feeds the next round AND its
     # own count — without the IMR build).
     with small_plan_rounds(spark, cur.count()):
@@ -689,7 +642,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cur.join(keep.withColumnRenamed("x", "u"), "u")
                 .join(keep.withColumnRenamed("x", "v"), "v")
                 .select("u", "v")
-                .localCheckpoint(eager=False)
+                .transform(materialize, "lazy")
             )
             row = (
                 keep.agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -869,7 +822,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(edges.select(F.col("v").alias("x")))
         .distinct()
         .select("x", F.col("x").alias("lab"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, "lazy")
     )
     # per-round shuffles carry <= 2|E| (x, lab) rows; the edge list is
     # memoized + eagerly checkpointed, so the count is a ~free job
@@ -888,7 +841,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cnt.withColumn("rk", F.row_number().over(w))
                 .filter(F.col("rk") == 1)
                 .select("x", "lab")
-                .localCheckpoint(eager=False)
+                .transform(materialize, "lazy")
             )
     return (
         labels.groupBy(F.col("lab").alias("community"))
@@ -1212,7 +1165,7 @@ def sampling_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce(F.col("component"), F.col("doc_id")), dict(_SPLIT_CUTS)
             ).alias("s_grp"),
         )
-        .transform(tracked_checkpoint)
+        .transform(materialize)
     )
     px = (
         pairs.join(
@@ -1231,7 +1184,7 @@ def sampling_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "d2",
         )
-        .transform(tracked_checkpoint)
+        .transform(materialize)
     )
     nx = (
         px.where(F.col("n1") != F.col("n2"))
@@ -1281,9 +1234,6 @@ def sampling_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against (same discipline as the IVF-PQ codebook/centroids: a
 # production deployment persists exactly these two linear-sized tables
 # per corpus snapshot).
-_MINHASH_COMP_MEMO: dict = register_memo({})
-
-
 def _minhash_cluster_state(
     spark: SparkSession, sf_dir: str, family: str = "md5"
 ) -> tuple[DataFrame, DataFrame]:
@@ -1293,33 +1243,32 @@ def _minhash_cluster_state(
     pass feeds both (signature generation is the shared cost)."""
     from pyspark.sql.window import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir, family)
-    if key in _MINHASH_COMP_MEMO:
-        return _MINHASH_COMP_MEMO[key]
-    docs = Catalog(spark, sf_dir)["documents"]
-    # Round 13: ONE (band, bucket) exchange feeds both derived tables.
-    # The per-bucket min is attached by a keyed window and materialized
-    # once; hubs are the rows where doc == min (exactly one per bucket —
-    # band rows are unique per (doc, band)), star edges the rest. The
-    # former shape shuffled the band table twice (a groupBy-min for hubs
-    # plus the window for star edges) and ran the signature fold's
-    # checkpoint as a third materialization.
-    banded = minhash_band_table(docs, family=family)
-    m = F.min("doc").over(Window.partitionBy("band", "bucket"))
-    withm = banded.withColumn("m", m).localCheckpoint(eager=True)
-    hubs = (
-        withm.filter(F.col("doc") == F.col("m"))
-        .select("band", "bucket", F.col("doc").alias("hub"))
-        .localCheckpoint(eager=False)
-    )
-    star = (
-        withm.filter(F.col("doc") != F.col("m"))
-        .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
-        .distinct()
-    )
-    comp = connected_components(star).localCheckpoint(eager=False)
-    _MINHASH_COMP_MEMO[key] = (comp, hubs)
-    return comp, hubs
+    def build():
+        docs = Catalog(spark, sf_dir)["documents"]
+        # Round 13: ONE (band, bucket) exchange feeds both derived tables.
+        # The per-bucket min is attached by a keyed window and materialized
+        # once; hubs are the rows where doc == min (exactly one per bucket —
+        # band rows are unique per (doc, band)), star edges the rest. The
+        # former shape shuffled the band table twice (a groupBy-min for hubs
+        # plus the window for star edges) and ran the signature fold's
+        # checkpoint as a third materialization.
+        banded = minhash_band_table(docs, family=family)
+        m = F.min("doc").over(Window.partitionBy("band", "bucket"))
+        withm = banded.withColumn("m", m).transform(materialize)
+        hubs = (
+            withm.filter(F.col("doc") == F.col("m"))
+            .select("band", "bucket", F.col("doc").alias("hub"))
+            .transform(materialize, "lazy")
+        )
+        star = (
+            withm.filter(F.col("doc") != F.col("m"))
+            .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
+            .distinct()
+        )
+        comp = materialize(connected_components(star), "lazy")
+        return comp, hubs
+
+    return session_memo(spark, ("minhash_cluster_state", sf_dir, family), build)
 
 
 def _minhash_components(spark: SparkSession, sf_dir: str, family: str = "md5") -> DataFrame:
@@ -1532,8 +1481,6 @@ _CAPPED_EDGES_SQL = f"""{ppjoin_capped_sql_cte()},
     ),
     {components_sql_cte()}"""
 
-_CAPPED_CLUSTER_MEMO: dict = register_memo({})
-
 
 def _doc_capped_clusters(spark: SparkSession, sf_dir: str):
     """(edges, overflow, components) for the capped composition above,
@@ -1542,39 +1489,39 @@ def _doc_capped_clusters(spark: SparkSession, sf_dir: str):
     cluster-member-sized (edges are linear in corpus size by the cap /
     star constructions) and localCheckpoint-pinned because downstream
     consumers reference them under differing partitionings."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CAPPED_CLUSTER_MEMO:
-        return _CAPPED_CLUSTER_MEMO[key]
-    docs = Catalog(spark, sf_dir)["documents"]
-    pairs, overflow = prefix_jaccard_pairs_capped(
-        docs, threshold=0.6, n=3, bucket_cap=_PPJOIN_GATE_CAP
-    )
-    overflow = overflow.localCheckpoint(eager=True)
-    # overflow is corpus-coupled (dup-dense corpora route MOST docs) —
-    # pinned sort-merge per the join-strategy policy, never a broadcast
-    over_docs = docs.join(
-        overflow.withColumnRenamed("doc", "doc_id").hint("merge"),
-        "doc_id",
-        "left_semi",
-    )
-    # Explicit spread (round 13): the semi-join's output exchange AQE-
-    # coalesces to ONE partition at this data size, and the 64-permutation
-    # signature fold inside minhash_star_edges then runs serially
-    # downstream of it (profiled: a 1.8 s single-task stage in
-    # dedup_survivorship_capped; shingle_hashes' own fan_out no-ops here
-    # because the PLANNED partition count is the pre-AQE 64). A keyless
-    # repartition is exempt from AQE coalescing; at scale the overflow
-    # set is corpus-coupled and the spread is a linear reshuffle the fold
-    # amortizes.
-    over_docs = over_docs.repartition(spark.sparkContext.defaultParallelism)
-    edges = (
-        pairs.select("d1", "d2")
-        .unionByName(minhash_star_edges(over_docs))
-        .localCheckpoint(eager=True)
-    )
-    comp = connected_components(edges)
-    _CAPPED_CLUSTER_MEMO[key] = (edges, overflow, comp)
-    return edges, overflow, comp
+
+    def build():
+        docs = Catalog(spark, sf_dir)["documents"]
+        pairs, overflow = prefix_jaccard_pairs_capped(
+            docs, threshold=0.6, n=3, bucket_cap=_PPJOIN_GATE_CAP
+        )
+        overflow = materialize(overflow)
+        # overflow is corpus-coupled (dup-dense corpora route MOST docs) —
+        # pinned sort-merge per the join-strategy policy, never a broadcast
+        over_docs = docs.join(
+            overflow.withColumnRenamed("doc", "doc_id").hint("merge"),
+            "doc_id",
+            "left_semi",
+        )
+        # Explicit spread (round 13): the semi-join's output exchange AQE-
+        # coalesces to ONE partition at this data size, and the 64-permutation
+        # signature fold inside minhash_star_edges then runs serially
+        # downstream of it (profiled: a 1.8 s single-task stage in
+        # dedup_survivorship_capped; shingle_hashes' own fan_out no-ops here
+        # because the PLANNED partition count is the pre-AQE 64). A keyless
+        # repartition is exempt from AQE coalescing; at scale the overflow
+        # set is corpus-coupled and the spread is a linear reshuffle the fold
+        # amortizes.
+        over_docs = over_docs.repartition(spark.sparkContext.defaultParallelism)
+        edges = (
+            pairs.select("d1", "d2")
+            .unionByName(minhash_star_edges(over_docs))
+            .transform(materialize)
+        )
+        comp = connected_components(edges)
+        return edges, overflow, comp
+
+    return session_memo(spark, ("doc_capped_clusters", sf_dir), build)
 
 
 @register(
@@ -1740,7 +1687,7 @@ def sampling_leakage_safe_split_capped(spark: SparkSession, sf_dir: str) -> Data
                 F.coalesce(F.col("component"), F.col("doc_id")), dict(_SPLIT_CUTS)
             ).alias("s_grp"),
         )
-        .transform(tracked_checkpoint)
+        .transform(materialize)
     )
     px = (
         edges.join(
@@ -1759,7 +1706,7 @@ def sampling_leakage_safe_split_capped(spark: SparkSession, sf_dir: str) -> Data
             ),
             "d2",
         )
-        .transform(tracked_checkpoint)
+        .transform(materialize)
     )
     nx = (
         px.where(F.col("n1") != F.col("n2"))
@@ -2047,7 +1994,7 @@ def dedup_minhash_clusters_append(spark: SparkSession, sf_dir: str) -> DataFrame
             "text",
         )
     )
-    batch_banded = minhash_band_table(batch).transform(tracked_checkpoint)
+    batch_banded = materialize(minhash_band_table(batch))
     # Round 12: labels come off the APPEND-transition state core (the
     # union-corpus component table minhash_cluster_state_append builds —
     # same remap-through-rep-map labeling this function previously
@@ -2057,7 +2004,7 @@ def dedup_minhash_clusters_append(spark: SparkSession, sf_dir: str) -> DataFrame
     comp_out, _hubs_out = minhash_cluster_state_append(base_comp, hubs, batch_banded)
     alld = docs.select("doc_id").unionByName(batch.select("doc_id"))
     return cluster_table_from_components(
-        alld, comp_out.transform(tracked_checkpoint), appended_from=_CLUSTER_APPEND_SHIFT
+        alld, materialize(comp_out), appended_from=_CLUSTER_APPEND_SHIFT
     )
 
 
@@ -2128,7 +2075,7 @@ def dedup_minhash_clusters_delete(spark: SparkSession, sf_dir: str) -> DataFrame
     comp_out, _hubs_out = minhash_cluster_state_delete(base_comp, hubs, deleted, docs)
     survivors = docs.filter(~is_del).select("doc_id")
     return cluster_table_from_components(
-        survivors, comp_out.transform(tracked_checkpoint)
+        survivors, materialize(comp_out)
     )
 
 
@@ -2157,15 +2104,13 @@ def minhash_cluster_state_append(
     every live doc appears in comp.node or hubs.hub."""
     from pyspark.sql.window import Window
 
-    from redcap_omop_etl_spark.caching import tracked_checkpoint
-
     # Round 13: the batch-only band rows (hubs anti-join) feed BOTH the
     # merge CC's batch-star edges and the hub extension; compute them
     # once with the per-bucket min attached by one keyed window and
     # persist (batch-sized) — previously the anti-join ran twice and the
     # min twice (window here, groupBy-min there).
     m = F.min("doc").over(Window.partitionBy("band", "bucket"))
-    only_m = tracked_checkpoint(
+    only_m = materialize(
         batch_banded.join(hubs, ["band", "bucket"], "left_anti").withColumn("m", m)
     )
     merged = incremental_minhash_components(
@@ -2224,7 +2169,7 @@ def minhash_cluster_state_delete(
     # table is narrow (doc, band, bucket, m) and touched-members × bands
     # sized, not corpus sized.
     m = F.min("doc").over(Window.partitionBy("band", "bucket"))
-    banded_sub = tracked_checkpoint(
+    banded_sub = materialize(
         minhash_band_table(sub_docs).withColumn("m", m)
     )
     sub_star = (
@@ -2300,7 +2245,7 @@ def dedup_minhash_clusters_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
         F.pmod(F.col("doc_id"), F.lit(_CLUSTER_DELETE_MOD)) == _CLUSTER_DELETE_RES
     ).select("doc_id")
     comp1, hubs1 = minhash_cluster_state_delete(base_comp, hubs, deleted, docs)
-    comp1, hubs1 = comp1.transform(tracked_checkpoint), hubs1.transform(tracked_checkpoint)
+    comp1, hubs1 = materialize(comp1), materialize(hubs1)
     one = docs.filter(
         F.pmod(F.col("doc_id"), F.lit(_CLUSTER_APPEND_MOD)) == _CLUSTER_APPEND_RES
     ).select(
@@ -2320,7 +2265,7 @@ def dedup_minhash_clusters_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     # a pure projection no ReuseExchange can share (round 12 — the append
     # tick already passed its band table persisted; the upsert did not).
     comp2, _hubs2 = minhash_cluster_state_append(
-        comp1, hubs1, minhash_band_table(batch).transform(tracked_checkpoint)
+        comp1, hubs1, materialize(minhash_band_table(batch))
     )
     survivors = docs.join(deleted, "doc_id", "left_anti").select("doc_id")
     alld = survivors.unionByName(batch.select("doc_id"))
@@ -2328,5 +2273,5 @@ def dedup_minhash_clusters_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     # broadcast-size join instead of the corpus-wide count() window
     # (the former wall floor of the delete/upsert paths).
     return cluster_table_from_components(
-        alld, comp2.transform(tracked_checkpoint), appended_from=_CLUSTER_APPEND_SHIFT
+        alld, materialize(comp2), appended_from=_CLUSTER_APPEND_SHIFT
     )

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from redcap_omop_etl_spark.sources.readers import Catalog
 from redcap_omop_etl_spark.workload import register
-from redcap_omop_etl_spark.caching import tracked_cache
+from redcap_omop_etl_spark.caching import materialize
 
 DIM = 64
 Q_SCALE = 10_000  # fixed-point quantization: q = round(x * 1e4) as int64
@@ -120,7 +120,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches, and mapInPandas is a narrow op with no exchange below it
     # (ReuseExchange can't dedupe) — uncached, the full-corpus Gram pass
     # would run once per branch. Bounded at batches x ~2144 rows.
-    parts = gram_partials(e).transform(tracked_cache)
+    parts = materialize(gram_partials(e), "persist")
     pairs = parts.filter(F.col("j") >= 0).groupBy("i", "j").agg(F.sum("s").alias("s_ab"))
     marg = parts.filter(F.col("j") == -1).groupBy("i").agg(
         F.sum("s").alias("s"), F.sum("n").alias("n")
@@ -370,7 +370,7 @@ def embedding_label_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long"),
     )
     rn2 = F.aggregate(r, F.lit(0).cast("long"), lambda a, x: a + x * x)
-    rows = t.select("label", r.alias("r"), rn2.alias("rn2")).transform(tracked_cache)
+    rows = t.select("label", r.alias("r"), rn2.alias("rn2")).transform(materialize, "persist")
     comp = (
         rows.select("label", F.posexplode("r").alias("i", "x"))
         .groupBy("label", "i")

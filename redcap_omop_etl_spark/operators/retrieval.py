@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from redcap_omop_etl_spark.operators.textstats import ws_tokens
 from redcap_omop_etl_spark.sources.readers import Catalog
 from redcap_omop_etl_spark.workload import register
-from redcap_omop_etl_spark.caching import tracked_cache
+from redcap_omop_etl_spark.caching import materialize, session_memo
 
 # Fixed query-term set for the registered BM25 query (parameterizing the
 # operator is a data change; the registered entry pins one deterministic
@@ -336,7 +336,7 @@ def retrieval_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache: est and total_dec are separate action branches, and the
     # Python MG kernel sits ABOVE the bucket exchange — without the cache
     # each branch re-runs the full tokenize + MG pass. ≤ 136 rows.
-    summaries = misra_gries_summaries(d).transform(tracked_cache)
+    summaries = materialize(misra_gries_summaries(d), "persist")
     est = (
         summaries.filter(F.col("term").isNotNull())
         .groupBy("term")
@@ -541,7 +541,7 @@ def retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("rel"))
-        .transform(tracked_cache)
+        .transform(materialize, "persist")
     )
     disc = F.element_at(
         F.array(*[F.lit(v) for v in _NDCG_INV_DISC]), F.col("rnk").cast("int")
@@ -595,10 +595,6 @@ _IDX_APPEND_SHIFT = 10_000_000_000  # above any bench_scale replica id
 # exercises the new-term (outer-join) path of the stat merge
 _IDX_APPEND_SUFFIX = " zzqterm zzidxterm"
 
-from redcap_omop_etl_spark.caching import register_memo as _register_memo
-
-_TERM_STATS_MEMO: dict = _register_memo({})
-
 
 def term_stats_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The frozen per-term index statistics (term, df, cf) for the base
@@ -607,18 +603,17 @@ def term_stats_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25's idf needs only (df, N) and its length normalization only
     (dl, avgdl), all exact integer sums, so an ingest tick updates them
     by ADDITION — no base-corpus rescan, ever."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TERM_STATS_MEMO:
-        return _TERM_STATS_MEMO[key]
-    d = Catalog(spark, sf_dir)["documents"]
-    tf = _tokens(d).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-    stats = (
-        tf.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-        .localCheckpoint(eager=True)
-    )
-    _TERM_STATS_MEMO[key] = stats
-    return stats
+
+    def build():
+        d = Catalog(spark, sf_dir)["documents"]
+        tf = _tokens(d).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
+        return (
+            tf.groupBy("term")
+            .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
+            .transform(materialize)
+        )
+
+    return session_memo(spark, ("term_stats", sf_dir), build)
 
 
 @register(

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from redcap_omop_etl_spark.caching import materialize
 from redcap_omop_etl_spark.functions.xxh_sql import xxh64_pmod, xxh64_sql_cte
 from redcap_omop_etl_spark.sources.readers import Catalog
 from redcap_omop_etl_spark.workload import register
@@ -1552,7 +1553,6 @@ def corpus_dsir_weights_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dsir_frame(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
-    from redcap_omop_etl_spark.caching import tracked_cache
     from redcap_omop_etl_spark.sources.readers import fan_out
 
     # fan_out GATED on the hash family (round 13; same gate as
@@ -1582,7 +1582,7 @@ def _dsir_frame(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
     counts = bg.groupBy("b").agg(
         F.count(F.lit(1)).alias("cr"),
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("ct"),
-    ).transform(tracked_cache)
+    ).transform(materialize, "persist")
     tab = (
         counts.crossJoin(
             F.broadcast(counts.agg(F.sum("cr").alias("nr"), F.sum("ct").alias("nt")))

@@ -51,7 +51,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from redcap_omop_etl_spark.caching import tracked_persist
+from redcap_omop_etl_spark.caching import materialize
 
 
 def _as_col(c: str | Column) -> Column:
@@ -76,7 +76,7 @@ def _keyed_offsets(
     """
     sort_exprs = [_as_col(k) for k in key_cols] + [_as_col(o) for o in order_cols]
     parted = df.repartitionByRange(*sort_exprs)
-    # tracked_persist makes the pid assignment STRUCTURAL rather than
+    # The persist makes the pid assignment STRUCTURAL rather than
     # reliant on exchange reuse: both consumers (the summary branch and
     # the data branch) reference ONE InMemoryRelation over ONE physical
     # RDD, whose RangePartitioner boundaries are sampled exactly once at
@@ -90,7 +90,7 @@ def _keyed_offsets(
     # at 100 TB it degrades to a local-disk spill of the working set —
     # the cost of one extra materialization buys a correctness invariant
     # instead of a config assumption.
-    with_pid = tracked_persist(parted.withColumn("__pid", F.spark_partition_id()))
+    with_pid = materialize(parted.withColumn("__pid", F.spark_partition_id()), "persist")
     aggs = [F.count(F.lit(1)).alias("__n")]
     if value_col is not None:
         aggs.append(F.sum(value_col).alias("__s"))

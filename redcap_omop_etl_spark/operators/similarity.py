@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from redcap_omop_etl_spark.caching import tracked_cache, tracked_checkpoint
+from redcap_omop_etl_spark.caching import materialize, session_memo
 from redcap_omop_etl_spark.sources.readers import Catalog, fan_out, small_plan_rounds
 from redcap_omop_etl_spark.workload import register
 
@@ -487,20 +487,9 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the only driver-side data is the (nlist × dim) centroid table, which is
 # bounded by construction (same budget class as a broadcast dim).
 # --------------------------------------------------------------------------
-def _sq_dist(a: Column, b: Column) -> Column:
-    d = F.zip_with(a, b, lambda x, y: x.cast("double") - y.cast("double"))
-    return F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v * v)
-
-
 # Trained-index memo: an IVF index is built once and queried many times
 # (ivf_write_index is the persisted-to-disk variant); within a session the
 # deterministic k-means retrain for the same corpus+params is pure waste.
-# Keyed by applicationId so a stopped session's checkpoints never leak.
-from redcap_omop_etl_spark.caching import register_memo
-
-_IVF_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = register_memo({})
-
-
 def ivf_build(
     embeddings: DataFrame,
     n_clusters: int = 16,
@@ -526,18 +515,17 @@ def ivf_build(
     Scale: each iteration shuffles only (cluster, dim, value) triples —
     rows × dim, independent of cluster count; the vector table itself is
     never shuffled. localCheckpoint per iteration keeps the plan flat;
-    eager=False (round 13) — the plan is truncated either way, but the
+    lazy (round 13) — the plan is truncated either way, but the
     loop no longer pays a blocking Python-paced job per round (the next
     iteration's broadcast materializes the checkpoint JVM-side; A/B at
     sf0.1: 1.64 s vs 1.81 s min-of-4 per build).
     """
     if memo_key is not None:
-        key = (
-            embeddings.sparkSession.sparkContext.applicationId,
-            memo_key, n_clusters, n_iters, id_col, vec_col,
+        return session_memo(
+            embeddings.sparkSession,
+            ("ivf_build", memo_key, n_clusters, n_iters, id_col, vec_col),
+            lambda: ivf_build(embeddings, n_clusters, n_iters, id_col, vec_col),
         )
-        if key in _IVF_MEMO:
-            return _IVF_MEMO[key]
     # NOT spread (round 13 A/B): fan_out before the assign folds — plain,
     # and spread-once-behind-a-lazy-checkpoint — both measured ~0.4 s
     # SLOWER per build at sf0.1 (1.8→2.2 s): the added exchange + AQE
@@ -561,7 +549,7 @@ def ivf_build(
                 .alias("cluster"),
                 F.transform("__v", lambda x: x.cast("double")).alias("centroid"),
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize, "lazy")
         )
         for _ in range(n_iters):
             assigned = _ivf_assign(vecs, centroids)
@@ -576,15 +564,13 @@ def ivf_build(
                         lambda s: s["mean"],
                     ).alias("centroid")
                 )
-                .localCheckpoint(eager=False)
+                .transform(materialize, "lazy")
             )
         assignments = (
             _ivf_assign(vecs, centroids)
             .select(F.col("__vid").alias(id_col), "cluster")
-            .localCheckpoint(eager=False)
+            .transform(materialize, "lazy")
         )
-    if memo_key is not None:
-        _IVF_MEMO[key] = (assignments, centroids)
     return assignments, centroids
 
 
@@ -866,30 +852,22 @@ def semdedup_flags(
 # prefix of dedup_semdedup and corpus_semdedup_budget (same discipline as
 # graph._minhash_components: a production curation run materializes the
 # per-corpus prune decision ONCE, then every consumer — the flag export,
-# the per-source budget rollup, the actual filter — reads it). Keyed by
-# applicationId so a stopped session's checkpoints never leak. Added in
+# the per-source budget rollup, the actual filter — reads it). Added in
 # round 9: the budget rollup's 2.93x slope at 256x (SCALE_r08) was the
 # flag pipeline re-running INSIDE the budget query on top of the
 # corpus-sized documents join; against the checkpointed flag table the
 # rollup is one linear join + one hash agg.
-_SEMDEDUP_MEMO: dict = register_memo({})
-
-
 def semdedup_flags_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registered SemDeDup keep-flag table (16 cells, 16 anchors,
     tau=SEMDEDUP_TAU) for ``sf_dir``, computed once per (session,
     corpus) and localCheckpoint-pinned."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEMDEDUP_MEMO:
-        return _SEMDEDUP_MEMO[key]
-    emb = Catalog(spark, sf_dir)["embeddings"]
-    assignments, _centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=sf_dir)
-    flags = semdedup_flags(emb, assignments).localCheckpoint(eager=True)
-    _SEMDEDUP_MEMO[key] = flags
-    return flags
 
+    def build():
+        emb = Catalog(spark, sf_dir)["embeddings"]
+        assignments, _centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=sf_dir)
+        return materialize(semdedup_flags(emb, assignments))
 
-_SEMDEDUP_ANCHOR_MEMO: dict = register_memo({})
+    return session_memo(spark, ("semdedup_flags", sf_dir), build)
 
 
 def semdedup_anchors_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -901,22 +879,20 @@ def semdedup_anchors_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     table)."""
     from redcap_omop_etl_spark.operators.scalable_windows import keyed_topk
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEMDEDUP_ANCHOR_MEMO:
-        return _SEMDEDUP_ANCHOR_MEMO[key]
-    emb = Catalog(spark, sf_dir)["embeddings"]
-    assignments, _centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=sf_dir)
-    members = emb.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("__v"),
-    ).join(assignments.select("vec_id", "cluster"), "vec_id")
-    anchors = keyed_topk(
-        members, ["cluster"], [F.col("vec_id").asc()], k=SEMDEDUP_ANCHORS
-    ).select(
-        "cluster", F.col("vec_id").alias("a_id"), F.col("__v").alias("a_v")
-    ).localCheckpoint(eager=True)
-    _SEMDEDUP_ANCHOR_MEMO[key] = anchors
-    return anchors
+    def build():
+        emb = Catalog(spark, sf_dir)["embeddings"]
+        assignments, _centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=sf_dir)
+        members = emb.select(
+            "vec_id",
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("__v"),
+        ).join(assignments.select("vec_id", "cluster"), "vec_id")
+        return keyed_topk(
+            members, ["cluster"], [F.col("vec_id").asc()], k=SEMDEDUP_ANCHORS
+        ).select(
+            "cluster", F.col("vec_id").alias("a_id"), F.col("__v").alias("a_v")
+        ).transform(materialize)
+
+    return session_memo(spark, ("semdedup_anchors", sf_dir), build)
 
 
 def _semdedup_flags_cte(
@@ -1637,9 +1613,6 @@ def _pq_sub_struct(col: str, alias: str):
     )
 
 
-_PQ_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = register_memo({})
-
-
 def pq_assign(e: DataFrame, memo_key: str | None = None) -> tuple[DataFrame, DataFrame]:
     """Product-quantization codebook training (ONE Lloyd round from
     deterministic lowest-vec_id seeds) + code assignment, shared by the
@@ -1655,7 +1628,7 @@ def pq_assign(e: DataFrame, memo_key: str | None = None) -> tuple[DataFrame, Dat
     Pass ``memo_key`` (the corpus directory) to reuse a
     previously-computed code table for the same (session, corpus) — PQ
     codes are INDEX state computed once at ingest and queried many
-    times, exactly like the IVF assignments (``_IVF_MEMO``); re-encoding
+    times, exactly like the IVF assignments (``ivf_build``); re-encoding
     the corpus per search query is pure waste (measured: the encode was
     ~5x the actual ADC search wall at 64x replication).
 
@@ -1668,9 +1641,14 @@ def pq_assign(e: DataFrame, memo_key: str | None = None) -> tuple[DataFrame, Dat
     (floor(d2·10⁴+0.5)) before the argmin so tie-breaks are exact
     cross-engine."""
     if memo_key is not None:
-        key = (e.sparkSession.sparkContext.applicationId, memo_key)
-        if key in _PQ_MEMO:
-            return _PQ_MEMO[key]
+
+        def build():
+            best, cs = pq_assign(e)
+            # checkpoint-bound the memoized frames: the code table is read
+            # by every subsequent search in the session, the codebook is tiny.
+            return materialize(best, "lazy"), materialize(cs, "lazy")
+
+        return session_memo(e.sparkSession, ("pq_assign", memo_key), build)
     # size-adaptive single-job planning (round 13, same gate as
     # ivf_build): the Lloyd update shuffles rows x dim triples, so the
     # measured vector count x 64 bounds the working set.
@@ -1725,15 +1703,9 @@ def pq_assign(e: DataFrame, memo_key: str | None = None) -> tuple[DataFrame, Dat
                     lambda s: s["cval"],
                 ).alias("cv")
             )
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         best = _pq_argmin(vs, cs)
-    if memo_key is not None:
-        # checkpoint-bound the memoized frames: the code table is read by
-        # every subsequent search in the session, the codebook is tiny.
-        best = best.localCheckpoint(eager=False)
-        cs = cs.localCheckpoint(eager=False)
-        _PQ_MEMO[(e.sparkSession.sparkContext.applicationId, memo_key)] = (best, cs)
     return best, cs
 
 
@@ -2114,7 +2086,7 @@ def _ivfpq_sweep_oracle_sql(
     "and each vector's "
     "cell's probe rank are computed ONCE over the memoized codes "
     "(16-row broadcast rank map + 128-row broadcast distance table, "
-    "one hash agg), tracked_cache'd, then each sweep arm is a FILTER "
+    "one hash agg), persisted, then each sweep arm is a FILTER "
     "(prk <= np) + TakeOrdered-10 heap + 1-row scalar rollup — four "
     "statically-unrolled arms, no range join, no corpus-wide window, "
     "nothing rescanned. Exact brute-force top-10 computed once. All "
@@ -2139,7 +2111,7 @@ def ivfpq_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(dtable), ["subspace", "codeword"])
         .groupBy("vec_id", "prk")
         .agg(F.sum("qd2q").alias("adc_d2q"))
-        .transform(tracked_cache)
+        .transform(materialize, "persist")
     )
     q = F.array(*[F.lit(v) for v in qv])
     exact10 = (
@@ -2148,7 +2120,7 @@ def ivfpq_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("cs"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id")
-        .transform(tracked_cache)
+        .transform(materialize, "persist")
     )
     arms = []
     for np_ in _SWEEP_PROBES:
@@ -2460,7 +2432,7 @@ def ivfpq_delete_from_index(
     dels = (
         delete_ids.select(F.col(id_col).alias("vec_id"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     hadoop = spark._jvm.org.apache.hadoop.fs
     fs = hadoop.FileSystem.get(spark._jsc.hadoopConfiguration())
@@ -2478,7 +2450,7 @@ def ivfpq_delete_from_index(
         survivors = (
             tbl.filter(F.col("cluster").isin(affected))
             .join(dels, "vec_id", "left_anti")
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         (
             survivors.write.option("partitionOverwriteMode", "dynamic")
@@ -2675,7 +2647,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", rel_q.alias("rel_q"), "embedding")
         .orderBy(F.desc("rel_q"), F.asc("vec_id"))
         .limit(MMR_POOL)
-        .transform(tracked_cache)
+        .transform(materialize, "persist")
     )
     s = F.floor(
         cosine(F.col("a.embedding"), F.col("b.embedding")) * 10000 + F.lit(0.5)
@@ -3175,7 +3147,7 @@ def ivfpq_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(dtab), ["qid", "subspace", "codeword"])
             .groupBy("qid", "vec_id")
             .agg(F.sum("qd2q").alias("adc"))
-            .transform(tracked_cache)
+            .transform(materialize, "persist")
         )
         top = (
             cand.withColumn(
@@ -3266,14 +3238,14 @@ def ivfpq_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             centroids,
         ).select(F.col("__vid").alias("vec_id"), "cluster")
         # both arms + the next generation re-scan these; pin them with a
-        # PLAN BARRIER (round 13 final session, was tracked_cache): each
+        # PLAN BARRIER (round 13 final session, was a persist): each
         # generation unions on top of the previous one, so the cached
         # lineage grew per generation and every panel action re-analyzed
         # the whole chain — the checkpointed frames plan as leaves (same
         # Catalyst-stall fix as the graph.py tick boundaries)
-        u = u.transform(tracked_checkpoint)
-        cum_codes = cum_codes.unionByName(ncodes).transform(tracked_checkpoint)
-        cum_assign = cum_assign.unionByName(nassign).transform(tracked_checkpoint)
+        u = materialize(u)
+        cum_codes = cum_codes.unionByName(ncodes).transform(materialize)
+        cum_assign = cum_assign.unionByName(nassign).transform(materialize)
         r_assign, r_cents = ivf_build(
             u, n_clusters=16, n_iters=2, memo_key=f"{sf_dir}#drift{g}"
         )
@@ -3469,8 +3441,8 @@ def semdedup_flags_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("vec_id"), F.lit(_SEM_DELETE_MOD)) == _SEM_DELETE_RES
     ).select("vec_id")
     flags2, anchors2 = semdedup_state_delete(base_flags, anchors_base, deleted, emb)
-    flags2 = flags2.transform(tracked_cache)
-    anchors2 = anchors2.transform(tracked_cache)
+    flags2 = materialize(flags2, "persist")
+    anchors2 = materialize(anchors2, "persist")
     batch = emb.filter(
         F.pmod(F.col("vec_id"), F.lit(_SEM_APPEND_MOD)) == _SEM_APPEND_RES
     ).select((F.col("vec_id") + F.lit(_SEM_APPEND_SHIFT)).alias("vec_id"), "embedding")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from redcap_omop_etl_spark.functions.xxh_sql import xxh64_pmod, xxh64_sql_cte
 from redcap_omop_etl_spark.sources.readers import Catalog, fan_out
 from redcap_omop_etl_spark.workload import register
-from redcap_omop_etl_spark.caching import tracked_cache, tracked_persist
+from redcap_omop_etl_spark.caching import materialize
 
 # Marker stopwords per language for the n-gram/token heuristic language ID.
 # Tiny on purpose: the operator is the dispatch plan; swapping in a real
@@ -471,7 +471,7 @@ def winnow_near_pairs(
     # Persisted: the pair self-join references the fingerprint table on
     # both sides (plus the stop-fp scan) — without materialization the
     # HOF fingerprint chain would run 3×.
-    fp = winnow_fingerprints(df, text_col=text_col, id_col=id_col).transform(tracked_persist)
+    fp = materialize(winnow_fingerprints(df, text_col=text_col, id_col=id_col), "persist")
     if df_cap is not None:
         hot = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > df_cap).select("fp")
         # hint("merge"): the stop-fp set grows with corpus size on
@@ -796,7 +796,7 @@ def bpe_learn(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    seqs = words.select("cnt", F.split("w", "").alias("sym")).localCheckpoint(eager=True)
+    seqs = words.select("cnt", F.split("w", "").alias("sym")).transform(materialize)
 
     merges: list[tuple[int, str, str, str, int]] = []
     BPE_LAST_STATS["rounds"] = 0
@@ -856,7 +856,7 @@ def bpe_learn(
         seqs = seqs.withColumn(
             "sym",
             F.aggregate(F.col("sym"), F.array().cast("array<string>"), make_step(accepted)),
-        ).localCheckpoint(eager=True)
+        ).transform(materialize)
     return docs.sparkSession.createDataFrame(
         merges, "rank int, left string, right string, merged string, frequency long"
     )
@@ -1216,7 +1216,7 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = (
         d.select("doc_id", "text")
         .select("doc_id", F.explode(grams_with_repeats(toks, 3)).alias("g"))
-        .transform(tracked_cache)
+        .transform(materialize, "persist")
     )
     dfreq = occ.select("doc_id", "g").distinct().groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     hot = dfreq.filter(F.col("df") >= 5).select("g", F.lit(1).alias("is_hot"))
@@ -1880,7 +1880,7 @@ def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slope dropped from ~30 to ~12 with this shape). Cached because
     # Catalyst does not reuse the common exchange across the four
     # aggregate branches (verified: ReusedExchange=0, Generate=8 uncached).
-    c2all = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n")).transform(tracked_cache)
+    c2all = materialize(bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n")), "persist")
     c2 = c2all.filter(F.col("n") >= 5)
     c1 = c2all.groupBy("w1").agg(F.sum("n").alias("cl"))
     cr = c2all.groupBy("w2").agg(F.sum("n").alias("cr"))
@@ -2151,10 +2151,10 @@ def chunk_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from redcap_omop_etl_spark.operators.scalable_windows import keyed_running_sum
 
     d = Catalog(spark, sf_dir)["documents"]
-    ch = split_structured(d, keep_cols=["source"]).transform(tracked_cache)
+    ch = materialize(split_structured(d, keep_cols=["source"]), "persist")
     uniq = ch.groupBy("source", "chunk_hash").agg(
         F.min("n_tokens").alias("n_tokens")
-    ).transform(tracked_cache)
+    ).transform(materialize, "persist")
     # packing's per-source running sum goes through the two-phase
     # keyed_running_sum primitive: source has ~20 values, so the naive
     # source-partitioned window this replaces capped the unique-chunk
@@ -2374,7 +2374,7 @@ def corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir)["documents"]
     toks = d.select(
         "source", "lang", F.explode(ws_tokens(F.col("text"))).alias("t")
-    ).transform(tracked_persist)
+    ).transform(materialize, "persist")
     vocab = (
         toks.groupBy("t")
         .agg(F.count(F.lit(1)).alias("c"))

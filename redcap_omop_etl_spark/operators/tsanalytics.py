@@ -25,7 +25,7 @@ from pyspark.sql import Window as W
 
 from redcap_omop_etl_spark.sources.readers import Catalog
 from redcap_omop_etl_spark.workload import register
-from redcap_omop_etl_spark.caching import tracked_cache
+from redcap_omop_etl_spark.caching import materialize
 
 
 def coalesce_intervals(df: DataFrame, *, key: str, lo: str, hi: str) -> DataFrame:
@@ -570,7 +570,7 @@ def ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     # profile are separate action branches, and without the cache each
     # re-runs the corpus scan + daily agg (3 scans; 3.5s at sf0.1 vs
     # ~1.3s cached — Catalyst does not share the common subtree).
-    daily = _daily_cents(e).withColumn("dow", F.dayofweek("day")).transform(tracked_cache)
+    daily = materialize(_daily_cents(e).withColumn("dow", F.dayofweek("day")), "persist")
     # dow mean as a window over (event_type, dow): same sum/count division
     # as the oracle's dowm CTE, no join back to the series needed.
     w_dow = W.partitionBy("event_type", "dow")

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from redcap_omop_etl_spark.caching import materialize
 from redcap_omop_etl_spark.sources.partitioned import overwrite_partitions
 
 
@@ -48,6 +49,6 @@ def upsert_partitions(
     merged = (
         current.join(batch.select(keys), on=keys, how="left_anti")
         .unionByName(batch.select(current.columns))
-        .localCheckpoint()
+        .transform(materialize)
     )
     overwrite_partitions(merged, target_path, partition_col)

@@ -172,13 +172,16 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     return df
 
 
+# small_plan_rounds' gate: 256k rows (~6 MB shuffled as edge pairs) is
+# under a tenth of one advisory (64 MB) partition, where AQE's runtime
+# coalescing and skew splits buy nothing; below it the static width is
+# one partition per 64k rows.
+_SMALL_PLAN_ROWS = 256 * 1024
+_ROWS_PER_PART = 64 * 1024
+
+
 @contextmanager
-def small_plan_rounds(
-    spark,
-    n_rows: int,
-    threshold: int = 256 * 1024,
-    rows_per_part: int = 64 * 1024,
-):
+def small_plan_rounds(spark, n_rows: int):
     """Plan an iterative loop's per-round queries as single jobs when the
     MEASURED working-set row count is tiny.
 
@@ -188,19 +191,19 @@ def small_plan_rounds(
     partition (~64 MB). Inside this context, plans are built with AQE off
     and a static shuffle width derived from ``n_rows`` (64k rows per
     partition), so a round plans as ONE job with single-digit tasks.
-    Above ``threshold`` the context is a no-op: big graphs keep AQE's
+    From ``_SMALL_PLAN_ROWS`` up the context is a no-op: big graphs keep AQE's
     coalescing and skew handling. Both knobs derive from the measured
     input, not the local core count. Only affects queries PLANNED inside
     the block (per-round ``localCheckpoint`` calls plan eagerly); the
     caller's final action keeps the session settings."""
     conf = spark.conf
-    if n_rows >= threshold:
+    if n_rows >= _SMALL_PLAN_ROWS:
         yield
         return
     aqe_was = conf.get("spark.sql.adaptive.enabled")
     parts_was = conf.get("spark.sql.shuffle.partitions")
     conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", str(max(1, n_rows // rows_per_part)))
+    conf.set("spark.sql.shuffle.partitions", str(max(1, n_rows // _ROWS_PER_PART)))
     try:
         yield
     finally:

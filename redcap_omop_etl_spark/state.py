@@ -35,6 +35,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from redcap_omop_etl_spark.caching import materialize
+
 MANIFEST = "_MANIFEST.json"
 
 
@@ -112,7 +114,7 @@ class StateCatalog:
             fs.delete(vpath, True)
         counts = {}
         for name, df in frames.items():
-            pinned = df.localCheckpoint(eager=True)
+            pinned = materialize(df)
             pinned.write.mode("errorifexists").parquet(f"{vdir}/{name}")
             counts[name] = pinned.count()
         manifest = {
@@ -215,12 +217,10 @@ def cluster_state_tick(
     comp, hubs = frames["components"], frames["hubs"]
     if delete_ids is not None:
         comp, hubs = minhash_cluster_state_delete(comp, hubs, delete_ids, corpus)
-        comp = comp.localCheckpoint(eager=True)
-        hubs = hubs.localCheckpoint(eager=True)
+        comp = materialize(comp)
+        hubs = materialize(hubs)
     if append_docs is not None:
-        from redcap_omop_etl_spark.caching import tracked_checkpoint
-
-        # Checkpointed (round 13; was tracked_persist): the append
+        # Checkpointed (round 13; was a persist): the append
         # transition consumes the batch band table three times (shared-
         # bucket join, batch-only anti-join, new-hub aggregation) plus
         # the id guard; the signature fold behind it is a pure projection
@@ -228,7 +228,7 @@ def cluster_state_tick(
         # keeps the tick's downstream actions from re-analyzing the
         # band-table lineage (same fix as the graph.py tick boundaries).
         comp, hubs = minhash_cluster_state_append(
-            comp, hubs, tracked_checkpoint(minhash_band_table(append_docs))
+            comp, hubs, materialize(minhash_band_table(append_docs))
         )
     return catalog.save(spark, CLUSTER_OP, fp, {"components": comp, "hubs": hubs})
 
@@ -384,8 +384,8 @@ def semdedup_tick(
     )
     if delete_ids is not None:
         flags, anchors = semdedup_state_delete(flags, anchors, delete_ids, embeddings)
-        flags = flags.localCheckpoint(eager=True)
-        anchors = anchors.localCheckpoint(eager=True)
+        flags = materialize(flags)
+        anchors = materialize(anchors)
     if append_vecs is not None:
         flags, anchors = semdedup_state_append(flags, anchors, centroids, append_vecs)
     return catalog.save(

@@ -49,7 +49,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from redcap_omop_etl_spark.caching import unpersist_operator_caches
+from redcap_omop_etl_spark.caching import materialize, unpersist_operator_caches
 
 Applier = Callable[[SparkSession, DataFrame, int], None]
 
@@ -70,12 +70,12 @@ def write_cluster_state(docs: DataFrame, state_path: str) -> None:
     )
     from redcap_omop_etl_spark.operators.graph import connected_components
 
-    comp = connected_components(minhash_star_edges(docs)).localCheckpoint(eager=True)
+    comp = materialize(connected_components(minhash_star_edges(docs)))
     hubs = (
         minhash_band_table(docs)
         .groupBy("band", "bucket")
         .agg(F.min("doc").alias("hub"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     comp.write.mode("overwrite").parquet(f"{state_path}/components")
     hubs.write.mode("overwrite").parquet(f"{state_path}/hubs")
@@ -90,7 +90,7 @@ def write_term_stats_state(docs: DataFrame, state_path: str) -> None:
         F.count(F.lit(1)).cast("long").alias("df"),
         F.sum("tf").cast("long").alias("cf"),
     )
-    stats.localCheckpoint(eager=True).write.mode("overwrite").parquet(
+    materialize(stats).write.mode("overwrite").parquet(
         f"{state_path}/terms"
     )
 
@@ -102,12 +102,12 @@ def write_semdedup_state(
     is_kept) + ``{state}/anchors`` (cluster, a_id, a_v) from the
     session's SemDeDup frames (``semdedup_flags_memo`` /
     ``semdedup_anchors_memo``)."""
-    flags.localCheckpoint(eager=True).write.mode("overwrite").parquet(
+    materialize(flags).write.mode("overwrite").parquet(
         f"{state_path}/flags"
     )
     anchors.select(
         F.col("cluster").cast("bigint").alias("cluster"), "a_id", "a_v"
-    ).localCheckpoint(eager=True).write.mode("overwrite").parquet(
+    ).transform(materialize).write.mode("overwrite").parquet(
         f"{state_path}/anchors"
     )
 
@@ -135,15 +135,10 @@ def cluster_delete_applier(state_path: str, corpus: DataFrame) -> Applier:
         # pin BOTH outputs before either write: hubs_out's lineage reads
         # the components parquet, so writing components first would feed
         # the hub repair post-delete state
-        comp_out = comp_out.localCheckpoint(eager=True)
-        hubs_out = hubs_out.localCheckpoint(eager=True)
+        comp_out = materialize(comp_out)
+        hubs_out = materialize(hubs_out)
         comp_out.write.mode("overwrite").parquet(f"{state_path}/components")
         hubs_out.write.mode("overwrite").parquet(f"{state_path}/hubs")
-        # the delete transition tracked_persists its band table; a
-        # micro-batch tick is an operator-composition boundary, so release
-        # here (outputs are already checkpoint-pinned above) — otherwise a
-        # long-lived stream accumulates one persisted block set per epoch
-        unpersist_operator_caches()
 
     return apply
 
@@ -176,7 +171,7 @@ def term_stats_delete_applier(state_path: str, corpus: DataFrame) -> Applier:
                 (F.col("cf") - F.coalesce("cf_b", F.lit(0))).cast("long").alias("cf"),
             )
             .filter(F.col("df") > 0)
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         out.write.mode("overwrite").parquet(f"{state_path}/terms")
 
@@ -201,8 +196,8 @@ def semdedup_delete_applier(state_path: str, embeddings: DataFrame) -> Applier:
         )
         # pin BOTH before either overwrite (anchors_out reads the flags
         # parquet through the touched-cell membership map)
-        flags_out = flags_out.localCheckpoint(eager=True)
-        anchors_out = anchors_out.localCheckpoint(eager=True)
+        flags_out = materialize(flags_out)
+        anchors_out = materialize(anchors_out)
         flags_out.write.mode("overwrite").parquet(f"{state_path}/flags")
         anchors_out.write.mode("overwrite").parquet(f"{state_path}/anchors")
 
@@ -236,10 +231,15 @@ def stream_to_delete_ticks(
     def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        ids = batch_df.localCheckpoint(eager=True)
+        ids = materialize(batch_df)
         spark = batch_df.sparkSession
         for ap in appliers:
             ap(spark, ids, epoch_id)
+        # a micro-batch is a composition boundary: every applier has
+        # written its state, so free the batch's materializations (the
+        # shared ids pin included) once, after the last applier —
+        # otherwise a long-lived stream accumulates blocks per epoch
+        unpersist_operator_caches()
 
     return (
         delete_stream.writeStream.foreachBatch(handle_batch)
@@ -340,10 +340,6 @@ def catalog_cluster_delete_applier(
             {"components": comp_out, "hubs": hubs_out},
             meta=_epoch_meta(spark, catalog, CLUSTER_OP, fp, epoch, stream_id),
         )
-        # release the transition's tracked band-table persist per tick
-        # (catalog.save has materialized both outputs) — see
-        # cluster_delete_applier
-        unpersist_operator_caches()
 
     return apply
 
@@ -459,7 +455,7 @@ def catalog_cluster_append_applier(
     def apply(spark: SparkSession, batch_docs: DataFrame, epoch: int = -1) -> None:
         if _epoch_already_applied(spark, catalog, CLUSTER_OP, fp, epoch, stream_id):
             return
-        banded = minhash_band_table(batch_docs).localCheckpoint(eager=True)
+        banded = materialize(minhash_band_table(batch_docs))
         if catalog.latest_version(spark, CLUSTER_OP, fp) is None:
             m = F.min("doc").over(Window.partitionBy("band", "bucket"))
             star = (

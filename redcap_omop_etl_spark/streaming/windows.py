@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from redcap_omop_etl_spark.caching import materialize
 from redcap_omop_etl_spark.sources.readers import TABLES
 
 
@@ -539,7 +540,7 @@ def stream_to_cluster_index(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        banded = minhash_band_table(batch_df).localCheckpoint(eager=True)
+        banded = materialize(minhash_band_table(batch_df))
         comp_dir = f"{state_path}/components"
         # Hadoop FS existence check (not os.path) so an HDFS/S3 state_path
         # is honored rather than silently re-bootstrapped on every batch.
@@ -555,8 +556,8 @@ def stream_to_cluster_index(
             comp = spark.read.parquet(comp_dir)
             hubs = spark.read.parquet(f"{state_path}/hubs")
             comp_out, hubs_out = minhash_cluster_state_append(comp, hubs, banded)
-            comp_out = comp_out.localCheckpoint(eager=True)
-            hubs_out = hubs_out.localCheckpoint(eager=True)
+            comp_out = materialize(comp_out)
+            hubs_out = materialize(hubs_out)
         else:
             m = F.min("doc").over(Window.partitionBy("band", "bucket"))
             star = (
@@ -565,11 +566,11 @@ def stream_to_cluster_index(
                 .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
                 .distinct()
             )
-            comp_out = connected_components(star).localCheckpoint(eager=True)
+            comp_out = materialize(connected_components(star))
             hubs_out = (
                 banded.groupBy("band", "bucket")
                 .agg(F.min("doc").alias("hub"))
-                .localCheckpoint(eager=True)
+                .transform(materialize)
             )
         comp_out.write.mode("overwrite").parquet(comp_dir)
         hubs_out.write.mode("overwrite").parquet(f"{state_path}/hubs")

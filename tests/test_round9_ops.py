@@ -60,18 +60,23 @@ class TestClusterFastTwin:
             assert all(m.cluster_size == len(members) for m in members)
 
     def test_fast_twins_share_family_keyed_memo(self, spark):
+        from redcap_omop_etl_spark import caching
         from redcap_omop_etl_spark.operators import graph as g
 
-        g._MINHASH_COMP_MEMO.clear()
+        def state_entries() -> int:
+            # session-memo keys are (applicationId, memo name, *key)
+            return sum(k[1] == "minhash_cluster_state" for k in caching._MEMOS)
+
+        caching.clear_session_memos()
         g._cluster_table_frame(spark, SF_SMOKE, family="xxh").count()
-        assert len(g._MINHASH_COMP_MEMO) == 1
+        assert state_entries() == 1
         # the soft-weight twin reuses the same entry — no second build
         g._soft_dedup_frame(spark, SF_SMOKE, family="xxh").count()
-        assert len(g._MINHASH_COMP_MEMO) == 1
+        assert state_entries() == 1
         # the md5 family is a SEPARATE memo entry (different signatures)
         g._soft_dedup_frame(spark, SF_SMOKE, family="md5").count()
-        assert len(g._MINHASH_COMP_MEMO) == 2
-        g._MINHASH_COMP_MEMO.clear()
+        assert state_entries() == 2
+        caching.clear_session_memos()
 
     def test_soft_weights_fast_consistent_with_cluster_table(self, spark):
         from redcap_omop_etl_spark import workload

@@ -108,7 +108,7 @@ def main() -> int:
     for name, fn in qs.items():
         t0 = time.time()
         # release the previous query's operator-internal caches (the
-        # tracked_cache ownership convention) so a full-registry sweep
+        # materialize ownership convention) so a full-registry sweep
         # doesn't accumulate storage blocks across 192 queries
         unpersist_operator_caches()
         try:

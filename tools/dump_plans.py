@@ -310,7 +310,7 @@ SHOWCASE: dict[str, str] = {
     "dedup_minhash_clusters_upsert": "Mixed cluster upsert (round 11): "
     "the delete transition's touched-component recompute and the "
     "append transition's batch-sized merge CC compose over the shared "
-    "frozen state (tracked_persist between the legs); untouched "
+    "frozen state (materialized between the legs); untouched "
     "labels stream off the checkpointed state scan, and the single "
     "corpus-wide window is the output cluster_size count — identical "
     "shape discipline to the single-direction ticks.",

@@ -1,10 +1,10 @@
 """Dump `.explain("formatted")` output for named queries into
-plans/r13/<query>_<tag>.txt — the before/after plan evidence for the
-round-12 optimization report (OPTIMIZATION_r13.md).
+plans/r{N}/<query>_<tag>.txt — the before/after plan evidence for an
+optimization round's report (OPTIMIZATION_r{N}.md).
 
 Usage:
-    python tools/dump_r13_plans.py before q1 q2 ...
-    python tools/dump_r13_plans.py after  q1 q2 ...
+    python tools/dump_round_plans.py 13 before q1 q2 ...
+    python tools/dump_round_plans.py 13 after  q1 q2 ...
 """
 
 from __future__ import annotations
@@ -17,17 +17,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from redcap_omop_etl_spark import workload
 from redcap_omop_etl_spark.session import build_session
 
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
-)
-
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    rnd, tag, names = int(sys.argv[1]), sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(OUT_DIR, exist_ok=True)
-    spark = build_session("dump_r13_plans")
+    out_dir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", f"r{rnd}"
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    spark = build_session(f"dump_r{rnd}_plans")
     qs = workload.queries()
     for name in names:
         if name not in qs:
@@ -37,7 +35,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange mentions)")
