@@ -20,11 +20,12 @@ package calls ``.cache()``, ``.persist()`` or ``.localCheckpoint()``
 Ownership. A materialization belongs to whoever was running when it was
 made: the innermost ``session_memo`` build in progress, otherwise the
 operator layer. Session owners (bench, oracle sweep, maintenance loop,
-streaming micro-batch handler) call ``unpersist_operator_caches()`` at
-their composition boundaries to free everything the operator layer made;
-memo-owned blocks survive that call and are freed only by
-``clear_session_memos()``, which also drops the memo entries (the next
-call rebuilds). Caller-created caches are never touched.
+streaming micro-batch handler, a ``cli.main`` run) call
+``unpersist_operator_caches()`` at their composition boundaries to free
+everything the operator layer made; memo-owned blocks survive that call
+and are freed only by ``clear_session_memos()``, which also drops the
+memo entries (the next call rebuilds). Caller-created caches are never
+touched.
 
 Release contract. A checkpoint is registered by its RDD id alone and
 released with ``SparkContext.unpersistRDD`` — deterministic, and it

@@ -6,8 +6,14 @@ Mirrors ``python redcap-etl.py -c config.ini [-f] [-d] [-p] [-w out]``
 1. parse INI config (S1, ``config.load_config``);
 2. extract the EAV stream through the chunk-partitioned REST source
    (S2-S4, ``sources.rest_source`` — parallel fan-out instead of the
-   reference's serial 100-ID loop; ``--fake`` uses the deterministic
-   synthetic transport, the only mode in this sandbox);
+   reference's serial 100-ID loop). The CLI always reads through the
+   deterministic synthetic transport: ``-f/--fake`` is accepted for
+   parity with the reference's flags and changes nothing, and live HTTP
+   is reachable only through the source's ``url``/``token`` reader
+   options, which the CLI does not set. Like the reference's one list
+   (redcap-etl.py:99-128), the extract is read once per run: it is
+   materialized (one scan job, a plan barrier) and everything below
+   reads that materialization;
 3. transform: DAG patch → date de-identification (strategy/granularities
    from config) → calc/secondary emissions → PHI filter
    (``operators.redcap.redcap_pipeline``, reference order);
@@ -15,7 +21,12 @@ Mirrors ``python redcap-etl.py -c config.ini [-f] [-d] [-p] [-w out]``
    (``sinks.chunked``); ``-w`` writes the would-be payloads to a
    fail-if-exists location (the reference's dry-run golden-output
    harness, redcap-etl.py:216-221,254-262), ``-p`` additionally writes
-   the pivoted debug CSV (redcap-etl.py:382-397).
+   the pivoted debug CSV (redcap-etl.py:382-397). The envelopes are built
+   once: the summary's ``chunks`` and ``kept_rows`` come from one
+   aggregate over the materialized envelopes, and ``-w`` writes them.
+
+The run is a session owner: it releases every operator-owned
+materialization when it returns (``caching.unpersist_operator_caches``).
 
 Errors never abort the run (V3): they are counted and reported in the
 summary, mirroring skip-and-log.
@@ -29,6 +40,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from redcap_omop_etl_spark.caching import materialize, unpersist_operator_caches
 from redcap_omop_etl_spark.config import EngineConfig, load_config
 from redcap_omop_etl_spark.operators.redcap import EAV_COLUMNS, redcap_pipeline
 from redcap_omop_etl_spark.session import build_session
@@ -65,7 +77,12 @@ def build_parser() -> argparse.ArgumentParser:
         description="EAV extract -> de-identify -> chunked transmit (reference CLI parity)",
     )
     p.add_argument("-c", "--config", required=True, help="INI config (example-config.ini shape)")
-    p.add_argument("-f", "--fake", action="store_true", help="synthetic transport (dry-run extract)")
+    p.add_argument(
+        "-f",
+        "--fake",
+        action="store_true",
+        help="accepted for reference parity; the CLI always uses the synthetic transport",
+    )
     p.add_argument("-d", "--debug", action="store_true", help="INFO-level Spark logging")
     p.add_argument("-p", "--pub-debug", action="store_true", help="write pivoted debug CSV")
     p.add_argument("-w", "--write-payloads", metavar="OUT", help="write chunk envelopes here (fail-if-exists)")
@@ -87,7 +104,8 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
         # ---- extract (S2-S4) --------------------------------------------
         rest_source.register(spark)
         ids = args.ids or ",".join(f"R{i:04d}" for i in range(25))
-        records = spark.read.format("rest_eav").option("ids", ids).load()
+        # one scan job; every later action reads the checkpoint, not the source
+        records = materialize(spark.read.format("rest_eav").option("ids", ids).load())
 
         # ---- transform (reference order) --------------------------------
         fm = _load_field_map(spark, cfg)
@@ -101,20 +119,26 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
         kept = result.kept.select(*EAV_COLUMNS)
 
         # ---- transmit (S9/S10) ------------------------------------------
-        envelopes = chunk_envelopes(
-            kept,
-            order_cols=["record_id", "redcap_event_name", "field_name"],
-            chunk_size=cfg.record_chunk_size,
-            project_info={
-                "redcap_project_id": cfg.project_id,
-                "project_type": cfg.project_type,
-            },
-            run_datetime=args.run_datetime,
+        envelopes = materialize(
+            chunk_envelopes(
+                kept,
+                order_cols=["record_id", "redcap_event_name", "field_name"],
+                chunk_size=cfg.record_chunk_size,
+                project_info={
+                    "redcap_project_id": cfg.project_id,
+                    "project_type": cfg.project_type,
+                },
+                run_datetime=args.run_datetime,
+            )
         )
+        # each kept row lands in exactly one chunk: sum(n_records) == kept rows
+        totals = envelopes.agg(
+            F.count(F.lit(1)).alias("chunks"), F.sum("n_records").alias("rows")
+        ).first()
         summary = {
-            "kept_rows": kept.count(),
+            "kept_rows": totals["rows"] or 0,
             "error_rows": result.errors.count(),
-            "chunks": envelopes.count(),
+            "chunks": totals["chunks"],
         }
         if args.write_payloads:
             # the reference's open(..., "x") dry-run sink: fail if exists
@@ -134,6 +158,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
         )
         return summary
     finally:
+        unpersist_operator_caches()
         if owns_session:
             spark.stop()
 

@@ -19,9 +19,11 @@ Dispatch rules, in reference order:
 6. anything else                                    → drop
 
 Scale notes: the field map is a curated human-edited table (hundreds of
-rows) → always broadcast; the records side is the 100 TB EAV stream and is
-touched exactly once. Both outputs (kept, errors) are lazy views over the
-same scan.
+rows) → always broadcast; the records side is the 100 TB EAV stream. Both
+outputs (kept, errors) are lazy views over ``records``, so every action on
+either re-reads it (the errors ``left_anti`` join scans it a second time);
+a caller that wants the source read once materializes ``records`` first,
+as ``cli.main`` does.
 """
 
 from __future__ import annotations

@@ -15,7 +15,8 @@ Two transports behind one seam: the default is a deterministic synthetic
 generator (no network egress in this environment), and setting the
 ``url``/``token`` reader options switches to ``http_transport`` — a real
 ``requests`` POST speaking the reference's REDCap wire protocol, tested
-against a loopback fixture server (``tests/test_rest_source.py``) so the
+against a loopback fixture server (``tests/test_sinks_sources.py::
+TestRestSource::test_http_transport_against_loopback_fixture``) so the
 seam is proven honest without live network. Partition planning, schema
 contract, and pushdown plumbing are shared by both.
 """

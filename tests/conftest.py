@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from redcap_omop_etl_spark import workload
 from redcap_omop_etl_spark.session import build_session
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -22,3 +23,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark):
+    """``{name: executed plan text}`` for every registered query at the
+    smoke SF, planned once and shared by the registry-wide plan gates."""
+    return {
+        name: fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+        for name, fn in workload.queries().items()
+    }

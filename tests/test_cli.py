@@ -6,10 +6,13 @@ from __future__ import annotations
 
 import glob
 import json
+import sys
 
 import pytest
+from pyspark import cloudpickle
 
-from redcap_omop_etl_spark import cli
+from redcap_omop_etl_spark import caching, cli
+from redcap_omop_etl_spark.sources import rest_source
 
 INI = """
 [default]
@@ -76,3 +79,50 @@ class TestCliLifecycle:
         summary = cli.main(["-c", ini_path, "-f"], spark=spark)
         assert summary["kept_rows"] > 0
         assert "payload_path" not in summary
+
+
+# Where the counting reader logs its reads. The reader runs in Python
+# workers, which get this module by value (pickled with its globals), so
+# the path must be set before the plan is built.
+READ_LOG: str = ""
+
+
+class _CountingReader(rest_source.RestEavReader):
+    def read(self, partition):
+        with open(READ_LOG, "a") as fh:
+            fh.write(f"{len(partition.ids)} ids\n")
+        yield from super().read(partition)
+
+
+class _CountingSource(rest_source.RestEavDataSource):
+    def reader(self, schema):
+        return _CountingReader(schema, self.options)
+
+
+def test_one_extract_scan_per_run(spark, ini_path, tmp_path, monkeypatch):
+    """One CLI run reads each ID chunk of the REST source once (the
+    reference extracts into one list, redcap-etl.py:99-128), however many
+    summary counts and sinks read the result, and releases what it made."""
+    global READ_LOG
+    READ_LOG = str(tmp_path / "reads.log")
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+    real_register = rest_source.register
+
+    def register(session):
+        real_register(session)  # the source module travels by value too
+        session.dataSource.register(_CountingSource)
+
+    monkeypatch.setattr(cli.rest_source, "register", register)
+    ids = ",".join(f"R{i:04d}" for i in range(250))  # 3 chunks of 100 IDs
+    try:
+        summary = cli.main(
+            ["-c", ini_path, "-f", "--ids", ids, "-w", str(tmp_path / "out")], spark=spark
+        )
+    finally:
+        monkeypatch.undo()
+        rest_source.register(spark)
+    assert summary["kept_rows"] == 250 * 8
+    with open(READ_LOG) as fh:
+        assert len(fh.read().splitlines()) == 3
+    assert caching._OPERATOR_OWNED == []

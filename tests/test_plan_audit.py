@@ -8,24 +8,18 @@ minimal: an entry that stops matching anything fails the test too.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-from redcap_omop_etl_spark import workload
-from tests.conftest import SF_SMOKE
-
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 from audit_plans import ALLOWED, audit_plan  # noqa: E402
 
 
 @pytest.fixture(scope="module")
-def all_flags(spark):
-    flags: dict[str, list[str]] = {}
-    for name, fn in workload.queries().items():
-        plan = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-        flags[name] = audit_plan(name, plan)
-    return flags
+def all_flags(registry_plans):
+    return {name: audit_plan(name, plan) for name, plan in registry_plans.items()}
 
 
 def test_no_unallowlisted_plan_antipatterns(all_flags):

@@ -53,9 +53,8 @@ _NESTED_LOOP_OK = {
 }
 
 
-def test_no_cartesian_products_anywhere(spark):
-    for name, fn in workload.queries().items():
-        plan = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+def test_no_cartesian_products_anywhere(registry_plans):
+    for name, plan in registry_plans.items():
         assert "CartesianProduct" not in plan, f"{name} has a cartesian product"
         if name not in _NESTED_LOOP_OK:
             assert "BroadcastNestedLoopJoin" not in plan, f"{name} has a nested-loop join"

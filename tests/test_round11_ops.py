@@ -367,6 +367,7 @@ class TestStateCatalog:
         SparkSession loads the catalog, applies a delete+append tick and
         commits v2; session A then loads v2 and compares against the
         one-shot rebuild over the net corpus."""
+        import os
         import subprocess
         import sys as _sys
 
@@ -389,7 +390,7 @@ class TestStateCatalog:
 
         script = f"""
 import sys
-sys.path.insert(0, {repr("/root/repo")})
+sys.path.insert(0, {repr(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))})
 from pyspark.sql import SparkSession, functions as F
 from redcap_omop_etl_spark.state import StateCatalog, cluster_state_tick
 spark = (SparkSession.builder.master("local[2]")
