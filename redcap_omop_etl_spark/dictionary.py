@@ -23,27 +23,6 @@ from pyspark.sql import functions as F
 
 from redcap_omop_etl_spark.operators.relational import merge_update
 
-# dictionary_extraction.py:10-29
-INIT_COLUMNS = [
-    "field_name",
-    "form_name",
-    "section_header",
-    "field_type",
-    "field_label",
-    "select_choices_or_calculations",
-    "field_note",
-    "text_validation_type_or_show_slider_number",
-    "text_validation_min",
-    "text_validation_max",
-    "identifier",
-    "branching_logic",
-    "required_field",
-    "custom_alignment",
-    "question_number",
-    "matrix_group_name",
-    "matrix_ranking",
-    "field_annotation",
-]
 # dictionary_extraction.py:30-37
 KEEP_COLUMNS = [
     "form_name",
@@ -52,15 +31,6 @@ KEEP_COLUMNS = [
     "select_choices_or_calculations",
     "field_label",
     "text_validation_type_or_show_slider_number",
-]
-# dictionary_extraction.py:38-45
-ADDITION_COLUMNS = [
-    "status",
-    "status questions",
-    "exclude_reason",
-    "notes",
-    "ontology_term",
-    "restrict_to_event_list",
 ]
 # dictionary_extraction.py:47-60
 COLUMN_ORDER = [

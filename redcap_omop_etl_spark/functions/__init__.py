@@ -3,8 +3,6 @@
 from redcap_omop_etl_spark.functions.dates import (
     GRANULARITIES,
     format_granularity,
-    date_shift_by_interval,
-    date_shift_seconds,
     seconds_between,
 )
 from redcap_omop_etl_spark.functions.errors import split_errors, try_timestamp
@@ -12,8 +10,6 @@ from redcap_omop_etl_spark.functions.errors import split_errors, try_timestamp
 __all__ = [
     "GRANULARITIES",
     "format_granularity",
-    "date_shift_by_interval",
-    "date_shift_seconds",
     "seconds_between",
     "split_errors",
     "try_timestamp",

@@ -11,8 +11,9 @@ no UDFs, so they stay inside whole-stage codegen at any scale:
   ``[:-3]`` slice, i.e. minute precision — NOT HH:mm:ss),
   DateTimeSeconds → ``yyyy-MM-dd HH:mm:ss``, DateYear → ``yyyy``.
 - The three shift strategies (``dcc_transforms.py:40-49,75,121-122,139``):
-  per-record anchor interval (dob-shifting), constant seconds
-  (date_shifting), and seconds-since-standard (total_seconds).
+  per-record anchor interval (dob-shifting) and constant seconds
+  (date_shifting) are ``timestamp_add`` calls in ``operators.redcap``;
+  seconds-since-standard (total_seconds) is ``seconds_between``.
 """
 
 from __future__ import annotations
@@ -36,9 +37,8 @@ def format_granularity(ts: Column, granularity_label: Column | str) -> Column:
     With a literal label this folds to a single ``date_format``; with a
     column label it becomes the reference's 4-way CASE dispatch
     (``dcc_transforms.py:141-168``) as one codegen'd ``when`` chain.
-    Unknown labels yield NULL (the caller's error channel picks them up;
-    the reference raises — see ``operators.date_transform`` for the strict
-    variant).
+    Unknown labels yield NULL, which the caller's error channel picks up
+    (the reference raises instead).
     """
     if isinstance(granularity_label, str):
         return F.date_format(ts, GRANULARITIES[granularity_label])
@@ -49,21 +49,6 @@ def format_granularity(ts: Column, granularity_label: Column | str) -> Column:
     return expr.otherwise(F.lit(None))
 
 
-def date_shift_by_interval(ts: Column, shift_seconds: Column) -> Column:
-    """``ts + shift`` where ``shift`` is a per-row interval in seconds.
-
-    The dob-shifting strategy (``dcc_transforms.py:75``): the per-record
-    shift is ``anchor - dob`` computed once per record and joined back, so
-    the arithmetic itself is a plain column op.
-    """
-    return F.timestamp_add("SECOND", shift_seconds.cast("long"), ts)
-
-
-def date_shift_seconds(ts: Column, seconds: int) -> Column:
-    """Constant-interval shift (``date_shifting``; dcc_transforms.py:139)."""
-    return F.timestamp_add("SECOND", F.lit(int(seconds)), ts)
-
-
 def seconds_between(later: Column, earlier: Column) -> Column:
     """Whole seconds from ``earlier`` to ``later`` as a long.
 
@@ -72,11 +57,6 @@ def seconds_between(later: Column, earlier: Column) -> Column:
     seconds.
     """
     return (F.unix_timestamp(later) - F.unix_timestamp(earlier)).cast("long")
-
-
-def register_calendar_suite() -> None:
-    """Import-time hook: the calendar workload query lives here with the
-    rest of the date surface (F1-F9)."""
 
 
 from redcap_omop_etl_spark.sources.readers import Catalog  # noqa: E402

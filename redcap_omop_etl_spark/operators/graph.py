@@ -1225,6 +1225,30 @@ def sampling_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _cluster_state_from_bands(banded: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(components, hubs) from a band table ``(doc, band, bucket)``:
+    ``components(node, component)`` over the star-edge graph and
+    ``hubs(band, bucket, hub)`` = each LSH bucket's minimum doc id.
+
+    ONE (band, bucket) exchange feeds both: the per-bucket min is
+    attached by a keyed window and materialized once; hubs are the rows
+    where doc == min (exactly one per bucket — band rows are unique per
+    (doc, band)), star edges the rest (``minhash_star_edges``' star)."""
+    from pyspark.sql.window import Window
+
+    m = F.min("doc").over(Window.partitionBy("band", "bucket"))
+    withm = banded.withColumn("m", m).transform(materialize)
+    hubs = withm.filter(F.col("doc") == F.col("m")).select(
+        "band", "bucket", F.col("doc").alias("hub")
+    )
+    star = (
+        withm.filter(F.col("doc") != F.col("m"))
+        .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
+        .distinct()
+    )
+    return connected_components(star), hubs
+
+
 # Materialized-view memo for the MinHash cluster STATE — the component
 # table (doc -> cluster label) AND the per-(band, bucket) hub table,
 # both derived from ONE band-table materialization per (session, corpus,
@@ -1237,36 +1261,14 @@ def sampling_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_cluster_state(
     spark: SparkSession, sf_dir: str, family: str = "md5"
 ) -> tuple[DataFrame, DataFrame]:
-    """(components, hubs) for the corpus at ``sf_dir``: ``components
-    (node, component)`` over the star-edge graph and ``hubs(band,
-    bucket, hub)`` = each LSH bucket's minimum doc id. One band-table
-    pass feeds both (signature generation is the shared cost)."""
-    from pyspark.sql.window import Window
+    """(components, hubs) for the corpus at ``sf_dir``, memoized per
+    session. One band-table pass feeds both (signature generation is the
+    shared cost)."""
 
     def build():
         docs = Catalog(spark, sf_dir)["documents"]
-        # Round 13: ONE (band, bucket) exchange feeds both derived tables.
-        # The per-bucket min is attached by a keyed window and materialized
-        # once; hubs are the rows where doc == min (exactly one per bucket —
-        # band rows are unique per (doc, band)), star edges the rest. The
-        # former shape shuffled the band table twice (a groupBy-min for hubs
-        # plus the window for star edges) and ran the signature fold's
-        # checkpoint as a third materialization.
-        banded = minhash_band_table(docs, family=family)
-        m = F.min("doc").over(Window.partitionBy("band", "bucket"))
-        withm = banded.withColumn("m", m).transform(materialize)
-        hubs = (
-            withm.filter(F.col("doc") == F.col("m"))
-            .select("band", "bucket", F.col("doc").alias("hub"))
-            .transform(materialize, "lazy")
-        )
-        star = (
-            withm.filter(F.col("doc") != F.col("m"))
-            .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
-            .distinct()
-        )
-        comp = materialize(connected_components(star), "lazy")
-        return comp, hubs
+        comp, hubs = _cluster_state_from_bands(minhash_band_table(docs, family=family))
+        return materialize(comp, "lazy"), materialize(hubs, "lazy")
 
     return session_memo(spark, ("minhash_cluster_state", sf_dir, family), build)
 

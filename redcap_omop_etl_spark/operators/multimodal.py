@@ -41,17 +41,6 @@ try:  # real decoder, if the environment has one
 except ImportError:
     _HAS_PIL = False
 
-# Canonical multimodal schema fragment: payload + typed metadata.
-MEDIA_STRUCT = T.StructType(
-    [
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("media_type", T.StringType()),  # e.g. image/png, audio/wav
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

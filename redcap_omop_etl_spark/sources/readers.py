@@ -117,12 +117,6 @@ TABLES: dict[str, T.StructType] = {
     ),
 }
 
-# Small dimension tables that should always take the broadcast side of a
-# join (the Spark analog of the reference's hash-dict lookups,
-# redcap-etl.py:297, dcc_transforms.py:25-31).
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one catalog table from ``{sf_dir}/{name}.parquet``.
 

@@ -225,7 +225,10 @@ class RestEavDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Register the source on the session.
+    """Register the source on the session, once: a session that already
+    has ``rest_eav`` keeps it (re-registering pickles the class again and
+    makes Spark log a "replaced a previously registered data source"
+    warning on every run).
 
     The DataSource class is cloudpickled into separate Python worker
     processes that may not have this package on their import path (e.g. a
@@ -238,7 +241,9 @@ def register(spark) -> None:
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    spark.dataSource.register(RestEavDataSource)
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(RestEavDataSource.name()):
+        spark.dataSource.register(RestEavDataSource)
 
 
 @dataclass

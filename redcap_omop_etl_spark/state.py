@@ -23,6 +23,12 @@ construction:
   chunked sink's 2PC manifest). All filesystem access goes through the
   Hadoop FileSystem API, so the root may be local, HDFS or S3A.
 
+Each index family (near-dup clusters, term stats, SemDeDup) has ONE
+bootstrap and ONE tick here; the batch maintenance loop and every
+streaming applier (``streaming/retraction.py``) go through them, and
+index state is written nowhere but ``StateCatalog.save``. A tick's
+``meta`` rides in the manifest (the streams' applied-epoch ledger).
+
 At 100 TB the state tables are linear in corpus vocabulary/clusters —
 versions are cheap relative to the corpus; retention is an operational
 sweep of old ``v{N}`` dirs (``versions()`` gives the inventory).
@@ -170,26 +176,24 @@ CLUSTER_OP = "minhash_clusters"
 
 
 def cluster_state_bootstrap(
-    catalog: StateCatalog, docs: DataFrame, fp: str | None = None
+    catalog: StateCatalog,
+    docs: DataFrame,
+    fp: str | None = None,
+    meta: dict | None = None,
 ) -> tuple[str, int]:
-    """Build and commit v1 of the cluster state from a docs frame."""
-    from redcap_omop_etl_spark.operators.dedup import (
-        minhash_band_table,
-        minhash_star_edges,
-    )
-    from redcap_omop_etl_spark.operators.graph import connected_components
+    """Build and commit v1 of the cluster state from a docs frame (one
+    banding pass feeds both the components and the hubs)."""
+    from redcap_omop_etl_spark.operators.dedup import minhash_band_table
+    from redcap_omop_etl_spark.operators.graph import _cluster_state_from_bands
 
     spark = docs.sparkSession
     # fingerprint CONTENT (all columns), not just ids: two corpora with
     # identical doc_ids but different texts must not key the same state
     fp = fp or corpus_fingerprint(docs)
-    comp = connected_components(minhash_star_edges(docs))
-    hubs = (
-        minhash_band_table(docs)
-        .groupBy("band", "bucket")
-        .agg(F.min("doc").alias("hub"))
+    comp, hubs = _cluster_state_from_bands(minhash_band_table(docs))
+    v = catalog.save(
+        spark, CLUSTER_OP, fp, {"components": comp, "hubs": hubs}, meta=meta
     )
-    v = catalog.save(spark, CLUSTER_OP, fp, {"components": comp, "hubs": hubs})
     return fp, v
 
 
@@ -199,6 +203,7 @@ def cluster_state_tick(
     corpus: DataFrame,
     append_docs: DataFrame | None = None,
     delete_ids: DataFrame | None = None,
+    meta: dict | None = None,
 ) -> int:
     """One maintenance tick against the LATEST committed version:
     optional delete then optional append (the upsert composition — see
@@ -217,8 +222,8 @@ def cluster_state_tick(
     comp, hubs = frames["components"], frames["hubs"]
     if delete_ids is not None:
         comp, hubs = minhash_cluster_state_delete(comp, hubs, delete_ids, corpus)
-        comp = materialize(comp)
-        hubs = materialize(hubs)
+        if append_docs is not None:  # a delete-only tick pins in save
+            comp, hubs = materialize(comp), materialize(hubs)
     if append_docs is not None:
         # Checkpointed (round 13; was a persist): the append
         # transition consumes the batch band table three times (shared-
@@ -230,7 +235,9 @@ def cluster_state_tick(
         comp, hubs = minhash_cluster_state_append(
             comp, hubs, materialize(minhash_band_table(append_docs))
         )
-    return catalog.save(spark, CLUSTER_OP, fp, {"components": comp, "hubs": hubs})
+    return catalog.save(
+        spark, CLUSTER_OP, fp, {"components": comp, "hubs": hubs}, meta=meta
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -268,6 +275,7 @@ def term_stats_tick(
     corpus: DataFrame,
     append_docs: DataFrame | None = None,
     delete_ids: DataFrame | None = None,
+    meta: dict | None = None,
 ) -> int:
     """One maintenance tick: subtract the takedown batch's aggregate
     and/or add the ingest batch's (exact integer arithmetic — order
@@ -300,7 +308,12 @@ def term_stats_tick(
             .join(already, "doc_id", "left_anti")
         )
         batch = corpus.join(fresh, "doc_id", "left_semi")
-        deleted_out = already.unionByName(fresh)
+        # only ids that RESOLVED against the corpus enter the cumulative
+        # set: an id whose doc is not (yet) in the corpus subtracts
+        # nothing, and recording it would filter out a later retry that
+        # could actually apply — the stats would stay permanently
+        # unadjusted
+        deleted_out = already.unionByName(batch.select("doc_id").distinct())
         d = agg_of(batch, "df_d", "cf_d")
         out = out.join(d, "term", "left").select(
             "term",
@@ -320,7 +333,7 @@ def term_stats_tick(
         )
     out = out.filter(F.col("df") > 0)
     return catalog.save(
-        spark, TERM_OP, fp, {"terms": out, "deleted": deleted_out}
+        spark, TERM_OP, fp, {"terms": out, "deleted": deleted_out}, meta=meta
     )
 
 
@@ -363,6 +376,7 @@ def semdedup_tick(
     embeddings: DataFrame,
     append_vecs: DataFrame | None = None,
     delete_ids: DataFrame | None = None,
+    meta: dict | None = None,
 ) -> int:
     """One maintenance tick: optional delete (anchor-losing cells
     recompute from survivors) then optional append (guarded frozen-
@@ -384,8 +398,8 @@ def semdedup_tick(
     )
     if delete_ids is not None:
         flags, anchors = semdedup_state_delete(flags, anchors, delete_ids, embeddings)
-        flags = materialize(flags)
-        anchors = materialize(anchors)
+        if append_vecs is not None:  # a delete-only tick pins in save
+            flags, anchors = materialize(flags), materialize(anchors)
     if append_vecs is not None:
         flags, anchors = semdedup_state_append(flags, anchors, centroids, append_vecs)
     return catalog.save(
@@ -393,7 +407,16 @@ def semdedup_tick(
         SEMDEDUP_OP,
         fp,
         {"flags": flags, "anchors": anchors, "centroids": centroids},
+        meta=meta,
     )
+
+
+# op name -> its tick: the one implementation every applier drives
+TICKS = {
+    CLUSTER_OP: cluster_state_tick,
+    TERM_OP: term_stats_tick,
+    SEMDEDUP_OP: semdedup_tick,
+}
 
 
 def prune_versions(

@@ -14,6 +14,10 @@ Every aggregation is expressed with built-in ``window``/``session_window``
 functions so the streaming planner can use its incremental state-store
 operators — no custom state unless genuinely needed
 (``applyInPandasWithState`` shown in ``stateful_running_total``).
+
+The index-maintenance bridges (document ingest into the near-dup
+cluster state, takedown streams into every index) live in
+``streaming/retraction.py`` and commit through ``state.StateCatalog``.
 """
 
 from __future__ import annotations
@@ -21,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from redcap_omop_etl_spark.caching import materialize
 from redcap_omop_etl_spark.sources.readers import TABLES
 
 
@@ -491,91 +494,3 @@ def stream_to_upsert_sink(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def stream_to_cluster_index(
-    stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-):
-    """foreachBatch bridge into the incremental near-dup cluster
-    maintenance — the full production ingest shape: a stream of new
-    documents ``(doc_id, text)`` lands micro-batch by micro-batch, each
-    batch bands against the PERSISTED frozen hub/component state under
-    ``state_path`` and updates it through the batch-sized merge CC
-    (``graph.incremental_minhash_components``), so the on-disk cluster
-    table is continuously current without ever re-running components
-    over the corpus.
-
-    State layout: ``{state_path}/components`` (node, component) and
-    ``{state_path}/hubs`` (band, bucket, hub). Per batch:
-
-    - existing state: merge-CC the batch against it; base components
-      whose label changed remap through the rep map, batch docs that
-      gained an edge append, and batch-only buckets' minima extend the
-      hub table (existing hubs stay frozen — an edge to a hub's rep
-      preserves connectivity regardless of later smaller ids, per the
-      partition-level equivalence argument on
-      ``incremental_minhash_components``).
-    - first batch (no state yet): plain star + contraction bootstrap.
-
-    Batch ids must be DISJOINT from all earlier ids (the usual ingest
-    contract); by induction each tick leaves the state equal to a full
-    rebuild over everything ingested so far — pinned end-to-end by
-    ``tests/test_round10_ops.py::TestStreamClusterIndex`` (multi-batch
-    stream ≡ one-shot rebuild, including a cross-batch cluster merge).
-    State writes localCheckpoint first (Spark refuses to overwrite a
-    path it is still reading); production would swap in a manifest
-    commit like the chunked sink's 2PC."""
-    from pyspark.sql.window import Window
-
-    from redcap_omop_etl_spark.operators.dedup import minhash_band_table
-    from redcap_omop_etl_spark.operators.graph import (
-        connected_components,
-        incremental_minhash_components,
-    )
-
-    def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        banded = materialize(minhash_band_table(batch_df))
-        comp_dir = f"{state_path}/components"
-        # Hadoop FS existence check (not os.path) so an HDFS/S3 state_path
-        # is honored rather than silently re-bootstrapped on every batch.
-        hadoop = spark._jvm.org.apache.hadoop.fs
-        fs = hadoop.FileSystem.get(
-            hadoop.Path(comp_dir).toUri(), spark._jsc.hadoopConfiguration()
-        )
-        if fs.exists(hadoop.Path(comp_dir)):
-            from redcap_omop_etl_spark.operators.graph import (
-                minhash_cluster_state_append,
-            )
-
-            comp = spark.read.parquet(comp_dir)
-            hubs = spark.read.parquet(f"{state_path}/hubs")
-            comp_out, hubs_out = minhash_cluster_state_append(comp, hubs, banded)
-            comp_out = materialize(comp_out)
-            hubs_out = materialize(hubs_out)
-        else:
-            m = F.min("doc").over(Window.partitionBy("band", "bucket"))
-            star = (
-                banded.withColumn("m", m)
-                .filter(F.col("doc") != F.col("m"))
-                .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
-                .distinct()
-            )
-            comp_out = materialize(connected_components(star))
-            hubs_out = (
-                banded.groupBy("band", "bucket")
-                .agg(F.min("doc").alias("hub"))
-                .transform(materialize)
-            )
-        comp_out.write.mode("overwrite").parquet(comp_dir)
-        hubs_out.write.mode("overwrite").parquet(f"{state_path}/hubs")
-
-    writer = stream.writeStream.foreachBatch(handle_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    return writer.trigger(availableNow=True).start()

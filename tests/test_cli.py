@@ -121,8 +121,37 @@ def test_one_extract_scan_per_run(spark, ini_path, tmp_path, monkeypatch):
         )
     finally:
         monkeypatch.undo()
-        rest_source.register(spark)
+        # register() keeps a session's existing rest_eav, so put the real
+        # class back explicitly for later tests
+        spark.dataSource.register(rest_source.RestEavDataSource)
     assert summary["kept_rows"] == 250 * 8
     with open(READ_LOG) as fh:
         assert len(fh.read().splitlines()) == 3
     assert caching._OPERATOR_OWNED == []
+
+
+
+def test_source_registered_once_per_session(spark, ini_path, monkeypatch):
+    """Two CLI runs on one session register the rest_eav source once:
+    re-registering would pickle the class again and make Spark warn that
+    it replaced a registered data source on every run."""
+    from pyspark.sql import SparkSession
+
+    fresh = spark.newSession()  # shares the context, has no rest_eav yet
+    calls = []
+    real = type(spark.dataSource).register
+
+    def spy(self, cls):
+        calls.append(cls.name())
+        return real(self, cls)
+
+    monkeypatch.setattr(type(spark.dataSource), "register", spy)
+    # Spark resolves a new source's name against the thread's active session
+    jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+    jsession.setActiveSession(fresh._jsparkSession)
+    try:
+        for _ in range(2):
+            assert cli.main(["-c", ini_path, "-f"], spark=fresh)["kept_rows"] > 0
+    finally:
+        jsession.setActiveSession(spark._jsparkSession)
+    assert calls == ["rest_eav"]

@@ -468,77 +468,6 @@ class TestPpjoinAppend:
             assert n_prefix == expected, (doc, n_prefix, expected)
 
 
-class TestStreamClusterIndex:
-    """stream_to_cluster_index: micro-batched ingest into the persisted
-    cluster state must equal the one-shot rebuild over everything
-    ingested — including a cluster MERGE caused by a later batch
-    bridging two earlier families."""
-
-    def test_multibatch_stream_equals_rebuild(self, spark, tmp_path):
-        from redcap_omop_etl_spark.operators.dedup import minhash_star_edges
-        from redcap_omop_etl_spark.operators.graph import connected_components
-        from redcap_omop_etl_spark.streaming.windows import stream_to_cluster_index
-
-        fam_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-        fam_b = "one two three four five six seven eight nine ten eleven"
-        # the concatenation has J~0.43 to each family: whether it bridges
-        # them is an LSH coin flip — it exercises the merge code path,
-        # and the rebuild-equality assertion holds EITHER way (both
-        # sides see the same bucket graph)
-        bridge = fam_a + " " + fam_b
-        batches = [
-            # batch 0: two separate families + a singleton
-            [(1, fam_a), (2, fam_a), (10, fam_b), (11, fam_b),
-             (20, "a lone unrelated document with its very own words here")],
-            # batch 1: EXACT copy of a family-A member — identical shingle
-            # set => identical signature => co-buckets in every band:
-            # the cross-batch attach is deterministic
-            [(30, fam_a)],
-            # batch 2: the probabilistic bridge
-            [(40, bridge)],
-        ]
-        src = tmp_path / "incoming"
-        src.mkdir()
-        # one parquet part-file per batch so maxFilesPerTrigger=1 yields
-        # one micro-batch per ingest batch
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-                1
-            ).write.parquet(str(tmp_path / f"stage{i}"))
-            import glob, shutil
-
-            part = glob.glob(str(tmp_path / f"stage{i}" / "part-*.parquet"))[0]
-            shutil.copy(part, str(src / f"batch{i:03d}.parquet"))
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        state = str(tmp_path / "cluster_state")
-        q = stream_to_cluster_index(stream, state, str(tmp_path / "ckpt"))
-        q.awaitTermination(120)
-
-        got = {
-            (r["node"], r["component"])
-            for r in spark.read.parquet(state + "/components").collect()
-        }
-        all_docs = spark.createDataFrame(
-            [r for b in batches for r in b], "doc_id long, text string"
-        )
-        want = {
-            (r["node"], r["component"])
-            for r in connected_components(minhash_star_edges(all_docs)).collect()
-        }
-        assert got == want
-        lbl = dict(got)
-        # deterministic pins: the exact-copy attach joined family A
-        # across batches, and family B stayed internally clustered
-        assert lbl[2] == 1 and lbl[30] == 1
-        assert lbl[11] == lbl[10]
-        assert 20 not in lbl  # singleton never entered the edge graph
-
-
 class TestPpjoinAppendCapped:
     """dedup_prefix_jaccard_append_capped: batch additions can push a
     base prefix bucket over the cap, so BASE docs appear as newly-routed

@@ -8,8 +8,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
-
 
 class TestPreconditionGuards:
     def test_monotonic_guard_fires_and_passes(self, spark):
@@ -327,111 +325,6 @@ class TestUpsertMultiTick:
         }  # every live bucket has a hub
 
 
-class TestStateCatalog:
-    """The versioned persisted-state catalog (round-10 verdict stretch
-    item): commit-marker protocol, fingerprint stability, and the
-    restart guarantee — a maintenance tick in a FRESH PROCESS over
-    catalog state equals the rebuild."""
-
-    def test_fingerprint_order_free(self, spark):
-        from redcap_omop_etl_spark.state import corpus_fingerprint
-
-        df = spark.range(100).selectExpr("id as doc_id", "cast(id*7 as string) as text")
-        a = corpus_fingerprint(df)
-        b = corpus_fingerprint(df.orderBy(F.desc("doc_id")).repartition(7))
-        assert a == b
-        c = corpus_fingerprint(df.limit(99))
-        assert a != c
-
-    def test_uncommitted_version_invisible(self, spark, tmp_path):
-        from redcap_omop_etl_spark.state import StateCatalog
-
-        cat = StateCatalog(str(tmp_path / "state"))
-        df = spark.range(5).selectExpr("id as doc_id")
-        v = cat.save(spark, "toy", "fp1", {"a": df})
-        assert v == 1
-        # fake a torn write: a v2 dir with parquet but NO manifest
-        df.write.parquet(str(tmp_path / "state/toy/fp1/v2/a"))
-        assert cat.latest_version(spark, "toy", "fp1") == 1
-        assert cat.load(spark, "toy", "fp1")["a"].count() == 5
-        # round-12 fix: the next save re-targets v2, clears the torn
-        # (manifest-less == never committed) leftovers and COMMITS —
-        # crash replay recovers instead of wedging on errorifexists
-        v2 = cat.save(spark, "toy", "fp1", {"a": df.limit(3)})
-        assert v2 == 2
-        assert cat.latest_version(spark, "toy", "fp1") == 2
-        assert cat.load(spark, "toy", "fp1")["a"].count() == 3
-
-    def test_tick_in_fresh_process_equals_rebuild(self, spark, tmp_path):
-        """Session A bootstraps v1; a SUBPROCESS with its own fresh
-        SparkSession loads the catalog, applies a delete+append tick and
-        commits v2; session A then loads v2 and compares against the
-        one-shot rebuild over the net corpus."""
-        import os
-        import subprocess
-        import sys as _sys
-
-        from redcap_omop_etl_spark.operators.dedup import minhash_star_edges
-        from redcap_omop_etl_spark.operators.graph import connected_components
-        from redcap_omop_etl_spark.state import StateCatalog, cluster_state_bootstrap
-
-        fam_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-        fam_b = "one two three four five six seven eight nine ten eleven"
-        docs = spark.createDataFrame(
-            [(1, fam_a), (2, fam_a), (3, fam_a), (10, fam_b), (11, fam_b)],
-            "doc_id long, text string",
-        )
-        corpus_dir = str(tmp_path / "corpus")
-        docs.write.parquet(corpus_dir)
-        root = str(tmp_path / "state")
-        cat = StateCatalog(root)
-        fp, v1 = cluster_state_bootstrap(cat, docs)
-        assert v1 == 1
-
-        script = f"""
-import sys
-sys.path.insert(0, {repr(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))})
-from pyspark.sql import SparkSession, functions as F
-from redcap_omop_etl_spark.state import StateCatalog, cluster_state_tick
-spark = (SparkSession.builder.master("local[2]")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.ui.enabled", "false").getOrCreate())
-corpus = spark.read.parquet({repr(corpus_dir)})
-cat = StateCatalog({repr(root)})
-append = spark.createDataFrame(
-    [(100, {repr(fam_b)}), (101, {repr(fam_b)})], "doc_id long, text string")
-delete = spark.createDataFrame([(2,)], "doc_id long")
-v = cluster_state_tick(cat, {repr(fp)}, corpus, append_docs=append, delete_ids=delete)
-print("TICK_OK", v)
-"""
-        res = subprocess.run(
-            [_sys.executable, "-c", script],
-            capture_output=True,
-            text=True,
-            timeout=300,
-            cwd="/tmp",  # foreign cwd, like the driver
-        )
-        assert "TICK_OK 2" in res.stdout, res.stderr[-2000:]
-
-        got = {
-            (r["node"], r["component"])
-            for r in cat.load(spark, "minhash_clusters", fp, version=2)[
-                "components"
-            ].collect()
-        }
-        live = docs.filter(F.col("doc_id") != 2).unionByName(
-            spark.createDataFrame(
-                [(100, fam_b), (101, fam_b)], "doc_id long, text string"
-            )
-        )
-        want = {
-            (r["node"], r["component"])
-            for r in connected_components(minhash_star_edges(live)).collect()
-        }
-        assert got == want
-
-
 class TestUpsertFamily:
     """The round-11 upsert column of the maintenance matrix: every
     index family composes delete + append in one tick."""
@@ -526,97 +419,3 @@ class TestUpsertFamily:
             for r in retrieval_index_upsert(spark, sf_dir).collect()
         }
         assert got == want
-
-
-class TestStateCatalogFamilies:
-    """Catalog coverage for the remaining state families: term stats
-    and SemDeDup (flags + anchors + frozen centroids ride in the
-    version). The transition correctness is pinned by the registered
-    upsert oracles; these pin the catalog plumbing — versioning,
-    frame-roundtrip fidelity, and tick == expected over catalog state."""
-
-    def test_term_stats_tick_equals_rebuild(self, spark, tmp_path):
-        from redcap_omop_etl_spark.operators.retrieval import _tokens
-        from redcap_omop_etl_spark.sources.readers import Catalog
-        from redcap_omop_etl_spark.state import (
-            StateCatalog,
-            term_stats_bootstrap,
-            term_stats_tick,
-        )
-
-        docs = Catalog(spark, SF_SMOKE)["documents"].select("doc_id", "text")
-        cat = StateCatalog(str(tmp_path / "state"))
-        fp, v1 = term_stats_bootstrap(cat, docs)
-        assert v1 == 1
-        dele = spark.createDataFrame([(i,) for i in range(0, 40, 3)], "doc_id long")
-        add = spark.createDataFrame(
-            [(77_000_000, "zz new doc text alpha beta"),
-             (77_000_001, "zz new doc text gamma delta")],
-            "doc_id long, text string",
-        )
-        v2 = term_stats_tick(cat, fp, docs, append_docs=add, delete_ids=dele)
-        assert v2 == 2
-        net = docs.join(dele, "doc_id", "left_anti").unionByName(add)
-        tf = _tokens(net).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-        want = {
-            (r["term"], r["df"], r["cf"])
-            for r in tf.groupBy("term")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("df"),
-                F.sum("tf").cast("long").alias("cf"),
-            )
-            .collect()
-        }
-        got = {
-            (r["term"], r["df"], r["cf"])
-            for r in cat.load(spark, "term_stats", fp)["terms"].collect()
-        }
-        assert got == want
-        # v1 still loadable (versions never clobbered)
-        assert cat.load(spark, "term_stats", fp, version=1)["terms"].count() > 0
-
-    def test_semdedup_tick_matches_inmemory_transition(self, spark, tmp_path):
-        from redcap_omop_etl_spark.operators.similarity import (
-            ivf_build,
-            semdedup_anchors_memo,
-            semdedup_flags_memo,
-            semdedup_state_append,
-            semdedup_state_delete,
-        )
-        from redcap_omop_etl_spark.sources.readers import Catalog
-        from redcap_omop_etl_spark.state import (
-            StateCatalog,
-            semdedup_bootstrap,
-            semdedup_tick,
-        )
-
-        emb = Catalog(spark, SF_SMOKE)["embeddings"]
-        flags = semdedup_flags_memo(spark, SF_SMOKE)
-        anchors = semdedup_anchors_memo(spark, SF_SMOKE)
-        _a, centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=SF_SMOKE)
-        cat = StateCatalog(str(tmp_path / "state"))
-        fp = "testcorpus"
-        assert semdedup_bootstrap(cat, flags, anchors, centroids, fp) == 1
-        dele = spark.createDataFrame([(2,), (32,)], "vec_id long")  # anchors
-        add = emb.filter(F.col("vec_id") % 50 == 13).select(
-            (F.col("vec_id") + F.lit(20_000_000_000)).alias("vec_id"), "embedding"
-        )
-        v2 = semdedup_tick(cat, fp, emb, append_vecs=add, delete_ids=dele)
-        assert v2 == 2
-        f1, a1 = semdedup_state_delete(flags, anchors, dele, emb)
-        f2, _a2 = semdedup_state_append(
-            f1.localCheckpoint(eager=True),
-            a1.localCheckpoint(eager=True),
-            centroids,
-            add,
-        )
-        want = {
-            (r["vec_id"], r["cluster"], r["n_dup_anchors"], r["is_kept"])
-            for r in f2.collect()
-        }
-        got = {
-            (r["vec_id"], r["cluster"], r["n_dup_anchors"], r["is_kept"])
-            for r in cat.load(spark, "semdedup", fp, version=2)["flags"].collect()
-        }
-        assert got == want
-        assert not ({r[0] for r in got} & {2, 32})

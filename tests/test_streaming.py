@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from redcap_omop_etl_spark.sources.readers import Catalog
 from redcap_omop_etl_spark.streaming import windows as sw
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, term_stats_rebuild
 
 
 def _run_stream_to_memory(spark, stream_df, name, output_mode):
@@ -29,6 +29,11 @@ def _run_stream_to_memory(spark, stream_df, name, output_mode):
 
 def _norm(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _terms(frames) -> set[tuple[str, int, int]]:
+    """The (term, df, cf) rows of a loaded term-stats version."""
+    return {(r["term"], r["df"], r["cf"]) for r in frames["terms"].collect()}
 
 
 @pytest.fixture(scope="module")
@@ -719,7 +724,7 @@ class TestLateDataReadmission:
 
 class TestStreamToDeleteTicks:
     """The retraction bridge (round-10 verdict item 3): a multi-batch
-    takedown stream driving the persisted delete ticks must leave every
+    takedown stream driving each family's catalog tick must leave every
     index state equal to the one-shot rebuild over the survivors.
     (The single-tick ≡ rebuild legs are separately value-checked
     cross-engine by the registered delete queries' DuckDB oracles; this
@@ -749,10 +754,14 @@ class TestStreamToDeleteTicks:
             minhash_star_edges,
         )
         from redcap_omop_etl_spark.operators.graph import connected_components
+        from redcap_omop_etl_spark.state import (
+            CLUSTER_OP,
+            StateCatalog,
+            cluster_state_bootstrap,
+        )
         from redcap_omop_etl_spark.streaming.retraction import (
-            cluster_delete_applier,
+            catalog_delete_applier,
             stream_to_delete_ticks,
-            write_cluster_state,
         )
 
         fam_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -766,15 +775,17 @@ class TestStreamToDeleteTicks:
             ],
             "doc_id long, text string",
         )
-        state = str(tmp_path / "cstate")
-        write_cluster_state(docs, state)
+        cat = StateCatalog(str(tmp_path / "cstate"))
+        fp, _v1 = cluster_state_bootstrap(cat, docs)
         # batch 0 deletes a family member (label may move); batch 1
         # deletes the bridge (a merged component may SPLIT); batch 2
         # deletes the singleton (touches nothing)
         batches = [[1], [30], [20]]
         stream = self._id_stream(spark, tmp_path, batches)
         q = stream_to_delete_ticks(
-            stream, [cluster_delete_applier(state, docs)], str(tmp_path / "dck")
+            stream,
+            [catalog_delete_applier(cat, CLUSTER_OP, fp, docs)],
+            str(tmp_path / "dck"),
         )
         q.awaitTermination(180)
 
@@ -783,9 +794,9 @@ class TestStreamToDeleteTicks:
             "doc_id",
             "left_anti",
         )
+        state = cat.load(spark, CLUSTER_OP, fp)
         got_comp = {
-            (r["node"], r["component"])
-            for r in spark.read.parquet(state + "/components").collect()
+            (r["node"], r["component"]) for r in state["components"].collect()
         }
         want_comp = {
             (r["node"], r["component"])
@@ -793,8 +804,7 @@ class TestStreamToDeleteTicks:
         }
         assert got_comp == want_comp
         got_hubs = {
-            (r["band"], r["bucket"], r["hub"])
-            for r in spark.read.parquet(state + "/hubs").collect()
+            (r["band"], r["bucket"], r["hub"]) for r in state["hubs"].collect()
         }
         want_hubs = {
             (r["band"], r["bucket"], r["hub"])
@@ -806,20 +816,25 @@ class TestStreamToDeleteTicks:
         assert got_hubs == want_hubs
 
     def test_term_stats_multibatch_equals_rebuild(self, spark, tmp_path):
-        from redcap_omop_etl_spark.operators.retrieval import _tokens
+        from redcap_omop_etl_spark.state import (
+            TERM_OP,
+            StateCatalog,
+            term_stats_bootstrap,
+        )
         from redcap_omop_etl_spark.streaming.retraction import (
+            catalog_delete_applier,
             stream_to_delete_ticks,
-            term_stats_delete_applier,
-            write_term_stats_state,
         )
 
         docs = Catalog(spark, SF_SMOKE)["documents"]
-        state = str(tmp_path / "tstate")
-        write_term_stats_state(docs, state)
+        cat = StateCatalog(str(tmp_path / "tstate"))
+        fp, _v1 = term_stats_bootstrap(cat, docs)
         batches = [[i for i in range(0, 60, 7)], [i for i in range(60, 120, 11)]]
         stream = self._id_stream(spark, tmp_path, batches)
         q = stream_to_delete_ticks(
-            stream, [term_stats_delete_applier(state, docs)], str(tmp_path / "tck")
+            stream,
+            [catalog_delete_applier(cat, TERM_OP, fp, docs)],
+            str(tmp_path / "tck"),
         )
         q.awaitTermination(180)
 
@@ -828,44 +843,36 @@ class TestStreamToDeleteTicks:
             "doc_id",
             "left_anti",
         )
-        tf = _tokens(survivors).groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-        want = {
-            (r["term"], r["df"], r["cf"])
-            for r in tf.groupBy("term")
-            .agg(F.count(F.lit(1)).cast("long").alias("df"), F.sum("tf").cast("long").alias("cf"))
-            .collect()
-        }
-        got = {
-            (r["term"], r["df"], r["cf"])
-            for r in spark.read.parquet(state + "/terms").collect()
-        }
-        assert got == want
+        assert _terms(cat.load(spark, TERM_OP, fp)) == term_stats_rebuild(survivors)
 
     def test_semdedup_multibatch_equals_oneshot(self, spark, tmp_path):
         from redcap_omop_etl_spark.operators.similarity import (
+            ivf_build,
             semdedup_anchors_memo,
             semdedup_flags_memo,
         )
+        from redcap_omop_etl_spark.state import (
+            SEMDEDUP_OP,
+            StateCatalog,
+            semdedup_bootstrap,
+        )
         from redcap_omop_etl_spark.streaming.retraction import (
-            semdedup_delete_applier,
+            catalog_delete_applier,
             stream_to_delete_ticks,
-            write_semdedup_state,
         )
 
         emb = Catalog(spark, SF_SMOKE)["embeddings"]
         flags = semdedup_flags_memo(spark, SF_SMOKE)
         anchors = semdedup_anchors_memo(spark, SF_SMOKE)
-        state = str(tmp_path / "sstate")
-        oneshot = str(tmp_path / "sstate_oneshot")
-        write_semdedup_state(flags, anchors, state)
-        write_semdedup_state(flags, anchors, oneshot)
+        _a, centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=SF_SMOKE)
+        cat = StateCatalog(str(tmp_path / "sstate"))
+        semdedup_bootstrap(cat, flags, anchors, centroids, "stream")
+        semdedup_bootstrap(cat, flags, anchors, centroids, "oneshot")
         # batches deliberately include anchors (most low-id vecs are) so
         # the anchor-promotion path runs across batch boundaries
         batches = [[2, 32, 62], [92, 122]]
         stream = self._id_stream(spark, tmp_path, batches, col="vec_id")
-        applier = semdedup_delete_applier(state, emb)
+        applier = catalog_delete_applier(cat, SEMDEDUP_OP, "stream", emb)
         q = stream_to_delete_ticks(stream, [applier], str(tmp_path / "sck"))
         q.awaitTermination(180)
 
@@ -874,62 +881,63 @@ class TestStreamToDeleteTicks:
         union = spark.createDataFrame(
             [(x,) for b in batches for x in b], "vec_id long"
         )
-        semdedup_delete_applier(oneshot, emb)(spark, union)
+        catalog_delete_applier(cat, SEMDEDUP_OP, "oneshot", emb)(spark, union)
 
-        def snap(p):
+        def snap(fp):
             return {
                 (r["vec_id"], r["cluster"], r["n_dup_anchors"], r["is_kept"])
-                for r in spark.read.parquet(p + "/flags").collect()
+                for r in cat.load(spark, SEMDEDUP_OP, fp)["flags"].collect()
             }
 
-        got, want = snap(state), snap(oneshot)
+        got, want = snap("stream"), snap("oneshot")
         # multi-batch == one-shot requires tick COMPOSABILITY: batch 2's
         # touched-set derives from batch 1's already-updated anchors
         assert got == want
         deleted = {x for b in batches for x in b}
         assert not ({r[0] for r in got} & deleted)
-        got_anchor_cells = {
-            r["cluster"] for r in spark.read.parquet(state + "/anchors").collect()
-        }
-        want_anchor_cells = {
-            r["cluster"] for r in spark.read.parquet(oneshot + "/anchors").collect()
-        }
+        got_anchor_cells, want_anchor_cells = (
+            {r["cluster"] for r in cat.load(spark, SEMDEDUP_OP, fp)["anchors"].collect()}
+            for fp in ("stream", "oneshot")
+        )
         assert got_anchor_cells == want_anchor_cells
 
     def test_one_stream_four_indexes(self, spark, tmp_path):
         """The full GDPR shape: ONE takedown id stream fans out to all
         four index families in each micro-batch — cluster state, term
         stats, SemDeDup flags, and the persisted IVF-PQ ANN index."""
-        from redcap_omop_etl_spark.operators.retrieval import _tokens
         from redcap_omop_etl_spark.operators.similarity import (
             ivf_build,
             ivfpq_write_index,
             semdedup_anchors_memo,
             semdedup_flags_memo,
         )
+        from redcap_omop_etl_spark.state import (
+            CLUSTER_OP,
+            SEMDEDUP_OP,
+            TERM_OP,
+            StateCatalog,
+            cluster_state_bootstrap,
+            semdedup_bootstrap,
+            term_stats_bootstrap,
+        )
         from redcap_omop_etl_spark.streaming.retraction import (
-            cluster_delete_applier,
+            catalog_delete_applier,
             ivfpq_delete_applier,
-            semdedup_delete_applier,
             stream_to_delete_ticks,
-            term_stats_delete_applier,
-            write_cluster_state,
-            write_semdedup_state,
-            write_term_stats_state,
         )
 
         docs = Catalog(spark, SF_SMOKE)["documents"]
         emb = Catalog(spark, SF_SMOKE)["embeddings"]
-        cstate = str(tmp_path / "c")
-        tstate = str(tmp_path / "t")
-        sstate = str(tmp_path / "s")
+        cat = StateCatalog(str(tmp_path / "state"))
         ipath = str(tmp_path / "ivfpq")
-        write_cluster_state(docs, cstate)
-        write_term_stats_state(docs, tstate)
-        write_semdedup_state(
+        cfp, _v = cluster_state_bootstrap(cat, docs)
+        tfp, _v = term_stats_bootstrap(cat, docs)
+        semdedup_bootstrap(
+            cat,
             semdedup_flags_memo(spark, SF_SMOKE),
             semdedup_anchors_memo(spark, SF_SMOKE),
-            sstate,
+            ivf_build(emb, n_clusters=16, n_iters=2, memo_key=SF_SMOKE)[1],
+            "embeddings",
         )
         assignments, centroids = ivf_build(emb, n_clusters=8, n_iters=2)
         ivfpq_write_index(emb, assignments, centroids, ipath)
@@ -941,9 +949,9 @@ class TestStreamToDeleteTicks:
         q = stream_to_delete_ticks(
             stream,
             [
-                cluster_delete_applier(cstate, docs),
-                term_stats_delete_applier(tstate, docs),
-                semdedup_delete_applier(sstate, emb),
+                catalog_delete_applier(cat, CLUSTER_OP, cfp, docs),
+                catalog_delete_applier(cat, TERM_OP, tfp, docs),
+                catalog_delete_applier(cat, SEMDEDUP_OP, "embeddings", emb),
                 ivfpq_delete_applier(ipath),
             ],
             str(tmp_path / "gdprck"),
@@ -952,11 +960,12 @@ class TestStreamToDeleteTicks:
 
         gone = {x for b in batches for x in b}
         comp_nodes = {
-            r["node"] for r in spark.read.parquet(cstate + "/components").collect()
+            r["node"] for r in cat.load(spark, CLUSTER_OP, cfp)["components"].collect()
         }
         assert not (comp_nodes & gone)
         flags_ids = {
-            r["vec_id"] for r in spark.read.parquet(sstate + "/flags").collect()
+            r["vec_id"]
+            for r in cat.load(spark, SEMDEDUP_OP, "embeddings")["flags"].collect()
         }
         assert not (flags_ids & gone)
         idx_ids = {
@@ -972,81 +981,39 @@ class TestStreamToDeleteTicks:
         )
         # term stats equal the survivor rebuild
         survivors = docs.filter(~F.col("doc_id").isin(list(gone)))
-        tf = _tokens(survivors).groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-        want_terms = {
-            (r["term"], r["df"], r["cf"])
-            for r in tf.groupBy("term")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("df"),
-                F.sum("tf").cast("long").alias("cf"),
-            )
-            .collect()
-        }
-        got_terms = {
-            (r["term"], r["df"], r["cf"])
-            for r in spark.read.parquet(tstate + "/terms").collect()
-        }
-        assert got_terms == want_terms
+        assert _terms(cat.load(spark, TERM_OP, tfp)) == term_stats_rebuild(survivors)
 
     def test_catalog_appliers_are_exactly_once(self, spark, tmp_path):
-        """The crash-replay story the raw-directory appliers only
-        document: catalog-backed appliers record the epoch in the
-        committed manifest, so a replayed micro-batch no-ops — pinned
-        hardest for term stats, where double subtraction is silently
-        wrong rather than merely wasteful."""
-        from redcap_omop_etl_spark.operators.retrieval import _tokens
+        """Crash replay: the applier records the epoch in the committed
+        manifest, so a replayed micro-batch no-ops — pinned hardest for
+        term stats, where double subtraction is silently wrong rather
+        than merely wasteful."""
         from redcap_omop_etl_spark.state import (
             StateCatalog,
             term_stats_bootstrap,
         )
-        from redcap_omop_etl_spark.streaming.retraction import (
-            catalog_term_stats_delete_applier,
-        )
+        from redcap_omop_etl_spark.streaming.retraction import catalog_delete_applier
 
         docs = Catalog(spark, SF_SMOKE)["documents"].select("doc_id", "text")
         cat = StateCatalog(str(tmp_path / "state"))
         fp, v1 = term_stats_bootstrap(cat, docs)
-        ap = catalog_term_stats_delete_applier(cat, fp, docs)
+        ap = catalog_delete_applier(cat, "term_stats", fp, docs)
         dele = spark.createDataFrame([(i,) for i in range(0, 30, 4)], "doc_id long")
 
         ap(spark, dele, epoch=7)
         assert cat.latest_version(spark, "term_stats", fp) == 2
-        snap = {
-            (r["term"], r["df"], r["cf"])
-            for r in cat.load(spark, "term_stats", fp)["terms"].collect()
-        }
+        snap = _terms(cat.load(spark, "term_stats", fp))
         # crash-replay of the SAME epoch: no new version, state unchanged
         ap(spark, dele, epoch=7)
         assert cat.latest_version(spark, "term_stats", fp) == 2
-        assert snap == {
-            (r["term"], r["df"], r["cf"])
-            for r in cat.load(spark, "term_stats", fp)["terms"].collect()
-        }
+        assert snap == _terms(cat.load(spark, "term_stats", fp))
         # a LATER epoch applies (and equals the two-batch rebuild)
         dele2 = spark.createDataFrame([(i,) for i in range(1, 30, 9)], "doc_id long")
         ap(spark, dele2, epoch=8)
         assert cat.latest_version(spark, "term_stats", fp) == 3
         gone = dele.unionByName(dele2)
         survivors = docs.join(gone, "doc_id", "left_anti")
-        tf = _tokens(survivors).groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-        want = {
-            (r["term"], r["df"], r["cf"])
-            for r in tf.groupBy("term")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("df"),
-                F.sum("tf").cast("long").alias("cf"),
-            )
-            .collect()
-        }
-        got = {
-            (r["term"], r["df"], r["cf"])
-            for r in cat.load(spark, "term_stats", fp)["terms"].collect()
-        }
-        assert got == want
+        assert _terms(cat.load(spark, "term_stats", fp)) == term_stats_rebuild(survivors)
 
     def test_catalog_cluster_applier_through_stream(self, spark, tmp_path):
         """The bridge drives a catalog-backed applier end-to-end:
@@ -1056,7 +1023,7 @@ class TestStreamToDeleteTicks:
         from redcap_omop_etl_spark.operators.graph import connected_components
         from redcap_omop_etl_spark.state import StateCatalog, cluster_state_bootstrap
         from redcap_omop_etl_spark.streaming.retraction import (
-            catalog_cluster_delete_applier,
+            catalog_delete_applier,
             stream_to_delete_ticks,
         )
 
@@ -1072,7 +1039,7 @@ class TestStreamToDeleteTicks:
         stream = self._id_stream(spark, tmp_path, batches)
         q = stream_to_delete_ticks(
             stream,
-            [catalog_cluster_delete_applier(cat, fp, docs)],
+            [catalog_delete_applier(cat, "minhash_clusters", fp, docs)],
             str(tmp_path / "cck"),
         )
         q.awaitTermination(180)
@@ -1100,8 +1067,8 @@ class TestStreamToDeleteTicks:
         from redcap_omop_etl_spark.operators.graph import connected_components
         from redcap_omop_etl_spark.state import StateCatalog, prune_versions
         from redcap_omop_etl_spark.streaming.retraction import (
-            catalog_cluster_delete_applier,
-            stream_to_cluster_index_catalog,
+            catalog_delete_applier,
+            stream_to_cluster_index,
             stream_to_delete_ticks,
         )
 
@@ -1132,7 +1099,7 @@ class TestStreamToDeleteTicks:
         )
         cat = StateCatalog(str(tmp_path / "vstate"))
         fp = "stream-corpus"
-        q = stream_to_cluster_index_catalog(
+        q = stream_to_cluster_index(
             ingest, cat, fp, str(tmp_path / "ick")
         )
         q.awaitTermination(180)
@@ -1144,7 +1111,7 @@ class TestStreamToDeleteTicks:
         dstream = self._id_stream(spark, tmp_path, [[2]])
         q2 = stream_to_delete_ticks(
             dstream,
-            [catalog_cluster_delete_applier(cat, fp, all_docs)],
+            [catalog_delete_applier(cat, "minhash_clusters", fp, all_docs)],
             str(tmp_path / "dck2"),
         )
         q2.awaitTermination(180)
@@ -1180,7 +1147,7 @@ class TestStreamToDeleteTicks:
         from redcap_omop_etl_spark.state import StateCatalog
         from redcap_omop_etl_spark.streaming.retraction import (
             catalog_cluster_append_applier,
-            catalog_cluster_delete_applier,
+            catalog_delete_applier,
         )
 
         fam = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -1195,7 +1162,7 @@ class TestStreamToDeleteTicks:
         # takedown stream's first micro-batch: ALSO epoch 0 (independent
         # checkpoint) — must apply, not no-op
         dele = spark.createDataFrame([(2,)], "doc_id long")
-        catalog_cluster_delete_applier(cat, fp, docs)(spark, dele, epoch=0)
+        catalog_delete_applier(cat, "minhash_clusters", fp, docs)(spark, dele, epoch=0)
         assert cat.latest_version(spark, "minhash_clusters", fp) == 2
         survivors = docs.filter(F.col("doc_id") != 2)
         got = {
@@ -1208,18 +1175,15 @@ class TestStreamToDeleteTicks:
         }
         assert got == want
         # and the delete stream's OWN replay of epoch 0 still no-ops
-        catalog_cluster_delete_applier(cat, fp, docs)(spark, dele, epoch=0)
+        catalog_delete_applier(cat, "minhash_clusters", fp, docs)(spark, dele, epoch=0)
         assert cat.latest_version(spark, "minhash_clusters", fp) == 2
 
     def test_unresolved_takedown_ids_can_retry(self, spark, tmp_path):
         """Round-12 fix: a takedown id with no corpus row subtracts
         nothing and must NOT enter the cumulative deleted set — a later
         retry (corpus now has the doc) has to actually apply."""
-        from redcap_omop_etl_spark.operators.retrieval import _tokens
         from redcap_omop_etl_spark.state import StateCatalog, term_stats_bootstrap
-        from redcap_omop_etl_spark.streaming.retraction import (
-            catalog_term_stats_delete_applier,
-        )
+        from redcap_omop_etl_spark.streaming.retraction import catalog_delete_applier
 
         full = spark.createDataFrame(
             [(1, "aa bb cc"), (2, "bb cc dd"), (3, "cc dd ee")],
@@ -1230,32 +1194,16 @@ class TestStreamToDeleteTicks:
         # first attempt resolves against a PARTIAL corpus view missing doc 3
         partial = full.filter(F.col("doc_id") != 3)
         dele = spark.createDataFrame([(3,)], "doc_id long")
-        catalog_term_stats_delete_applier(cat, fp, partial)(spark, dele, epoch=0)
+        catalog_delete_applier(cat, "term_stats", fp, partial)(spark, dele, epoch=0)
         unresolved = {
             r["doc_id"]
             for r in cat.load(spark, "term_stats", fp)["deleted"].collect()
         }
         assert 3 not in unresolved  # unmatched id stays retryable
         # retry with the full corpus available: the subtraction applies
-        catalog_term_stats_delete_applier(cat, fp, full)(spark, dele, epoch=1)
+        catalog_delete_applier(cat, "term_stats", fp, full)(spark, dele, epoch=1)
         survivors = full.filter(F.col("doc_id") != 3)
-        tf = _tokens(survivors).groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-        want = {
-            (r["term"], r["df"], r["cf"])
-            for r in tf.groupBy("term")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("df"),
-                F.sum("tf").cast("long").alias("cf"),
-            )
-            .collect()
-        }
-        got = {
-            (r["term"], r["df"], r["cf"])
-            for r in cat.load(spark, "term_stats", fp)["terms"].collect()
-        }
-        assert got == want
+        assert _terms(cat.load(spark, "term_stats", fp)) == term_stats_rebuild(survivors)
         assert {
             r["doc_id"]
             for r in cat.load(spark, "term_stats", fp)["deleted"].collect()
