@@ -492,18 +492,21 @@ def shingle_hashes(
     family, banding, star edges, components — is byte-identical between
     families.
     """
-    sh = shingles(F.col(text_col), n)
+    hashed = _shingle_hash_array(F.col(text_col), n, family)
+    return fan_out(df).select(F.col(id_col).alias("doc"), hashed.alias("hashes"))
+
+
+def _shingle_hash_array(text: Column, n: int, family: str = "md5") -> Column:
+    """Distinct 31-bit hashes of ``text``'s word n-gram shingles (the
+    per-row expression behind ``shingle_hashes``)."""
+    sh = shingles(text, n)
     if family == "xxh":
-        hashed = F.array_distinct(
+        return F.array_distinct(
             F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE_P)))
         )
-    else:
-        # portable_hash60 is non-negative (< 2^60), so plain % p is already
-        # a pmod — and the reduction replays exactly in the DuckDB oracle.
-        hashed = F.array_distinct(
-            F.transform(sh, lambda s: portable_hash60(s) % _MERSENNE_P)
-        )
-    return fan_out(df).select(F.col(id_col).alias("doc"), hashed.alias("hashes"))
+    # portable_hash60 is non-negative (< 2^60), so plain % p is already
+    # a pmod — and the reduction replays exactly in the DuckDB oracle.
+    return F.array_distinct(F.transform(sh, lambda s: portable_hash60(s) % _MERSENNE_P))
 
 
 def _minhash_sig(hashes: Column, num_hashes: int) -> Column:
@@ -559,7 +562,6 @@ def minhash_lsh_pairs(
     precision is exact and recall is the LSH S-curve. This is the plan
     that survives 100 TB: candidates ∝ docs × bands, never docs².
     """
-    rows = num_hashes // bands
     # No persists here (round-12 reversal, measured 3.2s vs 3.7s
     # min-of-3 in-process alternation at sf0.1): the banding self-join's
     # two sides and the verify join's two sides are pairwise IDENTICAL
@@ -569,28 +571,7 @@ def minhash_lsh_pairs(
     # per-doc hash-array MEMORY_AND_DISK rows (the widest in the repo).
     base = shingle_hashes(df, n, text_col, id_col)
     sigs = base.select("doc", _minhash_sig(F.col("hashes"), num_hashes).alias("sig"))
-    banded = (
-        sigs.select(
-            "doc",
-            F.explode(
-                F.array(
-                    *[
-                        # Bucket key = the band's raw signature slice (a
-                        # short "_"-joined string) so the banding replays
-                        # verbatim in the DuckDB oracle; a fixed-width
-                        # rehash (xxhash64) of it is an optional shuffle-
-                        # width optimization, not a semantic change.
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.concat_ws("_", *[F.element_at("sig", bi * rows + r + 1) for r in range(rows)]).alias("bucket"),
-                        )
-                        for bi in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        )
-        .select("doc", "bk.band", "bk.bucket")
-    )
+    banded = minhash_band_rows(sigs, num_hashes, bands)
     # docs x bands rows on both sides — corpus-scaling; pinned sort-merge
     cand = (
         banded.alias("x")
@@ -622,6 +603,35 @@ def minhash_lsh_pairs(
     return verified.select("d1", "d2", F.round("jaccard", 6).alias("jaccard"))
 
 
+def minhash_band_rows(sigs: DataFrame, num_hashes: int = 64, bands: int = 16) -> DataFrame:
+    """Band rows ``(doc, band, bucket)`` of a signature frame
+    ``(doc, sig)``: one row per (doc, band), the bucket key being the
+    band's raw signature slice joined with "_" (a short string, so the
+    banding replays verbatim in the DuckDB oracle; a fixed-width rehash
+    of it would be a shuffle-width optimization, not a semantic change).
+    Zero shuffles: the explode is docs × bands."""
+    rows = num_hashes // bands
+    return (
+        sigs.select(
+            "doc",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(bi).alias("band"),
+                            F.concat_ws(
+                                "_", *[F.element_at("sig", bi * rows + r + 1) for r in range(rows)]
+                            ).alias("bucket"),
+                        )
+                        for bi in range(bands)
+                    ]
+                )
+            ).alias("bk"),
+        )
+        .select("doc", "bk.band", "bk.bucket")
+    )
+
+
 def minhash_band_table(
     df: DataFrame,
     num_hashes: int = 64,
@@ -632,37 +642,42 @@ def minhash_band_table(
     family: str = "md5",
 ) -> DataFrame:
     """LSH band table ``(doc, band, bucket)`` — the shared prefix of
-    pair-emitting LSH (``minhash_lsh_pairs``) and the bounded-output
-    cluster path (``minhash_star_edges``). Zero shuffles: signatures fold
-    per-row over the hashed-shingle array; the explode is docs × bands.
-    Same deterministic (a·h+b) mod p family and raw-slice bucket keys as
-    ``minhash_lsh_pairs``, so the banding replays verbatim in DuckDB
-    (md5 family; the ``"xxh"`` family swaps only the per-shingle hash —
-    see ``shingle_hashes``)."""
-    rows = num_hashes // bands
+    pair-emitting LSH (``minhash_lsh_pairs``) and every cluster path
+    (``minhash_star_edges`` and the cluster-state transitions). Same
+    deterministic (a·h+b) mod p family and band rows as
+    ``minhash_lsh_pairs`` (md5 family; the ``"xxh"`` family swaps only
+    the per-shingle hash — see ``shingle_hashes``)."""
     sigs = minhash_signatures(df, num_hashes, n, text_col, id_col, family=family)
+    return minhash_band_rows(sigs, num_hashes, bands)
+
+
+def bucket_min(banded: DataFrame) -> DataFrame:
+    """A band table with ``m`` = its (band, bucket)'s minimum doc
+    attached: ONE keyed window exchange, the single input of both the
+    star edges (``bucket_star``) and the hub table (``bucket_hubs``)."""
+    from pyspark.sql.window import Window
+
+    return banded.withColumn("m", F.min("doc").over(Window.partitionBy("band", "bucket")))
+
+
+def bucket_star(with_min: DataFrame) -> DataFrame:
+    """Star edges ``(d1, d2)`` of a ``bucket_min`` frame: every bucket
+    member links to the bucket's minimum doc. The star's connected
+    components equal the bucket co-occurrence graph's (any two members
+    of one bucket are linked through its minimum)."""
     return (
-        sigs.select(
-            "doc",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.concat_ws(
-                                "_",
-                                *[
-                                    F.element_at("sig", bi * rows + r + 1)
-                                    for r in range(rows)
-                                ],
-                            ).alias("bucket"),
-                        )
-                        for bi in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        )
-        .select("doc", "bk.band", "bk.bucket")
+        with_min.filter(F.col("doc") != F.col("m"))
+        .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
+        .distinct()
+    )
+
+
+def bucket_hubs(with_min: DataFrame) -> DataFrame:
+    """Hub table ``(band, bucket, hub)`` of a ``bucket_min`` frame: the
+    rows where doc == min, exactly one per bucket (band rows are unique
+    per (doc, band))."""
+    return with_min.filter(F.col("doc") == F.col("m")).select(
+        "band", "bucket", F.col("doc").alias("hub")
     )
 
 
@@ -695,15 +710,7 @@ def minhash_star_edges(
     hash (``"md5"`` oracle-portable / ``"xxh"`` production throughput;
     see ``shingle_hashes``) — the star construction is identical."""
     banded = minhash_band_table(df, num_hashes, bands, n, text_col, id_col, family=family)
-    from pyspark.sql.window import Window
-
-    m = F.min("doc").over(Window.partitionBy("band", "bucket"))
-    return (
-        banded.withColumn("m", m)
-        .filter(F.col("doc") != F.col("m"))
-        .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
-        .distinct()
-    )
+    return bucket_star(bucket_min(banded))
 
 
 def near_dup_signature(
@@ -716,9 +723,7 @@ def near_dup_signature(
     streaming dedup key; DuckDB replays it as
     ``string_agg(sig::VARCHAR, '_' ORDER BY i)`` over the shared banded-
     minhash fragment's ``sigs`` CTE."""
-    hashed = F.array_distinct(
-        F.transform(shingles(text, n), lambda s: portable_hash60(s) % _MERSENNE_P)
-    )
+    hashed = _shingle_hash_array(text, n)
     return F.concat_ws(
         "_",
         F.transform(_minhash_sig(hashed, num_hashes), lambda x: x.cast("string")),
@@ -2650,20 +2655,21 @@ def _ppj_cluster_route_delta(spark: SparkSession, sf_dir: str, batch: DataFrame)
     disjointness argument transfers because the PPJoin prefix index and
     the cluster state cover the same base corpus."""
     from redcap_omop_etl_spark.operators.graph import (
+        _batch_only_min,
         _minhash_cluster_state,
         incremental_minhash_components,
     )
 
     comp, hubs = _minhash_cluster_state(spark, sf_dir, family="md5")
-    # Checkpointed (round 13 final session; was a persist): the
-    # merge consumes the batch band table twice (shared-bucket join +
-    # batch-only anti-join), the signature fold behind it is a pure
-    # projection no ReuseExchange can share (round 12), and the eager
-    # localCheckpoint additionally truncates the tick's lineage so the
-    # downstream merge/delta actions re-plan from a leaf (the measured
-    # Catalyst-stall fix of the graph.py tick boundaries).
+    # Checkpointed: the merge consumes the batch band table twice
+    # (shared-bucket join + batch-only anti-join), the signature fold
+    # behind it is a pure projection no ReuseExchange can share, and the
+    # eager localCheckpoint truncates the tick's lineage so the
+    # downstream merge/delta actions re-plan from a leaf. The batch-only
+    # star stays lazy: it is read once, and pinning it costs a job.
     banded = materialize(minhash_band_table(batch))
-    merged = incremental_minhash_components(comp, hubs, banded, check_ids=False)
+    batch_star = bucket_star(_batch_only_min(banded, hubs))
+    merged = incremental_minhash_components(comp, hubs, banded, batch_star)
     bid = batch.select(F.col("doc_id").alias("node"))
     batch_rows = merged.join(bid, "node", "left_semi").select("node", "component")
     touched_reps = merged.join(bid, "node", "left_anti").select(

@@ -45,6 +45,9 @@ from pyspark.sql import functions as F
 from redcap_omop_etl_spark.caching import materialize, session_memo
 from redcap_omop_etl_spark.operators.dedup import (
     _PPJOIN_GATE_CAP,
+    bucket_hubs,
+    bucket_min,
+    bucket_star,
     components_sql_cte,
     minhash_band_table,
     minhash_banded_sql_cte,
@@ -1230,23 +1233,17 @@ def _cluster_state_from_bands(banded: DataFrame) -> tuple[DataFrame, DataFrame]:
     ``components(node, component)`` over the star-edge graph and
     ``hubs(band, bucket, hub)`` = each LSH bucket's minimum doc id.
 
-    ONE (band, bucket) exchange feeds both: the per-bucket min is
-    attached by a keyed window and materialized once; hubs are the rows
-    where doc == min (exactly one per bucket — band rows are unique per
-    (doc, band)), star edges the rest (``minhash_star_edges``' star)."""
-    from pyspark.sql.window import Window
+    ONE (band, bucket) exchange feeds both: the ``bucket_min`` window
+    is materialized once and split into ``bucket_star`` and
+    ``bucket_hubs``."""
+    with_min = materialize(bucket_min(banded))
+    return connected_components(bucket_star(with_min)), bucket_hubs(with_min)
 
-    m = F.min("doc").over(Window.partitionBy("band", "bucket"))
-    withm = banded.withColumn("m", m).transform(materialize)
-    hubs = withm.filter(F.col("doc") == F.col("m")).select(
-        "band", "bucket", F.col("doc").alias("hub")
-    )
-    star = (
-        withm.filter(F.col("doc") != F.col("m"))
-        .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
-        .distinct()
-    )
-    return connected_components(star), hubs
+
+def _batch_only_min(batch_banded: DataFrame, hubs: DataFrame) -> DataFrame:
+    """``bucket_min`` over the batch band rows whose bucket has no hub
+    yet (the buckets no base doc lands in)."""
+    return bucket_min(batch_banded.join(hubs, ["band", "bucket"], "left_anti"))
 
 
 # Materialized-view memo for the MinHash cluster STATE — the component
@@ -1839,8 +1836,7 @@ def incremental_minhash_components(
     base_comp: DataFrame,
     hubs: DataFrame,
     batch_banded: DataFrame,
-    check_ids: bool = True,
-    _only_with_min: DataFrame | None = None,
+    batch_star: DataFrame,
 ) -> DataFrame:
     """Attach a batch of NEW documents to an existing MinHash cluster
     state WITHOUT recomputing base signatures or re-running components
@@ -1853,7 +1849,9 @@ def incremental_minhash_components(
     BASE doc id — the frozen index state), ``batch_banded(doc, band,
     bucket)`` (the batch's band table; batch ids must be DISJOINT from
     base ids — no ordering between the two ranges is required, see the
-    equivalence argument).
+    equivalence argument) and ``batch_star(d1, d2)`` (the star edges of
+    the batch-only buckets: ``bucket_star(_batch_only_min(batch_banded,
+    hubs))``, materialized or lazy as the caller's plan needs).
 
     Returns ``(node, component)`` covering every batch doc that gained
     an edge plus every base component whose label CHANGED (a batch doc
@@ -1875,66 +1873,41 @@ def incremental_minhash_components(
     paths: the merge CC minimizes over {base reps} ∪ {batch ids}, and
     each rep IS its base component's minimum, so min(reps, batch ids)
     = min(all member ids) for every merged component regardless of how
-    base and batch id ranges interleave. (The round-9 phrasing required
-    batch ids > all base ids so the rebuild's star EDGES decompose
-    verbatim; tools/bench_scale.py's replicated corpora violate that
-    ordering while the registered oracle stayed green — the partition
-    argument above is the invariant that actually carries the proof,
-    and it needs only id disjointness.)
+    base and batch id ranges interleave. The argument needs only id
+    disjointness, not batch ids above every base id
+    (tools/bench_scale.py's replicated corpora interleave the ranges).
 
     Scale shape: the shared-bucket join hits the hub table on its
     (band, bucket) key; the merge graph has ≤ batch × bands edges over
     rep/batch nodes, so the star-contraction CC here is BATCH-sized
-    regardless of corpus size.
-    ``check_ids`` (default True) enforces the disjointness precondition
-    at runtime: every base doc appears in the frozen state (non-singleton
-    docs in ``base_comp.node``; singletons are alone in all their buckets
-    so each is the min of its own — i.e. present in ``hubs.hub``), so a
-    batch id colliding with EITHER column would alias two distinct
-    documents into one node and silently corrupt the partition. The
-    guard is one short-circuited semi-join per tick
-    (``validation.require_disjoint_ids``); pass False only when the
-    caller proves disjointness by construction (e.g. a monotonically
-    id-assigned ingest ledger).
+    regardless of corpus size. The id disjointness is checked by
+    ``minhash_cluster_state_append``; the routed ingest tick's cluster
+    route relies on its batch guard instead.
     """
-    from pyspark.sql.window import Window
-
-    if check_ids:
-        from redcap_omop_etl_spark.validation import require_disjoint_ids
-
-        base_ids = base_comp.select(F.col("node").alias("__id")).unionByName(
-            hubs.select(F.col("hub").alias("__id"))
-        )
-        require_disjoint_ids(
-            base_ids,
-            batch_banded.select("doc"),
-            "incremental_minhash_components",
-        )
-
     shared = batch_banded.join(hubs, ["band", "bucket"])
     hub_rep = shared.join(
         base_comp.withColumnRenamed("node", "hub"), "hub", "left"
     ).select(
         F.coalesce("component", "hub").alias("d1"), F.col("doc").alias("d2")
     )
-    e1 = hub_rep.distinct()
-    # ``_only_with_min``: the batch-only band rows with the per-bucket
-    # min already attached — minhash_cluster_state_append passes its
-    # persisted copy so the hubs anti-join and the keyed window run ONCE
-    # per tick instead of once here (star edges) and once there (hub
-    # extension). Derivation below is byte-identical when absent.
-    if _only_with_min is None:
-        m = F.min("doc").over(Window.partitionBy("band", "bucket"))
-        _only_with_min = batch_banded.join(
-            hubs, ["band", "bucket"], "left_anti"
-        ).withColumn("m", m)
-    e2 = (
-        _only_with_min.filter(F.col("doc") != F.col("m"))
-        .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
-        .distinct()
-    )
     # merge graph over {base reps} ∪ {batch docs} — batch-sized
-    return connected_components(e1.unionByName(e2))
+    return connected_components(hub_rep.distinct().unionByName(batch_star))
+
+
+def _cluster_append_batch(docs: DataFrame) -> DataFrame:
+    """The registered append batch: two suffixed copies of every
+    ``_CLUSTER_APPEND_MOD``-selected doc, ids shifted above the corpus."""
+    one = docs.filter(
+        F.pmod(F.col("doc_id"), F.lit(_CLUSTER_APPEND_MOD)) == _CLUSTER_APPEND_RES
+    ).select("doc_id", F.concat(F.col("text"), F.lit(_CLUSTER_APPEND_SUFFIX)).alias("text"))
+    return one.select(
+        (F.col("doc_id") + F.lit(_CLUSTER_APPEND_SHIFT)).alias("doc_id"), "text"
+    ).unionByName(
+        one.select(
+            (F.col("doc_id") + F.lit(2 * _CLUSTER_APPEND_SHIFT)).alias("doc_id"),
+            "text",
+        )
+    )
 
 
 @register(
@@ -1985,25 +1958,12 @@ def incremental_minhash_components(
 def dedup_minhash_clusters_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = Catalog(spark, sf_dir)["documents"]
     base_comp, hubs = _minhash_cluster_state(spark, sf_dir, family="md5")
-    one = docs.filter(
-        F.pmod(F.col("doc_id"), F.lit(_CLUSTER_APPEND_MOD)) == _CLUSTER_APPEND_RES
-    ).select("doc_id", F.concat(F.col("text"), F.lit(_CLUSTER_APPEND_SUFFIX)).alias("text"))
-    batch = one.select(
-        (F.col("doc_id") + F.lit(_CLUSTER_APPEND_SHIFT)).alias("doc_id"), "text"
-    ).unionByName(
-        one.select(
-            (F.col("doc_id") + F.lit(2 * _CLUSTER_APPEND_SHIFT)).alias("doc_id"),
-            "text",
-        )
+    batch = _cluster_append_batch(docs)
+    # labels come off the APPEND transition; cluster_size off
+    # cluster_table_from_components' broadcast-size join
+    comp_out, _hubs_out = minhash_cluster_state_append(
+        base_comp, hubs, materialize(minhash_band_table(batch))
     )
-    batch_banded = materialize(minhash_band_table(batch))
-    # Round 12: labels come off the APPEND-transition state core (the
-    # union-corpus component table minhash_cluster_state_append builds —
-    # same remap-through-rep-map labeling this function previously
-    # inlined; the upsert tick's oracle pins the construction), and
-    # cluster_size off cluster_table_from_components' broadcast-size
-    # join instead of the corpus-wide count() window.
-    comp_out, _hubs_out = minhash_cluster_state_append(base_comp, hubs, batch_banded)
     alld = docs.select("doc_id").unionByName(batch.select("doc_id"))
     return cluster_table_from_components(
         alld, materialize(comp_out), appended_from=_CLUSTER_APPEND_SHIFT
@@ -2068,12 +2028,9 @@ def dedup_minhash_clusters_delete(spark: SparkSession, sf_dir: str) -> DataFrame
         F.pmod(F.col("doc_id"), F.lit(_CLUSTER_DELETE_MOD)) == _CLUSTER_DELETE_RES
     )
     deleted = docs.filter(is_del).select("doc_id")
-    # Round 12: labels come off the DELETE-transition state core
-    # (untouched base rows verbatim + touched-survivor sub-CC — the
-    # same label construction this function previously inlined; the
-    # upsert tick's oracle pins the composition), and cluster_size off
-    # cluster_table_from_components' broadcast-size join instead of
-    # the corpus-wide count() window.
+    # labels come off the DELETE transition (untouched base rows verbatim
+    # + touched-survivor sub-CC); cluster_size off
+    # cluster_table_from_components' broadcast-size join
     comp_out, _hubs_out = minhash_cluster_state_delete(base_comp, hubs, deleted, docs)
     survivors = docs.filter(~is_del).select("doc_id")
     return cluster_table_from_components(
@@ -2103,21 +2060,31 @@ def minhash_cluster_state_append(
     batch-only buckets' minima extend the table; existing hubs stay
     frozen (an edge to a hub preserves connectivity regardless of later
     smaller ids). Invariant preserved for the DELETE transition below:
-    every live doc appears in comp.node or hubs.hub."""
-    from pyspark.sql.window import Window
+    every live doc appears in comp.node or hubs.hub.
 
-    # Round 13: the batch-only band rows (hubs anti-join) feed BOTH the
-    # merge CC's batch-star edges and the hub extension; compute them
-    # once with the per-bucket min attached by one keyed window and
-    # persist (batch-sized) — previously the anti-join ran twice and the
-    # min twice (window here, groupBy-min there).
-    m = F.min("doc").over(Window.partitionBy("band", "bucket"))
-    only_m = materialize(
-        batch_banded.join(hubs, ["band", "bucket"], "left_anti").withColumn("m", m)
-    )
-    merged = incremental_minhash_components(
-        base_comp, hubs, batch_banded, check_ids, _only_with_min=only_m
-    )
+    ``check_ids`` (default True) enforces the disjointness precondition
+    before any merge work: every base doc appears in the frozen state
+    (non-singleton docs in ``base_comp.node``; singletons are alone in
+    all their buckets so each is the min of its own — i.e. present in
+    ``hubs.hub``), so a batch id colliding with EITHER column would alias
+    two distinct documents into one node and silently corrupt the
+    partition. The guard is one short-circuited semi-join per tick
+    (``validation.require_disjoint_ids``); pass False only when the
+    caller proves disjointness by construction (e.g. a monotonically
+    id-assigned ingest ledger).
+
+    The batch-only band rows with their bucket minimum are materialized
+    once (batch-sized): they feed both the merge CC's batch star and the
+    hub extension."""
+    if check_ids:
+        from redcap_omop_etl_spark.validation import require_disjoint_ids
+
+        base_ids = base_comp.select(F.col("node").alias("__id")).unionByName(
+            hubs.select(F.col("hub").alias("__id"))
+        )
+        require_disjoint_ids(base_ids, batch_banded.select("doc"), "minhash_cluster_state_append")
+    only_m = materialize(_batch_only_min(batch_banded, hubs))
+    merged = incremental_minhash_components(base_comp, hubs, batch_banded, bucket_star(only_m))
     rep_map = merged.select(
         F.col("node").alias("__rep"), F.col("component").alias("__final")
     )
@@ -2126,10 +2093,7 @@ def minhash_cluster_state_append(
     ).select("node", F.coalesce("__final", "component").alias("component"))
     new_nodes = merged.join(base_comp.select("node"), "node", "left_anti")
     comp_out = base_upd.unionByName(new_nodes.select("node", "component"))
-    new_hubs = only_m.filter(F.col("doc") == F.col("m")).select(
-        "band", "bucket", F.col("doc").alias("hub")
-    )
-    return comp_out, hubs.unionByName(new_hubs)
+    return comp_out, hubs.unionByName(bucket_hubs(only_m))
 
 
 def minhash_cluster_state_delete(
@@ -2149,9 +2113,13 @@ def minhash_cluster_state_delete(
     precondition the next append tick's equivalence proof reads off the
     state. ``corpus`` is the doc store takedown ids resolve against
     (only TOUCHED survivors' texts are read — partition-pruned at a
-    component-clustered layout)."""
-    from pyspark.sql.window import Window
+    component-clustered layout).
 
+    One banding pass over the touched survivors feeds both the sub-CC
+    and the hub repair (``_cluster_state_from_bands``: the signature fold
+    is a pure projection no ReuseExchange could share between two
+    consumers). Its materialized table is touched-members × bands sized,
+    not corpus sized."""
     deln = deleted.select(F.col(deleted.columns[0]).alias("node")).distinct()
     touched = base_comp.join(deln, "node", "left_semi").select("component").distinct()
     members = base_comp.join(touched, "component", "left_semi")
@@ -2159,36 +2127,13 @@ def minhash_cluster_state_delete(
     sub_docs = corpus.join(
         remaining.withColumnRenamed("node", "doc_id"), "doc_id", "left_semi"
     )
-    # One banding pass over the touched survivors feeds BOTH the sub-CC's
-    # star edges and the hub repair (round 12: the two consumers previously
-    # each re-ran the 64-permutation signature fold over sub_docs — the
-    # transition's dominant per-row compute — because the fold is a pure
-    # scan-side projection with no exchange for ReuseExchange to share).
-    # Round 13: the shared table now carries the per-bucket min attached
-    # by ONE keyed window, so the hub repair reads the doc == min rows
-    # instead of re-shuffling the band table through a groupBy-min — the
-    # same single-exchange fusion as _minhash_cluster_state. The persisted
-    # table is narrow (doc, band, bucket, m) and touched-members × bands
-    # sized, not corpus sized.
-    m = F.min("doc").over(Window.partitionBy("band", "bucket"))
-    banded_sub = materialize(
-        minhash_band_table(sub_docs).withColumn("m", m)
-    )
-    sub_star = (
-        banded_sub.filter(F.col("doc") != F.col("m"))
-        .select(F.col("m").alias("d1"), F.col("doc").alias("d2"))
-        .distinct()
-    )
-    sub_comp = connected_components(sub_star)
+    sub_comp, new_hubs = _cluster_state_from_bands(minhash_band_table(sub_docs))
     comp_out = base_comp.join(members.select("node"), "node", "left_anti").unionByName(
         sub_comp
     )
     stale_hub_ids = members.select("node").unionByName(deln).distinct()
     hubs_keep = hubs.join(
         stale_hub_ids.withColumnRenamed("node", "hub"), "hub", "left_anti"
-    )
-    new_hubs = banded_sub.filter(F.col("doc") == F.col("m")).select(
-        "band", "bucket", F.col("doc").alias("hub")
     )
     return comp_out, hubs_keep.unionByName(new_hubs)
 
@@ -2248,32 +2193,16 @@ def dedup_minhash_clusters_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     ).select("doc_id")
     comp1, hubs1 = minhash_cluster_state_delete(base_comp, hubs, deleted, docs)
     comp1, hubs1 = materialize(comp1), materialize(hubs1)
-    one = docs.filter(
-        F.pmod(F.col("doc_id"), F.lit(_CLUSTER_APPEND_MOD)) == _CLUSTER_APPEND_RES
-    ).select(
-        "doc_id", F.concat(F.col("text"), F.lit(_CLUSTER_APPEND_SUFFIX)).alias("text")
-    )
-    batch = one.select(
-        (F.col("doc_id") + F.lit(_CLUSTER_APPEND_SHIFT)).alias("doc_id"), "text"
-    ).unionByName(
-        one.select(
-            (F.col("doc_id") + F.lit(2 * _CLUSTER_APPEND_SHIFT)).alias("doc_id"),
-            "text",
-        )
-    )
-    # Persist the batch band table: the append transition consumes it
-    # three times (shared-bucket join, batch-only anti-join, new-hub
-    # aggregation) plus the id guard, and the signature fold behind it is
-    # a pure projection no ReuseExchange can share (round 12 — the append
-    # tick already passed its band table persisted; the upsert did not).
+    batch = _cluster_append_batch(docs)
+    # Materialize the batch band table: the append transition reads it
+    # twice (shared-bucket join, batch-only anti-join) plus the id guard,
+    # and the signature fold behind it is a pure projection no
+    # ReuseExchange can share.
     comp2, _hubs2 = minhash_cluster_state_append(
         comp1, hubs1, materialize(minhash_band_table(batch))
     )
     survivors = docs.join(deleted, "doc_id", "left_anti").select("doc_id")
     alld = survivors.unionByName(batch.select("doc_id"))
-    # Round 12: cluster_size off cluster_table_from_components'
-    # broadcast-size join instead of the corpus-wide count() window
-    # (the former wall floor of the delete/upsert paths).
     return cluster_table_from_components(
         alld, materialize(comp2), appended_from=_CLUSTER_APPEND_SHIFT
     )

@@ -28,7 +28,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from redcap_omop_etl_spark.functions.dates import GRANULARITIES
+from redcap_omop_etl_spark.functions.dates import format_granularity, seconds_between
+from redcap_omop_etl_spark.operators.date_transform import anchor_shift
 from redcap_omop_etl_spark.operators.phi_filter import (
     DATE_TRANSFORM_STATUSES,
     PhiFilterResult,
@@ -68,17 +69,6 @@ class DateTransformResult:
     errors: DataFrame    # unparseable dates / missing anchors
 
 
-def _granularity_format(status_col, ts_col):
-    """4-way granularity dispatch: status 'TransformX' → format label X
-    (dcc_transforms.py:182 strips the 'Transform' prefix; :141-168 formats)."""
-    expr = None
-    for label, fmt in GRANULARITIES.items():
-        cond = status_col == f"Transform{label}"
-        branch = F.date_format(ts_col, fmt)
-        expr = F.when(cond, branch) if expr is None else expr.when(cond, branch)
-    return expr
-
-
 def date_variable_transform(
     records: DataFrame,
     field_map: DataFrame,
@@ -113,29 +103,28 @@ def date_variable_transform(
     )
     is_date_field = F.col("__df_field").isNotNull()
     parsed = F.try_to_timestamp(F.col("value"))
+    # status 'TransformX' → granularity label X (dcc_transforms.py:182)
+    granularity = F.regexp_replace(F.col("__df_status"), "^Transform", "")
 
     if strategy == "dob_shifting":
         # J3: per-record anchor from the record's own anchor-field row
-        anchors = (
-            records.filter(F.col("field_name") == anchor_field)
-            .groupBy("record_id")
-            .agg(F.min(F.try_to_timestamp("value")).alias("__anchor"))
+        joined = anchor_shift(
+            joined.withColumn("__ts", parsed),
+            "record_id",
+            "__ts",
+            F.col("field_name") == anchor_field,
+            standard_date,
         )
-        joined = joined.join(F.broadcast(anchors), "record_id", "left")
-        shift_us = F.unix_micros(F.lit(standard_date).cast("timestamp")) - F.unix_micros(F.col("__anchor"))
-        shifted = F.timestamp_add("MICROSECOND", shift_us, parsed)
-        cleaned_value = _granularity_format(F.col("__df_status"), shifted)
+        cleaned_value = format_granularity(F.col("__shifted"), granularity)
         ok = parsed.isNotNull() & F.col("__anchor").isNotNull()
         err_reason = F.when(parsed.isNull(), "unparseable date").otherwise("missing dob anchor")
     elif strategy == "date_shifting":
         shifted = F.timestamp_add("SECOND", F.lit(int(shifting_seconds)), parsed)
-        cleaned_value = _granularity_format(F.col("__df_status"), shifted)
+        cleaned_value = format_granularity(shifted, granularity)
         ok = parsed.isNotNull()
         err_reason = F.lit("unparseable date")
     else:  # total_seconds — emits, does not rewrite in place
-        seconds = (
-            F.unix_timestamp(parsed) - F.unix_timestamp(F.lit(standard_date).cast("timestamp"))
-        ).cast("long")
+        seconds = seconds_between(parsed, F.lit(standard_date).cast("timestamp"))
         emitted = (
             joined.filter(is_date_field & parsed.isNotNull())
             .select(
@@ -164,7 +153,9 @@ def date_variable_transform(
         joined.filter(is_date_field & ~F.coalesce(ok, F.lit(False)))
         .select("record_id", "field_name", err_reason.alias("error"))
     )
-    drop_cols = [c for c in ("__df_field", "__df_status", "__anchor") if c in cleaned.columns]
+    drop_cols = [
+        c for c in ("__df_field", "__df_status", "__anchor", "__ts", "__shifted") if c in cleaned.columns
+    ]
     return DateTransformResult(records=cleaned.drop(*drop_cols), emitted=None, errors=errors)
 
 

@@ -56,6 +56,52 @@ _BASE_CONF: dict[str, str] = {
 }
 
 
+_DRIVER_MEM_CAP_GB = 24
+_MEMINFO = "/proc/meminfo"
+# cgroup v2, then v1; v1 reports "no limit" as a huge number
+_CGROUP_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _usable_memory_bytes() -> int | None:
+    """Memory this process can use: ``MemTotal`` from /proc/meminfo, or
+    the cgroup memory limit when that is smaller. None when neither can
+    be read (non-Linux hosts)."""
+    limits = []
+    try:
+        with open(_MEMINFO) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+                    break
+    except OSError:
+        pass
+    for path in _CGROUP_LIMIT_FILES:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limits.append(int(raw))
+        break
+    return min(limits) if limits else None
+
+
+def _default_driver_memory() -> str:
+    """Local-mode driver heap: half the usable memory, at least 1g and
+    at most 24g (24g when the memory cannot be read). The single local
+    JVM also holds off-heap buffers and shares the host with its Python
+    workers, so a heap sized to the whole host gets the JVM OOM-killed
+    before it collects."""
+    usable = _usable_memory_bytes()
+    if usable is None:
+        return f"{_DRIVER_MEM_CAP_GB}g"
+    return f"{max(1, min(_DRIVER_MEM_CAP_GB, usable // 2 // 2**30))}g"
+
+
 def build_session(
     app_name: str = "redcap_omop_etl_spark",
     master: str | None = None,
@@ -66,7 +112,8 @@ def build_session(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so
     tests and bench share one code path; pass an explicit master for
-    cluster deployment.
+    cluster deployment. In local mode the driver heap defaults to
+    ``_default_driver_memory()``; ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -82,7 +129,10 @@ def build_session(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if master.startswith("local"):
         # Single-JVM local mode: the driver is the only executor.
-        conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        conf.setdefault(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -225,13 +225,11 @@ def cluster_state_tick(
         if append_docs is not None:  # a delete-only tick pins in save
             comp, hubs = materialize(comp), materialize(hubs)
     if append_docs is not None:
-        # Checkpointed (round 13; was a persist): the append
-        # transition consumes the batch band table three times (shared-
-        # bucket join, batch-only anti-join, new-hub aggregation) plus
-        # the id guard; the signature fold behind it is a pure projection
-        # no ReuseExchange can share (round 12), and the plan barrier
-        # keeps the tick's downstream actions from re-analyzing the
-        # band-table lineage (same fix as the graph.py tick boundaries).
+        # Checkpointed: the append transition reads the batch band
+        # table twice (shared-bucket join, batch-only anti-join) plus the
+        # id guard; the signature fold behind it is a pure projection no
+        # ReuseExchange can share, and the plan barrier keeps the tick's
+        # downstream actions from re-analyzing the band-table lineage.
         comp, hubs = minhash_cluster_state_append(
             comp, hubs, materialize(minhash_band_table(append_docs))
         )

@@ -98,43 +98,32 @@ def stream_to_delete_ticks(
 # ---------------------------------------------------------------------------
 
 
-def _applied_epochs(spark, catalog, op: str, fp: str) -> dict[str, int]:
-    """The per-stream applied-epoch ledger carried in the latest
-    committed manifest (empty for fresh or pre-round-12 state)."""
-    v = catalog.latest_version(spark, op, fp)
-    if v is None:
-        return {}
-    meta = catalog.manifest(spark, op, fp, v).get("meta", {})
-    return dict(meta.get("applied_epochs", {}))
+def _next_epoch_meta(
+    spark, catalog, op: str, fp: str, version: int | None, epoch: int, stream_id: str
+) -> dict | None:
+    """Manifest meta for a commit applying ``epoch`` from ``stream_id``
+    on top of committed ``version`` (None: no state yet), or None when
+    that stream has already committed this epoch. Reads the per-stream
+    applied-epoch ledger from ``version``'s manifest once.
 
-
-def _epoch_already_applied(
-    spark, catalog, op: str, fp: str, epoch: int, stream_id: str
-) -> bool:
-    """True iff ``stream_id`` has already committed this epoch (or a
-    later one) against ``op/fp``. The ledger is keyed PER STREAM: the
-    ingest and takedown bridges share one (op, fp) state but number
-    foreachBatch epochs independently from 0 per checkpoint, so a bare
-    epoch compare would silently skip a batch whose number collides
-    with the other stream's last commit (e.g. one-batch ingest at
-    epoch 0 followed by the first delete batch at epoch 0). Within one
-    stream epochs arrive strictly increasing and only the last (failed)
-    epoch can replay after a restart, so ``>=`` on that stream's entry
-    is exact. Direct (non-stream) invocations pass epoch=-1 and always
-    apply."""
-    if epoch < 0:
-        return False
-    return _applied_epochs(spark, catalog, op, fp).get(stream_id, -1) >= epoch
-
-
-def _epoch_meta(
-    spark, catalog, op: str, fp: str, epoch: int, stream_id: str
-) -> dict:
-    """Manifest meta for a commit applying ``epoch`` from ``stream_id``:
-    the previous ledger with this stream's entry advanced (plus the
-    legacy flat fields for human readers)."""
-    ledger = _applied_epochs(spark, catalog, op, fp)
+    The ledger is keyed PER STREAM: the ingest and takedown bridges
+    share one (op, fp) state but number foreachBatch epochs
+    independently from 0 per checkpoint, so a bare epoch compare would
+    silently skip a batch whose number collides with the other stream's
+    last commit (e.g. one-batch ingest at epoch 0 followed by the first
+    delete batch at epoch 0). Within one stream epochs arrive strictly
+    increasing and only the last (failed) epoch can replay after a
+    restart, so ``>=`` on that stream's entry is exact. Direct
+    (non-stream) invocations pass epoch=-1 and always apply. The meta
+    also carries the flat ``epoch``/``stream_id`` fields for human
+    readers."""
+    ledger = {}
+    if version is not None:
+        meta = catalog.manifest(spark, op, fp, version).get("meta", {})
+        ledger = dict(meta.get("applied_epochs", {}))
     if epoch >= 0:
+        if ledger.get(stream_id, -1) >= epoch:
+            return None
         ledger[stream_id] = epoch
     return {"epoch": epoch, "stream_id": stream_id, "applied_epochs": ledger}
 
@@ -153,10 +142,10 @@ def catalog_delete_applier(
     tick = TICKS[op]
 
     def apply(spark: SparkSession, deleted: DataFrame, epoch: int = -1) -> None:
-        if _epoch_already_applied(spark, catalog, op, fp, epoch, stream_id):
-            return
-        meta = _epoch_meta(spark, catalog, op, fp, epoch, stream_id)
-        tick(catalog, fp, store, delete_ids=deleted, meta=meta)
+        v = catalog.latest_version(spark, op, fp)
+        meta = _next_epoch_meta(spark, catalog, op, fp, v, epoch, stream_id)
+        if meta is not None:
+            tick(catalog, fp, store, delete_ids=deleted, meta=meta)
 
     return apply
 
@@ -171,10 +160,11 @@ def catalog_cluster_append_applier(
 
     def apply(spark: SparkSession, batch_docs: DataFrame, epoch: int = -1) -> None:
         op = state.CLUSTER_OP
-        if _epoch_already_applied(spark, catalog, op, fp, epoch, stream_id):
+        v = catalog.latest_version(spark, op, fp)
+        meta = _next_epoch_meta(spark, catalog, op, fp, v, epoch, stream_id)
+        if meta is None:
             return
-        meta = _epoch_meta(spark, catalog, op, fp, epoch, stream_id)
-        if catalog.latest_version(spark, op, fp) is None:
+        if v is None:
             state.cluster_state_bootstrap(catalog, batch_docs, fp, meta=meta)
         else:
             state.cluster_state_tick(

@@ -141,7 +141,7 @@ class MaintenancePreconditionError(ValueError):
     the runtime guards below so a bad batch fails loudly instead of
     producing a silently-wrong incremental result (the append proofs in
     ``similarity.semdedup_flags_append`` / ``graph.
-    incremental_minhash_components`` / ``dedup._ppj_append_batch`` hold
+    minhash_cluster_state_append`` / ``dedup._ppj_append_batch`` hold
     only under these conditions)."""
 
 

@@ -68,3 +68,26 @@ def test_cluster_conf_profile():
     assert int(c["spark.sql.adaptive.coalescePartitions.initialPartitionNum"]) >= 500_000
     # every key is a plain string (spark-submit renderable)
     assert all(isinstance(k, str) and isinstance(v, str) for k, v in c.items())
+
+
+def test_driver_memory_default_follows_usable_memory(monkeypatch):
+    from redcap_omop_etl_spark import session
+
+    gib = 2**30
+    for usable, want in [(15 * gib, "7g"), (64 * gib, "24g"), (gib, "1g"), (None, "24g")]:
+        monkeypatch.setattr(session, "_usable_memory_bytes", lambda u=usable: u)
+        assert session._default_driver_memory() == want
+
+
+def test_usable_memory_is_min_of_host_and_cgroup(monkeypatch, tmp_path):
+    from redcap_omop_etl_spark import session
+
+    meminfo, limit = tmp_path / "meminfo", tmp_path / "memory.max"
+    meminfo.write_text("MemTotal:       16456384 kB\nMemFree:  1 kB\n")
+    monkeypatch.setattr(session, "_MEMINFO", str(meminfo))
+    monkeypatch.setattr(session, "_CGROUP_LIMIT_FILES", (str(limit),))
+    limit.write_text("max\n")  # cgroup v2 without a limit
+    assert session._usable_memory_bytes() == 16456384 * 1024
+    limit.write_text(f"{8 * 2**30}\n")
+    assert session._usable_memory_bytes() == 8 * 2**30
+    assert session._default_driver_memory() == "4g"

@@ -52,10 +52,10 @@ class TestPreconditionGuards:
 
     def test_cluster_append_guard_rejects_colliding_batch(self, spark, sf_dir):
         """A batch band table reusing a BASE doc id must be rejected by
-        incremental_minhash_components before any merge work runs."""
+        the append transition's id guard before any merge runs."""
         from redcap_omop_etl_spark.operators.graph import (
             _minhash_cluster_state,
-            incremental_minhash_components,
+            minhash_cluster_state_append,
         )
         from redcap_omop_etl_spark.validation import MaintenancePreconditionError
 
@@ -65,14 +65,14 @@ class TestPreconditionGuards:
             "bucket", F.lit(123456789)
         )
         with pytest.raises(MaintenancePreconditionError, match="disjoint"):
-            incremental_minhash_components(base_comp, hubs, bad_banded).collect()
+            minhash_cluster_state_append(base_comp, hubs, bad_banded, check_ids=True)
 
     def test_cluster_append_guard_optout(self, spark, sf_dir):
         """check_ids=False restores the unguarded fast path (for callers
         that prove disjointness by construction)."""
         from redcap_omop_etl_spark.operators.graph import (
             _minhash_cluster_state,
-            incremental_minhash_components,
+            minhash_cluster_state_append,
         )
 
         base_comp, hubs = _minhash_cluster_state(spark, sf_dir, family="md5")
@@ -80,10 +80,11 @@ class TestPreconditionGuards:
             [(10_000_000, 0, "987_654_321_0")],
             "doc long, band int, bucket string",
         )
-        out = incremental_minhash_components(
+        comp_out, hubs_out = minhash_cluster_state_append(
             base_comp, hubs, fresh, check_ids=False
         )
-        assert "component" in out.columns
+        assert "component" in comp_out.columns
+        assert hubs_out.filter(F.col("hub") == 10_000_000).count() == 1
 
     def test_semdedup_append_guard_rejects_low_id_batch(self, spark, sf_dir):
         """A batch vec_id at/below the base range could displace a
@@ -237,92 +238,6 @@ class TestIvfpqDriftAudit:
                 or r["frozen_cand"] >= 2 * r["retrained_cand"]
             )
             assert r["rebuild_advised"] == expect
-
-
-class TestUpsertMultiTick:
-    """The mixed-transaction composition claim: >= 4 alternating
-    delete/append ticks over shared (components, hubs) state equal the
-    one-shot rebuild over the net corpus."""
-
-    def test_alternating_ticks_equal_rebuild(self, spark):
-        from redcap_omop_etl_spark.operators.dedup import (
-            minhash_band_table,
-            minhash_star_edges,
-        )
-        from redcap_omop_etl_spark.operators.graph import (
-            connected_components,
-            minhash_cluster_state_append,
-            minhash_cluster_state_delete,
-        )
-
-        fam_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-        fam_b = "one two three four five six seven eight nine ten eleven"
-        fam_c = "red orange yellow green blue indigo violet pink brown black"
-        base = spark.createDataFrame(
-            [(1, fam_a), (2, fam_a), (3, fam_a), (10, fam_b), (11, fam_b),
-             (20, "a lone unrelated document with its very own words here")],
-            "doc_id long, text string",
-        )
-        comp = connected_components(minhash_star_edges(base))
-        hubs = (
-            minhash_band_table(base)
-            .groupBy("band", "bucket")
-            .agg(F.min("doc").alias("hub"))
-        )
-        corpus = base
-        live = base
-
-        def tick_delete(ids):
-            nonlocal comp, hubs, live
-            deln = spark.createDataFrame([(x,) for x in ids], "doc_id long")
-            comp, hubs = minhash_cluster_state_delete(comp, hubs, deln, corpus)
-            comp = comp.localCheckpoint(eager=True)
-            hubs = hubs.localCheckpoint(eager=True)
-            live = live.join(deln, "doc_id", "left_anti").localCheckpoint(eager=True)
-
-        def tick_append(rows):
-            nonlocal comp, hubs, live, corpus
-            batch = spark.createDataFrame(rows, "doc_id long, text string")
-            comp, hubs = minhash_cluster_state_append(
-                comp, hubs, minhash_band_table(batch)
-            )
-            comp = comp.localCheckpoint(eager=True)
-            hubs = hubs.localCheckpoint(eager=True)
-            live = live.unionByName(batch).localCheckpoint(eager=True)
-            corpus = corpus.unionByName(batch).localCheckpoint(eager=True)
-
-        # 5 alternating ticks: delete a fam-A member, append a new fam-C
-        # pair, delete a fam-B member AND a fresh fam-C member (cross-
-        # generation takedown), append an exact fam-A copy (re-attach),
-        # delete the singleton
-        tick_delete([2])
-        tick_append([(100, fam_c), (101, fam_c)])
-        tick_delete([10, 101])
-        tick_append([(200, fam_a)])
-        tick_delete([20])
-
-        got = {(r["node"], r["component"]) for r in comp.collect()}
-        want = {
-            (r["node"], r["component"])
-            for r in connected_components(minhash_star_edges(live)).collect()
-        }
-        assert got == want
-        got_hubs = {
-            (r["band"], r["bucket"], r["hub"]) for r in hubs.collect()
-        }
-        # hub invariant the composition proof reads off the state: after
-        # any tick sequence, hubs are EXACTLY the per-bucket minima of
-        # the live corpus for buckets untouched since their last repair,
-        # and at minimum a live MEMBER for every bucket; the delete tick
-        # restores exact minima for touched buckets. Verify membership:
-        live_banded = {
-            (r["band"], r["bucket"], r["doc"])
-            for r in minhash_band_table(live).collect()
-        }
-        assert got_hubs <= live_banded  # every hub is a live bucket member
-        assert {(b, k) for b, k, _ in got_hubs} == {
-            (b, k) for b, k, _ in live_banded
-        }  # every live bucket has a hub
 
 
 class TestUpsertFamily:

@@ -197,95 +197,3 @@ class TestIvfPqAppend:
         # ADC distance is monotone in rank
         d = [r.adc_d2q for r in out]
         assert d == sorted(d)
-
-
-class TestIncrementalClusterAppend:
-    """incremental_minhash_components must (a) resolve cross-base-cluster
-    merges exactly, (b) star batch-only buckets among new docs, and (c)
-    make the registered append query equal a FULL Spark rebuild over the
-    union corpus (the DuckDB oracle already pins the same equality
-    cross-engine)."""
-
-    def test_bridging_batch_doc_merges_two_base_clusters(self, spark):
-        from redcap_omop_etl_spark.operators.graph import (
-            incremental_minhash_components,
-        )
-
-        base_comp = spark.createDataFrame(
-            [(1, 1), (2, 1), (5, 5), (6, 5)], "node long, component long"
-        )
-        hubs = spark.createDataFrame(
-            [(0, "b1", 1), (1, "b2", 5), (2, "b3", 6)],
-            "band int, bucket string, hub long",
-        )
-        batch_banded = spark.createDataFrame(
-            # doc 100 bridges cluster {1,2} (via b1) and {5,6} (via b2,
-            # where the hub 5 maps to rep 5; b3's hub 6 also maps to 5)
-            [(100, 0, "b1"), (100, 1, "b2"), (100, 2, "b3"),
-             # docs 200/201 share a batch-only bucket -> new cluster
-             (200, 3, "b9"), (201, 3, "b9")],
-            "doc long, band int, bucket string",
-        )
-        got = {
-            r.node: r.component
-            for r in incremental_minhash_components(
-                base_comp, hubs, batch_banded
-            ).collect()
-        }
-        assert got[100] == 1  # the bridge doc joins the merged cluster
-        assert got[5] == 1  # cluster {5,6}'s rep REMAPPED onto rep 1
-        assert got.get(1, 1) == 1
-        assert got[200] == 200 and got[201] == 200  # batch-only star
-
-    def test_registered_append_equals_full_spark_rebuild(self, spark):
-        from pyspark.sql import functions as F
-
-        from redcap_omop_etl_spark import workload
-        from redcap_omop_etl_spark.operators.dedup import minhash_star_edges
-        from redcap_omop_etl_spark.operators.graph import (
-            _CLUSTER_APPEND_MOD,
-            _CLUSTER_APPEND_RES,
-            _CLUSTER_APPEND_SHIFT,
-            _CLUSTER_APPEND_SUFFIX,
-            connected_components,
-        )
-
-        out = workload.queries()["dedup_minhash_clusters_append"](spark, SF_SMOKE)
-        got = {(r.doc_id): (r.cluster_rep, r.is_survivor, r.cluster_size, r.is_appended)
-               for r in out.collect()}
-
-        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-        one = docs.filter(
-            F.pmod(F.col("doc_id"), F.lit(_CLUSTER_APPEND_MOD)) == _CLUSTER_APPEND_RES
-        ).select("doc_id", F.concat(F.col("text"), F.lit(_CLUSTER_APPEND_SUFFIX)).alias("text"))
-        union = (
-            docs.select("doc_id", "text")
-            .unionByName(one.select((F.col("doc_id") + _CLUSTER_APPEND_SHIFT).alias("doc_id"), "text"))
-            .unionByName(one.select((F.col("doc_id") + 2 * _CLUSTER_APPEND_SHIFT).alias("doc_id"), "text"))
-        )
-        comp = connected_components(minhash_star_edges(union))
-        label = {r.node: r.component for r in comp.collect()}
-        want_rep = {
-            r.doc_id: label.get(r.doc_id, r.doc_id) for r in union.select("doc_id").collect()
-        }
-        assert len(got) == len(want_rep)
-        sizes: dict[int, int] = {}
-        for _, rep in want_rep.items():
-            sizes[rep] = sizes.get(rep, 0) + 1
-        for doc, rep in want_rep.items():
-            assert got[doc] == (
-                rep,
-                1 if doc == rep else 0,
-                sizes[rep],
-                doc >= _CLUSTER_APPEND_SHIFT,
-            ), f"divergence at doc {doc}"
-        # the batch genuinely exercised both paths: appended docs exist,
-        # some co-cluster with their base source (shared-bucket path) and
-        # every appended pair co-clusters with its twin via the suffix
-        # shingles (batch-bucket path exercises when base buckets differ)
-        appended = [d for d in got if d >= _CLUSTER_APPEND_SHIFT]
-        assert appended
-        joined_base = [
-            d for d in appended if got[d][0] < _CLUSTER_APPEND_SHIFT
-        ]
-        assert joined_base, "no appended doc joined an existing cluster"

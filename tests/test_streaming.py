@@ -1208,3 +1208,31 @@ class TestStreamToDeleteTicks:
             r["doc_id"]
             for r in cat.load(spark, "term_stats", fp)["deleted"].collect()
         } == {3}
+
+    def test_applier_reads_epoch_ledger_once(self, spark, tmp_path, monkeypatch):
+        """One ledger read per applier call: the latest manifest is opened
+        once for both the replay check and the next meta. The tick is
+        stubbed, so its own ``catalog.load`` read is not counted."""
+        from redcap_omop_etl_spark import state
+        from redcap_omop_etl_spark.state import StateCatalog
+        from redcap_omop_etl_spark.streaming.retraction import catalog_delete_applier
+
+        cat = StateCatalog(str(tmp_path / "lstate"))
+        cat.save(spark, "toy", "fp", {"a": spark.range(3)}, meta={"applied_epochs": {"delete": 4}})
+        metas, reads = [], []
+        monkeypatch.setitem(
+            state.TICKS, "toy", lambda catalog, fp, store, delete_ids, meta: metas.append(meta)
+        )
+        real_manifest = StateCatalog.manifest
+
+        def counting_manifest(self, *a, **kw):
+            reads.append(a)
+            return real_manifest(self, *a, **kw)
+
+        monkeypatch.setattr(StateCatalog, "manifest", counting_manifest)
+        ap = catalog_delete_applier(cat, "toy", "fp", spark.range(3))
+        ap(spark, spark.range(1), epoch=5)
+        assert len(reads) == 1
+        assert metas == [{"epoch": 5, "stream_id": "delete", "applied_epochs": {"delete": 5}}]
+        ap(spark, spark.range(1), epoch=4)  # already applied: no tick
+        assert len(reads) == 2 and len(metas) == 1
