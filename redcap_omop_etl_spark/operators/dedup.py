@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from redcap_omop_etl_spark.operators.textstats import fingerprint_md5, normalized_text, ws_tokens
 from redcap_omop_etl_spark.sources.readers import Catalog, fan_out
@@ -145,19 +146,28 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int, df_cap: int | None) -> DataFrame:
+def _shingle_table(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    df_cap: int | None = None,
+) -> DataFrame:
+    """Doc-keyed distinct-shingle table ``(doc, t)``: the one shingle
+    explode behind every set-overlap pair, containment and PPJoin path.
+    ``df_cap`` drops shingles carried by more than ``df_cap`` docs."""
     # Shingling is interpreted HOF work — make sure it isn't serialized on
     # a too-narrow scan (no-op at scale).
-    sh = fan_out(df).select(F.col(id_col).alias("doc"), F.explode(shingles(F.col(text_col), n)).alias("s"))
+    sh = fan_out(df).select(F.col(id_col).alias("doc"), F.explode(shingles(F.col(text_col), n)).alias("t"))
     if df_cap is not None:
-        hot = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > df_cap).select("s")
+        hot = sh.groupBy("t").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > df_cap).select("t")
         # hint("merge"): the hot set grows with corpus size on dup-dense
         # data (every shingle of a large dup cluster crosses df_cap), and
         # its static size estimate (filter over aggregate) stays tiny, so
         # an unhinted plan gambles a multi-GB driver collect — 256x
         # mutated stress killed exactly that broadcast. Sort-merge is
-        # spill-safe at every scale; both sides already shuffle on s.
-        sh = sh.join(hot.hint("merge"), "s", "left_anti")
+        # spill-safe at every scale; both sides already shuffle on t.
+        sh = sh.join(hot.hint("merge"), "t", "left_anti")
     return sh
 
 
@@ -180,32 +190,29 @@ def ngram_jaccard_pairs(
     boilerplate).
     """
     return (
-        _pair_intersections(df, id_col, text_col, n, df_cap)
+        _pair_intersections(_shingle_table(df, id_col, text_col, n, df_cap))
         .withColumn("jaccard", F.col("i") / (F.col("sz1") + F.col("sz2") - F.col("i")))
         .filter(F.col("jaccard") >= threshold)
         .select("d1", "d2", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
-def _pair_intersections(
-    df: DataFrame, id_col: str, text_col: str, n: int, df_cap: int | None
-) -> DataFrame:
-    """Shared candidate pipeline for every set-overlap metric:
-    ``(d1, d2, i, sz1, sz2)`` — intersection count and both set sizes per
-    unordered candidate pair. Jaccard, containment (and any future Dice/
-    overlap variant) are thin arithmetic wrappers over this one frame, so
-    the shingle table, hot-cap guard, and join shape can never
-    diverge between metrics.
+def _pair_intersections(sh: DataFrame) -> DataFrame:
+    """Shared candidate pipeline for every set-overlap metric over a
+    ``(doc, t)`` token table: ``(d1, d2, i, sz1, sz2)`` — intersection
+    count and both set sizes per unordered pair sharing a token.
+    Jaccard, containment and the capped containment's clean tier are
+    thin arithmetic wrappers over this one frame, so the join shape can
+    never diverge between metrics.
 
-    No IMR cache on the exploded shingle table (round-12, measured:
-    5.7s vs 6.7s min-of-3 in-process alternation on dedup_containment
-    at sf0.1): its three consumers (size agg, both self-join sides)
-    re-run the fused scan→shingle→explode chain, but the two s-sorted
-    join sides are an identical subtree ReuseExchange computes once,
-    and the columnar cache build of the corpus×shingles table cost
-    more than every recompute combined. At 100 TB the exploded table
-    is ~5-10x corpus bytes — recompute keeps memory flat."""
-    sh = _shingle_table(df, id_col, text_col, n, df_cap)
+    No IMR cache on the exploded shingle table (measured: 5.7s vs 6.7s
+    min-of-3 in-process alternation on dedup_containment at sf0.1): its
+    three consumers (size agg, both self-join sides) re-run the fused
+    scan→shingle→explode chain, but the two t-sorted join sides are an
+    identical subtree ReuseExchange computes once, and the columnar
+    cache build of the corpus×shingles table cost more than every
+    recompute combined. At 100 TB the exploded table is ~5-10x corpus
+    bytes — recompute keeps memory flat."""
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -213,7 +220,7 @@ def _pair_intersections(
     # table) — pin spill-safe sort-merge instead of trusting misestimated
     # stats with a broadcast (the 256x-stress lesson)
     inter = (
-        a.join(b.hint("merge"), (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
+        a.join(b.hint("merge"), (F.col("a.t") == F.col("b.t")) & (F.col("a.doc") < F.col("b.doc")))
         .groupBy(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
         .agg(F.count(F.lit(1)).alias("i"))
     )
@@ -351,47 +358,31 @@ def _prefix_jaccard_pipeline(
 ) -> tuple[DataFrame, DataFrame | None]:
     """Shared PPJoin pipeline: (pairs, overflow) — overflow is None when
     uncapped. Plan notes live on the two public wrappers."""
-    from pyspark.sql.window import Window
-
-    # NO cache on the shingle table (round-12 reversal of the round-3
-    # pin, re-measured): the table feeds four differently-keyed
-    # exchanges (df count, ranked join, both verify sides), so each
-    # consumer's map stage re-runs the fused scan→shingle→explode chain
-    # — but that recompute is whole-stage-codegen over a skinny
-    # projection and measured CHEAPER (4.9s vs 8.1s full-query wall at
-    # sf0.1, min-of-3 idle) than materializing the columnar IMR cache of
-    # the exploded table, whose CachedBatch build cost dominated the
-    # query. At 100 TB the cache is also the wrong shape: the exploded
-    # token table is ~5-10x corpus bytes — recompute-per-consumer keeps
-    # memory flat while identical exchanges still dedupe via
-    # ReuseExchange inside the one executed plan.
-    toks = fan_out(df).select(
-        F.col(id_col).alias("doc"),
-        F.explode(shingles(F.col(text_col), n)).alias("t"),
-    )
+    # NO cache on the shingle table (re-measured): the table feeds four
+    # differently-keyed exchanges (df count, ranked join, both verify
+    # sides), so each consumer's map stage re-runs the fused
+    # scan→shingle→explode chain — but that recompute is
+    # whole-stage-codegen over a skinny projection and measured CHEAPER
+    # (4.9s vs 8.1s full-query wall at sf0.1, min-of-3 idle) than
+    # materializing the columnar IMR cache of the exploded table. At
+    # 100 TB the cache is also the wrong shape: the exploded token table
+    # is ~5-10x corpus bytes — recompute-per-consumer keeps memory flat
+    # while identical exchanges still dedupe via ReuseExchange inside
+    # the one executed plan.
+    toks = _shingle_table(df, id_col, text_col, n)
     dfreq = toks.groupBy("t").agg(F.count(F.lit(1)).alias("dfr"))
-    wdoc = Window.partitionBy("doc")
-    # dfreq is vocab-sized (Heaps-sublinear but unbounded) and statically
-    # underestimated — pinned sort-merge, never a driver-collected broadcast
-    ranked = (
-        toks.join(dfreq.hint("merge"), "t")
-        .withColumn("rn", F.row_number().over(wdoc.orderBy("dfr", "t")))
-        .withColumn("sz", F.count(F.lit(1)).over(wdoc))
-    )
-    prefix = ranked.filter(
-        F.col("rn") <= F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)) + 1
-    ).select("doc", "t", "rn", "sz")
+    prefix = _ppj_prefix(toks, dfreq, threshold)
     overflow = None
     if bucket_cap is not None:
         # cap the per-prefix-shingle candidate bucket: docs whose prefix
         # contains a HOT shingle (prefix bucket > cap) route whole to the
         # overflow channel; remaining buckets are <= cap, so candidates
         # are linear in corpus size. prefix feeds three consumers here
-        # (bucket counts, overflow, the anti-join) — uncached like toks
-        # (round 12): the ranked-join/window exchanges above are
-        # identical subtrees across consumers, so ReuseExchange runs
-        # them once, and skipping the IMR build measured faster
-        # (5.8s vs 11.5s min-of-5 on the capped query).
+        # (bucket counts, overflow, the anti-join) — uncached like toks:
+        # the ranked-join/window exchanges above are identical subtrees
+        # across consumers, so ReuseExchange runs them once, and skipping
+        # the IMR build measured faster (5.8s vs 11.5s min-of-5 on the
+        # capped query).
         hot = (
             prefix.groupBy("t")
             .agg(F.count(F.lit(1)).alias("bn"))
@@ -420,10 +411,10 @@ def _prefix_jaccard_pipeline(
     # can reach that bound is pruned BEFORE the verify join — typically
     # 2-5× fewer candidates, zero recall loss (the bound is exact, and
     # max-ing ub over all matches keeps the weakest sufficient witness).
-    # The pair-dedup groupBy replaces the old `.distinct()` — same
-    # shuffle, the bound rides along as an aggregate. The 1e-9 slack
-    # keeps a double-rounded RHS from ever exceeding the exact rational
-    # bound and wrongly pruning a boundary pair (ub is an exact integer).
+    # The pair-dedup groupBy replaces a `.distinct()` — same shuffle, the
+    # bound rides along as an aggregate. The 1e-9 slack keeps a
+    # double-rounded RHS from ever exceeding the exact rational bound
+    # and wrongly pruning a boundary pair (ub is an exact integer).
     ub = F.lit(1) + F.least(
         F.col("a.sz") - F.col("a.rn"), F.col("b.sz") - F.col("b.rn")
     )
@@ -441,12 +432,38 @@ def _prefix_jaccard_pipeline(
         )
         .select("d1", "d2", "sz1", "sz2")
     )
-    # the candidate row already carries BOTH full shingle-set sizes:
-    # ranked.sz is count-over-doc of the (distinct-shingle) token table,
-    # i.e. exactly what a separate sizes aggregate would recompute — so
-    # jaccard needs no size re-attach joins after the verify (round 9
-    # removed two sort-merge joins of the corpus-sized size table against
-    # the pair stream here; result-identical by construction).
+    return _ppj_verify(cand, toks, threshold), overflow
+
+
+def _ppj_prefix(toks: DataFrame, dfreq: DataFrame, threshold: float) -> DataFrame:
+    """PPJoin prefixes ``(doc, t, rn, sz)`` of a ``(doc, t)`` token
+    table: each doc's first ``sz - ceil(sz·threshold) + 1`` tokens in
+    ascending ``(dfr, t)`` order under the ``dfreq(t, dfr)`` table, with
+    ``rn`` the token's position and ``sz`` the doc's full token count.
+    A token missing from ``dfreq`` ranks at frequency 0 — the
+    frozen-order extension the incremental ticks rely on; where
+    ``dfreq`` is aggregated from ``toks`` itself every token matches."""
+    from pyspark.sql.window import Window
+
+    wdoc = Window.partitionBy("doc")
+    # dfreq is vocab-sized (Heaps-sublinear but unbounded) and statically
+    # underestimated — pinned sort-merge, never a driver-collected broadcast
+    ranked = (
+        toks.join(dfreq.hint("merge"), "t", "left")
+        .withColumn("rn", F.row_number().over(wdoc.orderBy(F.coalesce("dfr", F.lit(0)), "t")))
+        .withColumn("sz", F.count(F.lit(1)).over(wdoc))
+    )
+    return ranked.filter(
+        F.col("rn") <= F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)) + 1
+    ).select("doc", "t", "rn", "sz")
+
+
+def _ppj_verify(cand: DataFrame, toks: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard verify of PPJoin candidates: ``(d1, d2, sz1, sz2)``
+    rows plus a ``(doc, t)`` token table covering their docs →
+    ``(d1, d2, jaccard)`` for ``jaccard >= threshold``. The candidate
+    row carries both full shingle-set sizes (the prefix's ``sz``), so no
+    size table is re-aggregated and joined back after the verify."""
     inter = (
         cand.join(toks.alias("x").hint("merge"), F.col("x.doc") == F.col("d1"))
         .join(toks.alias("y").hint("merge"), (F.col("y.doc") == F.col("d2")) & (F.col("y.t") == F.col("x.t")))
@@ -457,12 +474,25 @@ def _prefix_jaccard_pipeline(
             F.first("sz2").alias("sz2"),
         )
     )
-    pairs = (
+    return (
         inter.withColumn("jaccard", F.col("i") / (F.col("sz1") + F.col("sz2") - F.col("i")))
         .filter(F.col("jaccard") >= threshold)
         .select("d1", "d2", F.round("jaccard", 6).alias("jaccard"))
     )
-    return pairs, overflow
+
+
+def _pair_and_overflow_rows(pairs: DataFrame, overflow: DataFrame) -> DataFrame:
+    """``(kind, d1, d2, jaccard)`` of a capped PPJoin result: one 'pair'
+    row per pair, then one 'overflow' row per routed doc with null pair
+    fields."""
+    return pairs.select(F.lit("pair").alias("kind"), "d1", "d2", "jaccard").unionByName(
+        overflow.select(
+            F.lit("overflow").alias("kind"),
+            F.col("doc").alias("d1"),
+            F.lit(None).cast("bigint").alias("d2"),
+            F.lit(None).cast("double").alias("jaccard"),
+        )
+    )
 
 
 def shingle_hashes(
@@ -649,6 +679,17 @@ def minhash_band_table(
     the per-shingle hash — see ``shingle_hashes``)."""
     sigs = minhash_signatures(df, num_hashes, n, text_col, id_col, family=family)
     return minhash_band_rows(sigs, num_hashes, bands)
+
+
+# Column types of ``minhash_band_table`` over a bigint ``doc_id`` — what
+# the cluster-state transitions join against their frozen hub table.
+BAND_TABLE_SCHEMA = T.StructType(
+    [
+        T.StructField("doc", T.LongType()),
+        T.StructField("band", T.IntegerType()),
+        T.StructField("bucket", T.StringType()),
+    ]
+)
 
 
 def bucket_min(banded: DataFrame) -> DataFrame:
@@ -1038,21 +1079,9 @@ def ppjoin_capped_sql_cte(threshold: float = 0.6, cap: int = _PPJOIN_GATE_CAP) -
     "family can no longer go quadratic on a 100 TB run.",
 )
 def dedup_prefix_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs, overflow = prefix_jaccard_pairs_capped(
-        Catalog(spark, sf_dir)["documents"],
-        threshold=0.6,
-        n=3,
-        bucket_cap=_PPJOIN_GATE_CAP,
-    )
-    return pairs.select(
-        F.lit("pair").alias("kind"), "d1", "d2", "jaccard"
-    ).unionByName(
-        overflow.select(
-            F.lit("overflow").alias("kind"),
-            F.col("doc").alias("d1"),
-            F.lit(None).cast("bigint").alias("d2"),
-            F.lit(None).cast("double").alias("jaccard"),
-        )
+    docs = Catalog(spark, sf_dir)["documents"]
+    return _pair_and_overflow_rows(
+        *prefix_jaccard_pairs_capped(docs, threshold=0.6, n=3, bucket_cap=_PPJOIN_GATE_CAP)
     )
 
 
@@ -1312,7 +1341,7 @@ def containment_pairs(
     c12 = F.col("i") / F.col("sz1")
     c21 = F.col("i") / F.col("sz2")
     return (
-        _pair_intersections(df, id_col, text_col, n, df_cap)
+        _pair_intersections(_shingle_table(df, id_col, text_col, n, df_cap))
         .filter(F.greatest(c12, c21) >= threshold)
         .select(
             "d1",
@@ -1334,10 +1363,10 @@ def containment_pairs_capped(
 ) -> tuple[DataFrame, DataFrame]:
     """Containment with a hot-shingle candidate cap + overflow channel —
     the ``prefix_jaccard_pairs_capped`` pattern ported to the asymmetric
-    metric (the round-6 verdict's ask: containment was the steepest
-    remaining safe-family slope at 16.1× time on 64× dup-dense data,
-    SCALE_r06, because a near-dup family of m ≤ df_cap members still
-    contributes ~m²/2 candidates from every family-shared shingle).
+    metric (containment was the steepest remaining safe-family slope at
+    16.1× time on 64× dup-dense data, SCALE_r06, because a near-dup
+    family of m ≤ df_cap members still contributes ~m²/2 candidates from
+    every family-shared shingle).
 
     Three shingle tiers by global document frequency ``dfr``:
 
@@ -1373,41 +1402,25 @@ def containment_pairs_capped(
     cont_2in1) among clean docs; overflow = (doc), one row per routed
     document.
     """
-    # no IMR caches on the exploded shingle chain (round-12, measured:
-    # 3.0s vs 6.3s min-of-3 in-process alternation at sf0.1) — the
-    # differently-keyed consumers re-run the fused explode chain, but
-    # identical exchange subtrees dedupe via ReuseExchange and the
-    # columnar cache build of a corpus×shingles table cost more than
-    # every recompute combined; at 100 TB it would also pin ~5-10x
-    # corpus bytes of storage memory
-    sh_all = fan_out(df).select(
-        F.col(id_col).alias("doc"), F.explode(shingles(F.col(text_col), n)).alias("s")
-    )
-    dfreq = sh_all.groupBy("s").agg(F.count(F.lit(1)).alias("dfr"))
-    boiler = dfreq.filter(F.col("dfr") > df_cap).select("s")
-    sh = sh_all.join(boiler.hint("merge"), "s", "left_anti")
+    # no IMR caches on the exploded shingle chain (measured: 3.0s vs 6.3s
+    # min-of-3 in-process alternation at sf0.1) — the differently-keyed
+    # consumers re-run the fused explode chain, but identical exchange
+    # subtrees dedupe via ReuseExchange and the columnar cache build of
+    # a corpus×shingles table cost more than every recompute combined;
+    # at 100 TB it would also pin ~5-10x corpus bytes of storage memory
+    sh_all = _shingle_table(df, id_col, text_col, n)
+    dfreq = sh_all.groupBy("t").agg(F.count(F.lit(1)).alias("dfr"))
+    boiler = dfreq.filter(F.col("dfr") > df_cap).select("t")
+    sh = sh_all.join(boiler.hint("merge"), "t", "left_anti")
     warm = dfreq.filter(
         (F.col("dfr") <= df_cap) & (F.col("dfr") > bucket_cap)
-    ).select("s")
-    overflow = sh.join(warm.hint("merge"), "s", "left_semi").select("doc").distinct()
+    ).select("t")
+    overflow = sh.join(warm.hint("merge"), "t", "left_semi").select("doc").distinct()
     clean = sh.join(overflow.hint("merge"), "doc", "left_anti")
-    sizes = clean.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        clean.alias("a")
-        .join(
-            clean.alias("b").hint("merge"),
-            (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .groupBy(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
     c12 = F.col("i") / F.col("sz1")
     c21 = F.col("i") / F.col("sz2")
     pairs = (
-        inter.join(
-            sizes.withColumnRenamed("doc", "d1").withColumnRenamed("sz", "sz1").hint("merge"), "d1"
-        )
-        .join(sizes.withColumnRenamed("doc", "d2").withColumnRenamed("sz", "sz2").hint("merge"), "d2")
+        _pair_intersections(clean)
         .filter(F.greatest(c12, c21) >= threshold)
         .select(
             "d1",
@@ -2089,10 +2102,17 @@ def corpus_span_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 10: incremental EXACT near-dup pairs — PPJoin against a FROZEN
-# prefix index (the exact-recall complement of the LSH-based
-# dedup_minhash_clusters_append ingest tick)
+# Incremental near-dup pairs — PPJoin against a FROZEN prefix index (the
+# exact-recall complement of the LSH-based dedup_minhash_clusters_append
+# ingest tick)
 # ---------------------------------------------------------------------------
+
+# Jaccard threshold of the incremental PPJoin index. The frozen base
+# prefix and every batch prefix are cut at this one value: a batch prefix
+# cut at any other threshold would no longer be guaranteed to share a
+# prefix shingle with each qualifying base partner, and recall would drop
+# without an error.
+_PPJ_THRESHOLD = 0.6
 
 # derived ingest batch: every 30th doc (mod-class 21) appended TWICE with
 # a shared 3-token suffix — each copy pairs with its source doc
@@ -2106,34 +2126,17 @@ _PPJ_APPEND_SUFFIX = " zzpp zzjoin zztail"
 def ppjoin_frozen_state(spark: SparkSession, sf_dir: str):
     """The persisted PPJoin index state for the base corpus:
     ``dfreq(t, dfr)`` (the frozen global shingle-frequency ORDER) and
-    ``prefix(doc, t, sz)`` (each doc's |d|-ceil(0.6|d|)+1 rarest
-    shingles under that order, plus its shingle-set size). Computed once
-    per (session, corpus), localCheckpoint-pinned — exactly what a
+    ``prefix(doc, t, rn, sz)`` (each doc's ``_PPJ_THRESHOLD`` prefix
+    under that order, with positions and its shingle-set size). Computed
+    once per (session, corpus), localCheckpoint-pinned — exactly what a
     production incremental PPJoin stores next to the corpus."""
-    from pyspark.sql.window import Window
 
     def build():
-        docs = Catalog(spark, sf_dir)["documents"]
-        toks = fan_out(docs).select(
-            F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"), 3)).alias("t")
-        )
+        toks = _shingle_table(Catalog(spark, sf_dir)["documents"])
         dfreq = (
             toks.groupBy("t").agg(F.count(F.lit(1)).alias("dfr")).transform(materialize)
         )
-        wdoc = Window.partitionBy("doc")
-        ranked = (
-            toks.join(dfreq.hint("merge"), "t")
-            .withColumn("rn", F.row_number().over(wdoc.orderBy("dfr", "t")))
-            .withColumn("sz", F.count(F.lit(1)).over(wdoc))
-        )
-        prefix = (
-            ranked.filter(
-                F.col("rn") <= F.col("sz") - F.ceil(F.col("sz") * F.lit(0.6)) + 1
-            )
-            .select("doc", "t", "sz")
-            .transform(materialize)
-        )
-        return dfreq, prefix
+        return dfreq, _ppj_prefix(toks, dfreq, _PPJ_THRESHOLD).transform(materialize)
 
     return session_memo(spark, ("ppjoin_frozen_state", sf_dir), build)
 
@@ -2141,25 +2144,23 @@ def ppjoin_frozen_state(spark: SparkSession, sf_dir: str):
 def _ppj_append_batch(
     spark: SparkSession,
     sf_dir: str,
-    threshold: float = 0.6,
     batch: DataFrame | None = None,
-    check_ids: bool = True,
 ):
     """Shared batch derivation + frozen-order prefix ranking for the
     incremental PPJoin family: returns ``(docs, batch, btoks, bprefix)``
     — the derived batch docs, their distinct shingle table
-    (persisted), and their prefix under the FROZEN base order
-    extended with unseen shingles at frequency 0.
+    (persisted), and their ``(doc, t, rn, sz)`` prefix under the FROZEN
+    base order extended with unseen shingles at frequency 0 (persisted).
 
     ``batch`` overrides the registered derived batch with a caller-
-    supplied ``(doc_id, text)`` frame (the production ingest path).
-    ``check_ids`` (default True) enforces the id-disjointness
-    precondition at runtime: every base doc has >= 1 row in the frozen
-    prefix index (sz - ceil(0.6*sz) + 1 >= 1 for any non-empty shingle
-    set), so a batch id colliding with ``prefix.doc`` would alias two
-    distinct documents in the candidate/verify joins and silently
-    corrupt the pair set. One short-circuited semi-join per tick."""
-    from pyspark.sql.window import Window
+    supplied ``(doc_id, text)`` frame (the production ingest path). The
+    id-disjointness precondition is enforced at runtime: every base doc
+    has >= 1 row in the frozen prefix index (sz - ceil(0.6*sz) + 1 >= 1
+    for any non-empty shingle set), so a batch id colliding with
+    ``prefix.doc`` would alias two distinct documents in the
+    candidate/verify joins and silently corrupt the pair set. One
+    short-circuited semi-join per tick."""
+    from redcap_omop_etl_spark.validation import require_disjoint_ids
 
     docs = Catalog(spark, sf_dir)["documents"]
     dfreq, base_prefix = ppjoin_frozen_state(spark, sf_dir)
@@ -2174,55 +2175,82 @@ def _ppj_append_batch(
                 (F.col("doc_id") + F.lit(2 * _PPJ_APPEND_SHIFT)).alias("doc_id"), "text"
             )
         )
-    if check_ids:
-        from redcap_omop_etl_spark.validation import require_disjoint_ids
-
-        require_disjoint_ids(
-            base_prefix.select("doc"),
-            batch.select("doc_id"),
-            "dedup_prefix_jaccard_append",
-        )
-    btoks = fan_out(batch).select(
-        F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"), 3)).alias("t")
-    ).transform(materialize, "persist")
-    wdoc = Window.partitionBy("doc")
-    brank = (
-        btoks.join(dfreq.hint("merge"), "t", "left")
-        .withColumn("dfr0", F.coalesce("dfr", F.lit(0)))
-        .withColumn("rn", F.row_number().over(wdoc.orderBy("dfr0", "t")))
-        .withColumn("sz", F.count(F.lit(1)).over(wdoc))
+    require_disjoint_ids(
+        base_prefix.select("doc"),
+        batch.select("doc_id"),
+        "dedup_prefix_jaccard_append",
     )
-    bprefix = brank.filter(
-        F.col("rn") <= F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)) + 1
-    ).select("doc", "t").transform(materialize, "persist")
+    btoks = _shingle_table(batch).transform(materialize, "persist")
+    bprefix = _ppj_prefix(btoks, dfreq, _PPJ_THRESHOLD).transform(materialize, "persist")
     return docs, batch, btoks, bprefix
 
 
-
-def _ppj_append_exact(
+def _ppj_append_tick(
     spark: SparkSession,
     sf_dir: str,
-    threshold: float = 0.6,
+    cap: int | None = None,
     parts=None,
-):
-    """The exact incremental PPJoin tick body (see the registered
-    ``dedup_prefix_jaccard_append`` docstring for the full exact-recall
-    argument). ``parts`` accepts a precomputed ``_ppj_append_batch``
-    tuple so the router can share one batch derivation + guard."""
+) -> tuple[DataFrame, DataFrame | None]:
+    """The incremental PPJoin tick body: ``(pairs, overflow)``, pairs =
+    ``(d1, d2, jaccard)`` involving a batch doc, overflow = ``(doc)``
+    routed docs or None when uncapped. ``parts`` accepts a precomputed
+    ``_ppj_append_batch`` tuple so the router shares one batch
+    derivation + guard.
+
+    ``cap=None`` is the exact tick (``dedup_prefix_jaccard_append``
+    holds the exact-recall argument). An integer ``cap`` is the capped
+    tick (``dedup_prefix_jaccard_append_capped`` holds the hot-bucket
+    routing semantics): gate corpora pin the routing channel at cap=2,
+    production runs cap=64."""
     _dfreq, base_prefix = ppjoin_frozen_state(spark, sf_dir)
     docs, _batch, btoks, bprefix = (
-        parts if parts is not None else _ppj_append_batch(spark, sf_dir, threshold)
+        parts if parts is not None else _ppj_append_batch(spark, sf_dir)
     )
+    overflow = None
+    if cap is not None:
+        base_cnt = base_prefix.groupBy("t").agg(F.count(F.lit(1)).alias("bc"))
+        bat_cnt = bprefix.groupBy("t").agg(F.count(F.lit(1)).alias("nc"))
+        hot = (
+            base_cnt.join(bat_cnt, "t", "full_outer")
+            .filter(
+                F.coalesce("bc", F.lit(0)) + F.coalesce("nc", F.lit(0)) > cap
+            )
+            .select("t")
+            .transform(materialize, "persist")
+        )
+        o_base = (
+            base_prefix.join(hot.hint("merge"), "t", "left_semi")
+            .select("doc")
+            .distinct()
+            .transform(materialize, "persist")
+        )
+        o_batch = (
+            bprefix.join(hot.hint("merge"), "t", "left_semi").select("doc").distinct()
+            .transform(materialize, "persist")
+        )
+        overflow = o_base.unionByName(o_batch).distinct()
+        base_prefix = base_prefix.join(o_base, "doc", "left_anti")
+        bprefix = bprefix.join(o_batch, "doc", "left_anti").transform(materialize, "persist")
+    # candidates: base-vs-new by probing the frozen base prefix, new-vs-new
+    # by a batch-sized prefix self-join; both carry the two set sizes
     cand_nb = (
-        base_prefix.select(F.col("doc").alias("d1"), "t")
-        .join(bprefix.select(F.col("doc").alias("d2"), "t").hint("merge"), "t")
-        .select("d1", "d2")
+        base_prefix.select(F.col("doc").alias("d1"), "t", F.col("sz").alias("sz1"))
+        .join(
+            bprefix.select(F.col("doc").alias("d2"), "t", F.col("sz").alias("sz2")).hint("merge"),
+            "t",
+        )
+        .select("d1", "d2", "sz1", "sz2")
         .distinct()
     )
     a, b = bprefix.alias("a"), bprefix.alias("b")
     cand_bb = (
         a.join(b.hint("merge"), (F.col("a.t") == F.col("b.t")) & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
+        .select(
+            F.col("a.doc").alias("d1"),
+            F.col("b.doc").alias("d2"),
+            F.col("a.sz").alias("sz1"),
+            F.col("b.sz").alias("sz2"),
+        )
         .distinct()
     )
     cand = cand_nb.unionByName(cand_bb).distinct().transform(materialize, "persist")
@@ -2230,35 +2258,18 @@ def _ppj_append_exact(
     base_cand = cand.filter(F.col("d1") < _PPJ_APPEND_SHIFT).select(
         F.col("d1").alias("doc_id")
     ).distinct()
-    vtoks_base = fan_out(docs.join(base_cand.hint("merge"), "doc_id", "left_semi")).select(
-        F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"), 3)).alias("t")
+    vtoks = (
+        _shingle_table(docs.join(base_cand.hint("merge"), "doc_id", "left_semi"))
+        .unionByName(btoks)
+        .transform(materialize, "persist")
     )
-    vtoks = vtoks_base.unionByName(btoks).transform(materialize, "persist")
-    x, y = vtoks.alias("x"), vtoks.alias("y")
-    inter = (
-        cand.join(x.hint("merge"), F.col("x.doc") == F.col("d1"))
-        .join(
-            y.hint("merge"),
-            (F.col("y.doc") == F.col("d2")) & (F.col("y.t") == F.col("x.t")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sizes = vtoks.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    out = (
-        inter.join(sizes.withColumnRenamed("doc", "d1").withColumnRenamed("sz", "sz1").hint("merge"), "d1")
-        .join(sizes.withColumnRenamed("doc", "d2").withColumnRenamed("sz", "sz2").hint("merge"), "d2")
-        .withColumn("jaccard", F.col("i") / (F.col("sz1") + F.col("sz2") - F.col("i")))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return out.select(
-        "d1",
-        "d2",
-        F.round("jaccard", 6).alias("jaccard"),
-        F.when(F.col("d1") >= _PPJ_APPEND_SHIFT, "new_new")
-        .otherwise("base_new")
-        .alias("pair_kind"),
-    )
+    return _ppj_verify(cand, vtoks, _PPJ_THRESHOLD), overflow
+
+
+def _append_pair_kind() -> Column:
+    """``new_new`` for a batch-batch pair, ``base_new`` for a base-batch
+    one (batch ids sit at or above ``_PPJ_APPEND_SHIFT``; d1 < d2)."""
+    return F.when(F.col("d1") >= _PPJ_APPEND_SHIFT, "new_new").otherwise("base_new")
 
 
 @register(
@@ -2333,7 +2344,8 @@ def _ppj_append_exact(
     "(bounded star edges, no pair emission) or a capped composition.",
 )
 def dedup_prefix_jaccard_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ppj_append_exact(spark, sf_dir, threshold=0.6)
+    pairs, _ = _ppj_append_tick(spark, sf_dir)
+    return pairs.withColumn("pair_kind", _append_pair_kind())
 
 
 @register(
@@ -2356,124 +2368,10 @@ def dedup_prefix_jaccard_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     "crosses it; the cap=2 twin exercises the routing channel).",
 )
 def dedup_prefix_jaccard_cap64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs, overflow = prefix_jaccard_pairs_capped(
-        Catalog(spark, sf_dir)["documents"], threshold=0.6, n=3, bucket_cap=64
+    docs = Catalog(spark, sf_dir)["documents"]
+    return _pair_and_overflow_rows(
+        *prefix_jaccard_pairs_capped(docs, threshold=0.6, n=3, bucket_cap=64)
     )
-    return pairs.select(
-        F.lit("pair").alias("kind"), "d1", "d2", "jaccard"
-    ).unionByName(
-        overflow.select(
-            F.lit("overflow").alias("kind"),
-            F.col("doc").alias("d1"),
-            F.lit(None).cast("bigint").alias("d2"),
-            F.lit(None).cast("double").alias("jaccard"),
-        )
-    )
-
-
-def _ppj_append_capped_tick(
-    spark: SparkSession,
-    sf_dir: str,
-    cap: int,
-    threshold: float = 0.6,
-    parts=None,
-):
-    """The capped incremental PPJoin tick body (see the registered
-    ``dedup_prefix_jaccard_append_capped`` docstring for the hot-bucket
-    routing semantics). ``parts`` accepts a precomputed
-    ``_ppj_append_batch`` tuple so the router shares one batch
-    derivation + guard; ``cap`` is the prefix-bucket cap (gate corpora
-    pin the routing channel at cap=2; production runs cap=64)."""
-    _dfreq, base_prefix = ppjoin_frozen_state(spark, sf_dir)
-    docs, _batch, btoks, bprefix = (
-        parts if parts is not None else _ppj_append_batch(spark, sf_dir, threshold)
-    )
-    base_cnt = base_prefix.groupBy("t").agg(F.count(F.lit(1)).alias("bc"))
-    bat_cnt = bprefix.groupBy("t").agg(F.count(F.lit(1)).alias("nc"))
-    hot = (
-        base_cnt.join(bat_cnt, "t", "full_outer")
-        .filter(
-            F.coalesce("bc", F.lit(0)) + F.coalesce("nc", F.lit(0)) > cap
-        )
-        .select("t")
-        .transform(materialize, "persist")
-    )
-    o_base = (
-        base_prefix.join(hot.hint("merge"), "t", "left_semi")
-        .select("doc")
-        .distinct()
-        .transform(materialize, "persist")
-    )
-    o_batch = (
-        bprefix.join(hot.hint("merge"), "t", "left_semi").select("doc").distinct()
-        .transform(materialize, "persist")
-    )
-    clean_base = base_prefix.join(o_base, "doc", "left_anti")
-    clean_batch = bprefix.join(o_batch, "doc", "left_anti").transform(materialize, "persist")
-    cand_nb = (
-        clean_base.select(F.col("doc").alias("d1"), "t")
-        .join(clean_batch.select(F.col("doc").alias("d2"), "t").hint("merge"), "t")
-        .select("d1", "d2")
-        .distinct()
-    )
-    a, b = clean_batch.alias("a"), clean_batch.alias("b")
-    cand_bb = (
-        a.join(
-            b.hint("merge"),
-            (F.col("a.t") == F.col("b.t")) & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
-        .distinct()
-    )
-    cand = cand_nb.unionByName(cand_bb).distinct().transform(materialize, "persist")
-    base_cand = (
-        cand.filter(F.col("d1") < _PPJ_APPEND_SHIFT)
-        .select(F.col("d1").alias("doc_id"))
-        .distinct()
-    )
-    vtoks_base = fan_out(
-        docs.join(base_cand.hint("merge"), "doc_id", "left_semi")
-    ).select(
-        F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"), 3)).alias("t")
-    )
-    vtoks = vtoks_base.unionByName(btoks).transform(materialize, "persist")
-    x, y = vtoks.alias("x"), vtoks.alias("y")
-    inter = (
-        cand.join(x.hint("merge"), F.col("x.doc") == F.col("d1"))
-        .join(
-            y.hint("merge"),
-            (F.col("y.doc") == F.col("d2")) & (F.col("y.t") == F.col("x.t")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sizes = vtoks.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    pairs = (
-        inter.join(
-            sizes.withColumnRenamed("doc", "d1").withColumnRenamed("sz", "sz1").hint("merge"),
-            "d1",
-        )
-        .join(
-            sizes.withColumnRenamed("doc", "d2").withColumnRenamed("sz", "sz2").hint("merge"),
-            "d2",
-        )
-        .withColumn("jaccard", F.col("i") / (F.col("sz1") + F.col("sz2") - F.col("i")))
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.lit("pair").alias("kind"), "d1", "d2", F.round("jaccard", 6).alias("jaccard")
-        )
-    )
-    overflow_rows = (
-        o_base.unionByName(o_batch)
-        .distinct()
-        .select(
-            F.lit("overflow").alias("kind"),
-            F.col("doc").alias("d1"),
-            F.lit(None).cast("bigint").alias("d2"),
-            F.lit(None).cast("double").alias("jaccard"),
-        )
-    )
-    return pairs.unionByName(overflow_rows)
 
 
 @register(
@@ -2547,7 +2445,7 @@ def _ppj_append_capped_tick(
     "(pairs restricted to batch-involving; overflow rows complete).",
 )
 def dedup_prefix_jaccard_append_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ppj_append_capped_tick(spark, sf_dir, cap=_PPJOIN_GATE_CAP)
+    return _pair_and_overflow_rows(*_ppj_append_tick(spark, sf_dir, cap=_PPJOIN_GATE_CAP))
 
 
 @register(
@@ -2583,9 +2481,8 @@ def dedup_containment_cap64(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 11: automated ingest-tick routing — the measured dup-density
-# boundary (SCALE_r10 `ppjoin_append_boundary`) moves from a manual
-# docstring rule into code
+# Automated ingest-tick routing — the measured dup-density boundary
+# (SCALE_r10 `ppjoin_append_boundary`) as a runtime decision
 # ---------------------------------------------------------------------------
 
 # Route thresholds, in estimated candidate pairs PER BATCH DOC. The
@@ -2697,7 +2594,8 @@ def _ingest_tick_routed(spark: SparkSession, sf_dir: str, batch=None) -> DataFra
     """Shared body of the routed ingest tick: probe, pick, run. The
     first output row is the routing audit record (kind='probe',
     k1=est_cand, k2=n_batch) so a pipeline log captures WHY the route
-    was chosen.
+    was chosen. The exact and capped routes are the one append tick body
+    (``_ppj_append_tick``) without and with the production cap.
 
     Caller-supplied batches: the id guard enforces only DISJOINTNESS
     (sufficient for correctness of every route's pair/cluster set), but
@@ -2707,25 +2605,7 @@ def _ingest_tick_routed(spark: SparkSession, sf_dir: str, batch=None) -> DataFra
     route, est, nb, parts = ppjoin_ingest_probe(spark, sf_dir, batch=batch)
     _docs, batch, _btoks, _bprefix = parts
     audit = spark.createDataFrame([(route, "probe", est, nb, None)], _ROUTED_SCHEMA)
-    if route == "exact":
-        body = _ppj_append_exact(spark, sf_dir, parts=parts).select(
-            F.lit(route).alias("route"),
-            F.col("pair_kind").alias("kind"),
-            F.col("d1").alias("k1"),
-            F.col("d2").alias("k2"),
-            F.col("jaccard").alias("score"),
-        )
-    elif route == "capped":
-        body = _ppj_append_capped_tick(
-            spark, sf_dir, cap=_ROUTE_PROD_CAP, parts=parts
-        ).select(
-            F.lit(route).alias("route"),
-            "kind",
-            F.col("d1").alias("k1"),
-            F.col("d2").alias("k2"),
-            F.col("jaccard").alias("score"),
-        )
-    else:
+    if route == "cluster":
         body = _ppj_cluster_route_delta(spark, sf_dir, batch).select(
             F.lit(route).alias("route"),
             "kind",
@@ -2733,6 +2613,21 @@ def _ingest_tick_routed(spark: SparkSession, sf_dir: str, batch=None) -> DataFra
             "k2",
             F.lit(None).cast("double").alias("score"),
         )
+        return audit.unionByName(body)
+    if route == "exact":
+        pairs, _ = _ppj_append_tick(spark, sf_dir, parts=parts)
+        rows = pairs.select(_append_pair_kind().alias("kind"), "d1", "d2", "jaccard")
+    else:
+        rows = _pair_and_overflow_rows(
+            *_ppj_append_tick(spark, sf_dir, cap=_ROUTE_PROD_CAP, parts=parts)
+        )
+    body = rows.select(
+        F.lit(route).alias("route"),
+        "kind",
+        F.col("d1").alias("k1"),
+        F.col("d2").alias("k2"),
+        F.col("jaccard").alias("score"),
+    )
     return audit.unionByName(body)
 
 
@@ -2887,9 +2782,9 @@ def _dense_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ingest_tick_routed",
     _routed_oracle_sql(_ROUTED_BATCH_SQL),
-    doc="AUTOMATED ingest-tick routing — the round-10 verdict's top "
-    "item: the measured dup-density boundary of the exact PPJoin tick "
-    "(SCALE_r10: 28x at 16x dup-dense replicas) becomes a runtime "
+    doc="AUTOMATED ingest-tick routing: the measured dup-density "
+    "boundary of the exact PPJoin tick (SCALE_r10: 28x at 16x dup-dense "
+    "replicas) becomes a runtime "
     "decision instead of a docstring rule. A cheap integer probe over "
     "the batch's prefix-bucket counts joined to the FROZEN base prefix "
     "index upper-bounds the exact tick's candidate volume "

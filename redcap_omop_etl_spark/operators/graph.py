@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 # alone 13.5/14.9/12.6 -> 8.9/10.4/8.3 s.
 from redcap_omop_etl_spark.caching import materialize, session_memo
 from redcap_omop_etl_spark.operators.dedup import (
+    BAND_TABLE_SCHEMA,
     _PPJOIN_GATE_CAP,
     bucket_hubs,
     bucket_min,
@@ -80,7 +81,6 @@ def connected_components(
     src: str = "d1",
     dst: str = "d2",
     max_iter: int = 30,
-    neighborhood_min: str = "window",
 ) -> DataFrame:
     """Connected components of an undirected pair graph.
 
@@ -109,26 +109,17 @@ def connected_components(
     xxhash64-sum) signature; exhausting ``max_iter`` RAISES instead of
     returning unconverged labels.
 
-    ``neighborhood_min`` picks how the per-center minimum attaches:
-
-    - ``"window"`` (default): ``min().over(Window.partitionBy(center))``
-      — ONE exchange per half-round (round-9 rewrite, cold cluster
-      builds −20–32%). Bound, stated plainly: a window has no map-side
-      partial aggregation, so one task receives each center's FULL
-      neighborhood; an extreme first-round hub (a template family that
-      is a large fraction of the corpus) concentrates its degree in a
-      single task. The ``--skewed`` regime (one family = 10% of docs)
-      holds fine because star edges already cap per-BUCKET degree and
-      contraction halves hub degree per round, but the exposure is real
-      for adversarially hub-heavy edge inputs fed directly.
-    - ``"groupby"``: groupBy-min + join-back — three exchanges per
-      half-round, but the aggregation combines map-side, so a
-      giant-hub neighborhood arrives at the reducer as one partial per
-      mapper. The spill-safe fallback for hub-degree ≫ task-memory
-      graphs.
+    The per-center minimum attaches through
+    ``min().over(Window.partitionBy(center))``: ONE exchange per
+    half-round. Bound, stated plainly: a window has no map-side partial
+    aggregation, so one task receives each center's FULL neighborhood;
+    an extreme first-round hub (a template family that is a large
+    fraction of the corpus) concentrates its degree in a single task.
+    The ``--skewed`` regime (one family = 10% of docs) holds fine
+    because star edges already cap per-BUCKET degree and contraction
+    halves hub degree per round, but the exposure is real for
+    adversarially hub-heavy edge inputs fed directly.
     """
-    if neighborhood_min not in ("window", "groupby"):
-        raise ValueError(f"neighborhood_min: {neighborhood_min!r}")
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # a node appearing ONLY in self-loops is still a node of the graph —
     # a singleton component (the pre-round-8 propagation semantics,
@@ -190,7 +181,7 @@ def connected_components(
     # are tiny, so this is a cluster win too.
     for rounds in range(1, max_iter + 1):
         with small_plan_rounds(e.sparkSession, sig[0]):
-            e = _cc_round(e, neighborhood_min)
+            e = _cc_round(e)
             # ONE job per round: the signature materializes the checkpoint
             new_sig = _signature(e)
         if new_sig == sig:
@@ -210,7 +201,7 @@ def connected_components(
     return _with_singletons(comp)
 
 
-def _cc_round(e: DataFrame, neighborhood_min: str) -> DataFrame:
+def _cc_round(e: DataFrame) -> DataFrame:
     """One LARGE-STAR + SMALL-STAR contraction round over a canonical
     (u > v) edge table; returns the next round's canonical edge table,
     lazily localCheckpoint'ed (the caller's signature job materializes
@@ -228,14 +219,8 @@ def _cc_round(e: DataFrame, neighborhood_min: str) -> DataFrame:
     nbrs = e.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
         e.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
-    if neighborhood_min == "window":
-        m_a = F.least(F.min("b").over(Window.partitionBy("a")), F.col("a"))
-        with_min = nbrs.withColumn("m", m_a)
-    else:
-        mins = nbrs.groupBy("a").agg(F.min("b").alias("__mb"))
-        with_min = nbrs.join(mins, "a").withColumn(
-            "m", F.least(F.col("__mb"), F.col("a"))
-        )
+    m_a = F.least(F.min("b").over(Window.partitionBy("a")), F.col("a"))
+    with_min = nbrs.withColumn("m", m_a)
     large = (
         with_min.where(F.col("b") > F.col("a"))
         .select(F.col("b").alias("u"), F.col("m").alias("v"))
@@ -247,14 +232,9 @@ def _cc_round(e: DataFrame, neighborhood_min: str) -> DataFrame:
     # count is exactly one per directed (b > a) edge, duplicates of
     # (u, v) pairs don't change the window min, and the single
     # canonical distinct below dedups the round's output once.
-    if neighborhood_min == "window":
-        sm_all = large.withColumn(
-            "m", F.min("v").over(Window.partitionBy("u"))
-        )
-    else:
-        umins = large.groupBy("u").agg(F.min("v").alias("__mu"))
-        sm_all = large.join(umins, "u").withColumn("m", F.col("__mu"))
-    sm_all = sm_all.select("u", "v", "m")
+    sm_all = large.withColumn(
+        "m", F.min("v").over(Window.partitionBy("u"))
+    ).select("u", "v", "m")
     small = (
         sm_all.select(F.col("v").alias("u"), F.col("m").alias("v"))
         .unionByName(sm_all.select("u", F.col("m").alias("v")))
@@ -452,7 +432,6 @@ def pagerank(
     n_iters: int = 10,
     src_col: str = "u",
     dst_col: str = "v",
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """Damped PageRank over an undirected edge list (each edge walks both
     ways). Per iteration: ranks join the static degree-annotated edge
@@ -463,12 +442,10 @@ def pagerank(
     purpose: the symmetrized edge list gives every node in-degree ≥ 1,
     so the destination aggregate already covers the full node set.
 
-    ``broadcast_ranks=True`` (default) broadcasts the rank table into the
-    edge join, so the big, static edge list is never reshuffled — the
-    GraphX/Pregel-style plan: ranks are O(nodes) (a long + a double per
-    node; ~1 GB per 60M nodes) while edges are 10-100× that. For graphs
-    whose rank table exceeds executor memory, set False to fall back to
-    a partitioned shuffle join. Deterministic: no RNG, fixed iteration
+    The rank table is broadcast into the edge join, so the big, static
+    edge list is never reshuffled — the GraphX/Pregel-style plan: ranks
+    are O(nodes) (a long + a double per node; ~1 GB per 60M nodes) while
+    edges are 10-100× that. Deterministic: no RNG, fixed iteration
     count; exactness pinned by pytest against a dense NumPy solve.
     """
     both = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")).unionByName(
@@ -491,9 +468,8 @@ def pagerank(
     # partial agg), so the node count is the round working set
     with small_plan_rounds(edges.sparkSession, n):
         for _ in range(n_iters):
-            r = F.broadcast(ranks) if broadcast_ranks else ranks
             ranks = (
-                r.join(contrib_edges, ranks.node == contrib_edges.s)
+                F.broadcast(ranks).join(contrib_edges, ranks.node == contrib_edges.s)
                 .select(
                     F.col("d").alias("node"), (F.col("rank") / F.col("deg")).alias("c")
                 )
@@ -2073,16 +2049,22 @@ def minhash_cluster_state_append(
     caller proves disjointness by construction (e.g. a monotonically
     id-assigned ingest ledger).
 
+    ``batch_banded`` must carry ``minhash_band_table``'s column types
+    (``dedup.BAND_TABLE_SCHEMA``); a mistyped table raises
+    ``SchemaValidationError`` naming the column, from driver-side
+    metadata, before any merge job.
+
     The batch-only band rows with their bucket minimum are materialized
     once (batch-sized): they feed both the merge CC's batch star and the
     hub extension."""
-    if check_ids:
-        from redcap_omop_etl_spark.validation import require_disjoint_ids
+    from redcap_omop_etl_spark.validation import expect_schema, require_disjoint_ids
 
+    if check_ids:
         base_ids = base_comp.select(F.col("node").alias("__id")).unionByName(
             hubs.select(F.col("hub").alias("__id"))
         )
         require_disjoint_ids(base_ids, batch_banded.select("doc"), "minhash_cluster_state_append")
+    expect_schema(batch_banded, BAND_TABLE_SCHEMA, strict=False)
     only_m = materialize(_batch_only_min(batch_banded, hubs))
     merged = incremental_minhash_components(base_comp, hubs, batch_banded, bucket_star(only_m))
     rep_map = merged.select(

@@ -235,15 +235,31 @@ def register(spark) -> None:
     driver running from another cwd) — register this module for
     pickle-by-value so the class travels with the plan instead of by
     module reference.
+
+    Spark checks the name against the ACTIVE session rather than the one
+    the call goes through, so a session that is not active (e.g. from
+    ``newSession()``) is made active for the call and the previous active
+    session is restored after it.
     """
     import sys
 
     from pyspark import cloudpickle
+    from pyspark.sql import SparkSession
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
     manager = spark._jsparkSession.sessionState().dataSourceManager()
-    if not manager.dataSourceExists(RestEavDataSource.name()):
+    if manager.dataSourceExists(RestEavDataSource.name()):
+        return
+    jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+    prev = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
         spark.dataSource.register(RestEavDataSource)
+    finally:
+        if prev.isDefined():
+            jsession.setActiveSession(prev.get())
+        else:
+            jsession.clearActiveSession()
 
 
 @dataclass

@@ -141,8 +141,9 @@ class MaintenancePreconditionError(ValueError):
     the runtime guards below so a bad batch fails loudly instead of
     producing a silently-wrong incremental result (the append proofs in
     ``similarity.semdedup_flags_append`` / ``graph.
-    minhash_cluster_state_append`` / ``dedup._ppj_append_batch`` hold
-    only under these conditions)."""
+    minhash_cluster_state_append`` / ``dedup._ppj_append_tick``, whose
+    batch ``dedup._ppj_append_batch`` guards, hold only under these
+    conditions)."""
 
 
 def require_monotonic_ids(

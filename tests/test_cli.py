@@ -134,9 +134,8 @@ def test_one_extract_scan_per_run(spark, ini_path, tmp_path, monkeypatch):
 def test_source_registered_once_per_session(spark, ini_path, monkeypatch):
     """Two CLI runs on one session register the rest_eav source once:
     re-registering would pickle the class again and make Spark warn that
-    it replaced a registered data source on every run."""
-    from pyspark.sql import SparkSession
-
+    it replaced a registered data source on every run. The session is
+    not the active one, which registration must not depend on."""
     fresh = spark.newSession()  # shares the context, has no rest_eav yet
     calls = []
     real = type(spark.dataSource).register
@@ -146,12 +145,6 @@ def test_source_registered_once_per_session(spark, ini_path, monkeypatch):
         return real(self, cls)
 
     monkeypatch.setattr(type(spark.dataSource), "register", spy)
-    # Spark resolves a new source's name against the thread's active session
-    jsession = SparkSession._get_j_spark_session_class(spark._jvm)
-    jsession.setActiveSession(fresh._jsparkSession)
-    try:
-        for _ in range(2):
-            assert cli.main(["-c", ini_path, "-f"], spark=fresh)["kept_rows"] > 0
-    finally:
-        jsession.setActiveSession(spark._jsparkSession)
+    for _ in range(2):
+        assert cli.main(["-c", ini_path, "-f"], spark=fresh)["kept_rows"] > 0
     assert calls == ["rest_eav"]

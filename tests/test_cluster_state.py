@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -102,6 +103,20 @@ class TestIncrementalClusterAppend:
             d for d in appended if got[d][0] < _CLUSTER_APPEND_SHIFT
         ]
         assert joined_base, "no appended doc joined an existing cluster"
+
+    def test_mistyped_band_table_rejected_by_name(self, spark):
+        """A band table whose bucket is not a string fails up front with
+        an error naming the column, not deep inside the merge plan."""
+        from redcap_omop_etl_spark.operators.graph import (
+            minhash_cluster_state_append,
+        )
+        from redcap_omop_etl_spark.validation import SchemaValidationError
+
+        base_comp = spark.createDataFrame([(1, 1), (2, 1)], "node long, component long")
+        hubs = spark.createDataFrame([(0, "b1", 1)], "band int, bucket string, hub long")
+        banded = spark.createDataFrame([(100, 0, 7)], "doc long, band int, bucket long")
+        with pytest.raises(SchemaValidationError, match="bucket"):
+            minhash_cluster_state_append(base_comp, hubs, banded)
 
 
 class TestUpsertMultiTick:

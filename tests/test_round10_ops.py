@@ -1,6 +1,6 @@
 """Round-10 operator tests: deletion maintenance (cluster table +
 IVF-PQ index), incremental SemDeDup, incremental retrieval stats, and
-the connected-components groupby fallback knob."""
+the connected-components neighborhood minimum."""
 
 from __future__ import annotations
 
@@ -11,9 +11,9 @@ from tests.conftest import SF_SMOKE
 
 
 class TestCcNeighborhoodMinKnob:
-    """The groupby fallback (map-side partial aggregation for
-    adversarially hub-heavy graphs) must produce the identical
-    component table as the default keyed-window form."""
+    """The keyed-window neighborhood minimum labels every component by
+    its minimum node on a hub-heavy graph, a chain, a self-loop and a
+    2-cycle."""
 
     def test_fallback_matches_window_on_hub_and_chain(self, spark):
         from redcap_omop_etl_spark.operators.graph import connected_components
@@ -26,25 +26,12 @@ class TestCcNeighborhoodMinKnob:
             + [(400, 400), (500, 501), (501, 500)]
         )
         df = spark.createDataFrame(edges, "d1 long, d2 long")
-        a = {
-            (r["node"], r["component"])
-            for r in connected_components(df, neighborhood_min="window").collect()
-        }
-        b = {
-            (r["node"], r["component"])
-            for r in connected_components(df, neighborhood_min="groupby").collect()
-        }
-        assert a == b
+        lbl = {r["node"]: r["component"] for r in connected_components(df).collect()}
         # hub family all labeled 0; chain labeled by its min
-        lbl = dict(a)
-        assert lbl[200] == 0 and lbl[320] == 300 and lbl[400] == 400
-
-    def test_unknown_knob_rejected(self, spark):
-        from redcap_omop_etl_spark.operators.graph import connected_components
-
-        df = spark.createDataFrame([(1, 2)], "d1 long, d2 long")
-        with pytest.raises(ValueError):
-            connected_components(df, neighborhood_min="bogus")
+        assert all(lbl[i] == 0 for i in range(201))
+        assert all(lbl[300 + i] == 300 for i in range(21))
+        assert lbl[400] == 400 and lbl[500] == 500 and lbl[501] == 500
+        assert len(lbl) == 201 + 21 + 1 + 2
 
 
 class TestClustersDelete:
@@ -405,90 +392,3 @@ class TestRetrievalIndexDelete:
             .collect()
         }
         assert {t: (r["df"], r["cf"]) for t, r in rows.items()} == direct
-
-
-class TestPpjoinAppend:
-    """dedup_prefix_jaccard_append: incremental exact pairs against the
-    frozen prefix index — every output pair involves a batch doc, the
-    guaranteed batch structure (source pair + twin pair) is found, and
-    the frozen-order extension leaves base prefixes untouched."""
-
-    def test_batch_pairs_found_and_no_base_base(self, spark):
-        from redcap_omop_etl_spark.operators.dedup import (
-            _PPJ_APPEND_MOD,
-            _PPJ_APPEND_RES,
-            _PPJ_APPEND_SHIFT,
-            dedup_prefix_jaccard_append,
-        )
-        from redcap_omop_etl_spark.sources.readers import Catalog
-
-        rows = dedup_prefix_jaccard_append(spark, SF_SMOKE).collect()
-        assert rows
-        # every pair involves a batch doc; d1 < d2 by construction
-        assert all(r["d2"] >= _PPJ_APPEND_SHIFT and r["d1"] < r["d2"] for r in rows)
-        srcs = [
-            r["doc_id"]
-            for r in Catalog(spark, SF_SMOKE)["documents"]
-            .filter(F.pmod(F.col("doc_id"), F.lit(_PPJ_APPEND_MOD)) == _PPJ_APPEND_RES)
-            .select("doc_id")
-            .collect()
-        ]
-        assert srcs
-        pairs = {(r["d1"], r["d2"]): r["pair_kind"] for r in rows}
-        for s in srcs:
-            # twin pair (new_new) is J=1 and must always be found
-            assert (
-                pairs.get((s + _PPJ_APPEND_SHIFT, s + 2 * _PPJ_APPEND_SHIFT))
-                == "new_new"
-            )
-
-    def test_frozen_state_prefix_matches_uncapped_pipeline_order(self, spark):
-        # the memoized prefix must be the same (dfr, t)-ordered prefix the
-        # uncapped pipeline derives — spot-check sizes and per-doc counts
-        from redcap_omop_etl_spark.operators.dedup import ppjoin_frozen_state
-        from redcap_omop_etl_spark.sources.readers import Catalog
-        from redcap_omop_etl_spark.operators.dedup import shingles
-
-        dfreq, prefix = ppjoin_frozen_state(spark, SF_SMOKE)
-        docs = Catalog(spark, SF_SMOKE)["documents"]
-        sz = {
-            r["doc_id"]: r["n"]
-            for r in docs.select(
-                "doc_id", F.size(shingles(F.col("text"), 3)).alias("n")
-            ).collect()
-        }
-        import math
-
-        got = {}
-        for r in prefix.collect():
-            got[r["doc"]] = got.get(r["doc"], 0) + 1
-            assert r["sz"] == sz[r["doc"]]
-        for doc, n_prefix in got.items():
-            expected = sz[doc] - math.ceil(sz[doc] * 0.6) + 1
-            assert n_prefix == expected, (doc, n_prefix, expected)
-
-
-class TestPpjoinAppendCapped:
-    """dedup_prefix_jaccard_append_capped: batch additions can push a
-    base prefix bucket over the cap, so BASE docs appear as newly-routed
-    overflow rows (the retraction signal) — and clean candidates stay
-    cap-bounded."""
-
-    def test_newly_hot_base_docs_are_routed(self, spark):
-        from redcap_omop_etl_spark.operators.dedup import (
-            _PPJ_APPEND_SHIFT,
-            dedup_prefix_jaccard_append_capped,
-        )
-
-        rows = dedup_prefix_jaccard_append_capped(spark, SF_SMOKE).collect()
-        over = [r["d1"] for r in rows if r["kind"] == "overflow"]
-        assert over
-        # the registered cap (2) plus the two appended copies per source
-        # guarantees some BASE doc's prefix bucket crosses the cap
-        assert any(d < _PPJ_APPEND_SHIFT for d in over)
-        # overflow rows carry null pair fields; pair rows involve a batch doc
-        for r in rows:
-            if r["kind"] == "overflow":
-                assert r["d2"] is None and r["jaccard"] is None
-            else:
-                assert r["d2"] >= _PPJ_APPEND_SHIFT and r["jaccard"] >= 0.6

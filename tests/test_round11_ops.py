@@ -98,29 +98,6 @@ class TestPreconditionGuards:
         with pytest.raises(MaintenancePreconditionError, match="exceed base"):
             semdedup_flags_append(spark, sf_dir, batch=bad_batch).collect()
 
-    def test_ppjoin_append_guard_rejects_colliding_batch(self, spark, sf_dir):
-        from redcap_omop_etl_spark.operators.dedup import _ppj_append_batch
-        from redcap_omop_etl_spark.sources.readers import Catalog
-        from redcap_omop_etl_spark.validation import MaintenancePreconditionError
-
-        docs = Catalog(spark, sf_dir)["documents"]
-        bad_batch = docs.limit(2).select("doc_id", "text")
-        with pytest.raises(MaintenancePreconditionError, match="disjoint"):
-            _ppj_append_batch(spark, sf_dir, batch=bad_batch)
-
-    def test_ppjoin_append_batch_override_disjoint_ok(self, spark, sf_dir):
-        """A caller-supplied disjoint batch flows through the shared
-        derivation (the production ingest path)."""
-        from redcap_omop_etl_spark.operators.dedup import _ppj_append_batch
-
-        batch = spark.createDataFrame(
-            [(50_000_000, "alpha beta gamma delta epsilon zeta")],
-            "doc_id long, text string",
-        )
-        _docs, b, btoks, bprefix = _ppj_append_batch(spark, sf_dir, batch=batch)
-        assert b.count() == 1
-        assert bprefix.count() >= 1
-
 
 class TestIngestTickRouter:
     """The automated ingest-tick router (round-10 verdict item 1): a

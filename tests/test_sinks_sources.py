@@ -8,6 +8,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from redcap_omop_etl_spark.sinks import chunked
@@ -99,6 +100,17 @@ class TestRestSource:
         assert df.count() == 25 * 2 * 4
         # one input partition per 10-ID chunk (S4)
         assert df.rdd.getNumPartitions() == 3
+
+    def test_register_into_inactive_session(self, spark):
+        """Registering into a session that is not the active one (a
+        ``newSession()``) lands there and leaves the active one active."""
+        rest_source.register(spark)
+        other = spark.newSession()
+        rest_source.register(other)
+        jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+        assert jsession.getActiveSession().get().equals(spark._jsparkSession)
+        rows = other.read.format("rest_eav").option("ids", "R1").load().limit(1).collect()
+        assert len(rows) == 1 and rows[0].record_id == "R1"
 
     def test_projection_and_event_pushdown(self, spark):
         rest_source.register(spark)

@@ -10,7 +10,11 @@ Usage:
 Protocol mirrors bench.py (warm pass, cache reset, timed noop write) so
 numbers are comparable. Event logs land in a temp dir and are parsed
 after each timed run; per-stage rows show wall, task count, shuffle
-read/write bytes and the first line of the stage's callsite.
+read/write bytes and the first line of the stage's callsite. The
+per-query header also counts jobs excluding broadcast-exchange jobs
+(asynchronous ``$anonfun$withThreadLocalCaptured`` jobs whose last stage
+is a result stage), which move the raw count by ±1 between runs of the
+same code; compare job counts on that figure.
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ from redcap_omop_etl_spark.session import build_session
 def parse_eventlog(path: str) -> dict:
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
+    task_types: dict[int, str] = {}
     with open(path) as fh:
         for line in fh:
             try:
@@ -45,10 +50,16 @@ def parse_eventlog(path: str) -> dict:
                     "desc": (ev.get("Properties") or {}).get(
                         "spark.job.description", ""
                     ),
+                    "async": any(
+                        s.get("Stage Name", "").startswith("$anonfun$withThreadLocalCaptured")
+                        for s in ev.get("Stage Infos", [])
+                    ),
                 }
             elif e == "SparkListenerJobEnd":
                 if ev["Job ID"] in jobs:
                     jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
+            elif e == "SparkListenerTaskEnd":
+                task_types.setdefault(ev["Stage ID"], ev.get("Task Type"))
             elif e == "SparkListenerStageCompleted":
                 si = ev["Stage Info"]
                 if "Submission Time" not in si:
@@ -68,6 +79,14 @@ def parse_eventlog(path: str) -> dict:
                         if a.get("Name") == "internal.metrics.shuffle.write.bytesWritten"
                     ),
                 }
+    # A broadcast exchange collects its child on a background thread: an
+    # asynchronous job (callsite withThreadLocalCaptured, which AQE's
+    # shuffle-stage jobs share) whose last stage returns rows to the
+    # driver (ResultTask) instead of writing shuffle files. Where such a
+    # job lands relative to the window mark varies from run to run.
+    for j in jobs.values():
+        last = max(j["stages"], default=None)
+        j["bcast"] = j.pop("async") and task_types.get(last) == "ResultTask"
     return {"jobs": jobs, "stages": stages}
 
 
@@ -137,7 +156,11 @@ def main() -> None:
             segs.setdefault(seg, []).append(jid)
     for name, jids in segs.items():
         jids = [j for j in jids if jobs[j].get("desc") == name]
-        print(f"\n##### {name}: {len(jids)} jobs in timed window")
+        n_bcast = sum(jobs[j]["bcast"] for j in jids)
+        print(
+            f"\n##### {name}: {len(jids)} jobs in timed window, "
+            f"{len(jids) - n_bcast} excluding {n_bcast} broadcast-exchange jobs"
+        )
         prev_end = None
         gap_total = 0.0
         for jid in jids:
