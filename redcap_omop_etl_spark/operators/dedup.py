@@ -2254,10 +2254,10 @@ def _ppj_append_tick(
         .distinct()
     )
     cand = cand_nb.unionByName(cand_bb).distinct().transform(materialize, "persist")
-    # verify tokens: candidate BASE docs re-shingled (candidate-sized) + batch
-    base_cand = cand.filter(F.col("d1") < _PPJ_APPEND_SHIFT).select(
-        F.col("d1").alias("doc_id")
-    ).distinct()
+    # verify tokens: candidate BASE docs re-shingled (candidate-sized) +
+    # batch. The semi-join against the base documents alone picks them
+    # (the id guard keeps batch ids out of the base), whatever their ids.
+    base_cand = cand.select(F.col("d1").alias("doc_id")).distinct()
     vtoks = (
         _shingle_table(docs.join(base_cand.hint("merge"), "doc_id", "left_semi"))
         .unionByName(btoks)

@@ -2026,7 +2026,6 @@ def minhash_cluster_state_append(
     base_comp: DataFrame,
     hubs: DataFrame,
     batch_banded: DataFrame,
-    check_ids: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """APPEND transition: merge a batch band table into the frozen
     (components, hubs) state and return the updated state. Components:
@@ -2038,16 +2037,14 @@ def minhash_cluster_state_append(
     smaller ids). Invariant preserved for the DELETE transition below:
     every live doc appears in comp.node or hubs.hub.
 
-    ``check_ids`` (default True) enforces the disjointness precondition
-    before any merge work: every base doc appears in the frozen state
+    The disjointness precondition is enforced before any merge work:
+    every base doc appears in the frozen state
     (non-singleton docs in ``base_comp.node``; singletons are alone in
     all their buckets so each is the min of its own — i.e. present in
     ``hubs.hub``), so a batch id colliding with EITHER column would alias
     two distinct documents into one node and silently corrupt the
     partition. The guard is one short-circuited semi-join per tick
-    (``validation.require_disjoint_ids``); pass False only when the
-    caller proves disjointness by construction (e.g. a monotonically
-    id-assigned ingest ledger).
+    (``validation.require_disjoint_ids``).
 
     ``batch_banded`` must carry ``minhash_band_table``'s column types
     (``dedup.BAND_TABLE_SCHEMA``); a mistyped table raises
@@ -2059,11 +2056,10 @@ def minhash_cluster_state_append(
     hub extension."""
     from redcap_omop_etl_spark.validation import expect_schema, require_disjoint_ids
 
-    if check_ids:
-        base_ids = base_comp.select(F.col("node").alias("__id")).unionByName(
-            hubs.select(F.col("hub").alias("__id"))
-        )
-        require_disjoint_ids(base_ids, batch_banded.select("doc"), "minhash_cluster_state_append")
+    base_ids = base_comp.select(F.col("node").alias("__id")).unionByName(
+        hubs.select(F.col("hub").alias("__id"))
+    )
+    require_disjoint_ids(base_ids, batch_banded.select("doc"), "minhash_cluster_state_append")
     expect_schema(batch_banded, BAND_TABLE_SCHEMA, strict=False)
     only_m = materialize(_batch_only_min(batch_banded, hubs))
     merged = incremental_minhash_components(base_comp, hubs, batch_banded, bucket_star(only_m))

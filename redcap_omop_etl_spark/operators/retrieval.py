@@ -96,6 +96,50 @@ def _tokens(d: DataFrame) -> DataFrame:
     return d.select("doc_id", F.explode(ws_tokens(F.col("text"))).alias("term"))
 
 
+# ---------------------------------------------------------------------------
+# The term-stats family: ONE definition of each step. The inverted index,
+# the frozen stat memo, the registered append/delete/upsert queries and
+# the catalog ticks (state.term_stats_bootstrap / term_stats_tick) all
+# build on these, so the oracle-checked queries run the appliers' code.
+# ---------------------------------------------------------------------------
+
+
+def _term_stats(d: DataFrame, *extra) -> DataFrame:
+    """Per-term ``(term, df, cf)`` over docs ``(doc_id, text)``: one
+    ``(term, doc_id, tf)`` aggregate, then document frequency and
+    collection frequency per term. ``extra`` aggregates over the same
+    ``(term, doc_id, tf)`` rows ride the per-term aggregate."""
+    tf = _tokens(d).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
+    return tf.groupBy("term").agg(
+        F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"), *extra
+    )
+
+
+def _term_stats_merge(stats: DataFrame, batch: DataFrame, sign: int) -> DataFrame:
+    """Merge a doc batch's ``(df, cf)`` aggregate into ``stats``:
+    ``sign=+1`` adds an ingest batch (full outer join — unseen terms
+    enter through the null side), ``sign=-1`` subtracts a takedown
+    batch (left join — its terms are base terms). Exact in any order:
+    df and cf are integer counts, and integer addition is associative
+    and commutative. Returns the UNFLOORED ``(term, df, cf, df_b)``,
+    ``df_b`` being the batch's own df (the audit column); a floor, if
+    any, applies once to the net counts."""
+    b = _term_stats(batch).toDF("term", "df_b", "cf_b")
+    m = stats.select("term", "df", "cf").join(
+        b, "term", "full_outer" if sign > 0 else "left"
+    )
+
+    def net(c):
+        return (F.coalesce(c, F.lit(0)) + sign * F.coalesce(f"{c}_b", F.lit(0))).cast("long")
+
+    return m.select(
+        "term",
+        net("df").alias("df"),
+        net("cf").alias("cf"),
+        F.coalesce("df_b", F.lit(0)).cast("long").alias("df_b"),
+    )
+
+
 def bm25_scores(d: DataFrame, query_terms: list[str], k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
     """Okapi BM25 document scores for a bag of query terms.
 
@@ -238,12 +282,9 @@ def retrieval_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def retrieval_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = Catalog(spark, sf_dir)["documents"]
-    tf = _tokens(d).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
     return (
-        tf.groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sum("tf").alias("cf"),
+        _term_stats(
+            d,
             F.ceil(F.count(F.lit(1)) / 20.0).alias("n_blocks"),
             F.concat_ws(",", F.slice(F.sort_array(F.collect_list("doc_id")), 1, 20)).alias(
                 "first_block"
@@ -582,11 +623,10 @@ def retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 10: incremental inverted-index / BM25-stat maintenance — the
-# retrieval-side "append, don't rebuild" (round-9 verdict stretch item),
-# completing the pattern set by dedup_minhash_clusters_append,
-# ivfpq_append_search and semdedup_flags_append: every index in the
-# engine is now incrementally maintainable.
+# Incremental inverted-index / BM25-stat maintenance: the retrieval-side
+# "append, don't rebuild", next to the cluster, IVF-PQ and SemDeDup
+# ingest and takedown ticks. Each registered query below is one
+# _term_stats_merge (two for the upsert) over the frozen stat memo.
 # ---------------------------------------------------------------------------
 
 _IDX_APPEND_MOD, _IDX_APPEND_RES = 20, 5
@@ -605,13 +645,7 @@ def term_stats_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     by ADDITION — no base-corpus rescan, ever."""
 
     def build():
-        d = Catalog(spark, sf_dir)["documents"]
-        tf = _tokens(d).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-        return (
-            tf.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-            .transform(materialize)
-        )
+        return _term_stats(Catalog(spark, sf_dir)["documents"]).transform(materialize)
 
     return session_memo(spark, ("term_stats", sf_dir), build)
 
@@ -664,22 +698,9 @@ def retrieval_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + F.lit(_IDX_APPEND_SHIFT)).alias("doc_id"),
         F.concat(F.col("text"), F.lit(_IDX_APPEND_SUFFIX)).alias("text"),
     )
-    btf = _tokens(batch).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-    bstats = btf.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df_b"), F.sum("tf").alias("cf_b")
-    )
-    merged = base.join(bstats, "term", "full_outer")
     return (
-        merged.select(
-            "term",
-            (F.coalesce("df", F.lit(0)) + F.coalesce("df_b", F.lit(0)))
-            .cast("long")
-            .alias("df"),
-            (F.coalesce("cf", F.lit(0)) + F.coalesce("cf_b", F.lit(0)))
-            .cast("long")
-            .alias("cf"),
-            F.coalesce("df_b", F.lit(0)).cast("long").alias("df_appended"),
-        )
+        _term_stats_merge(base, batch, +1)
+        .withColumnRenamed("df_b", "df_appended")
         .filter(F.col("df") >= 3)
     )
 
@@ -727,18 +748,9 @@ def retrieval_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = d.filter(
         F.pmod(F.col("doc_id"), F.lit(_IDX_DELETE_MOD)) == _IDX_DELETE_RES
     )
-    btf = _tokens(batch).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-    bstats = btf.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df_b"), F.sum("tf").alias("cf_b")
-    )
-    merged = base.join(bstats, "term", "left")
     return (
-        merged.select(
-            "term",
-            (F.col("df") - F.coalesce("df_b", F.lit(0))).cast("long").alias("df"),
-            (F.col("cf") - F.coalesce("cf_b", F.lit(0))).cast("long").alias("cf"),
-            F.coalesce("df_b", F.lit(0)).cast("long").alias("df_deleted"),
-        )
+        _term_stats_merge(base, batch, -1)
+        .withColumnRenamed("df_b", "df_deleted")
         .filter(F.col("df") >= 3)
     )
 
@@ -790,34 +802,8 @@ def retrieval_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + F.lit(_IDX_APPEND_SHIFT)).alias("doc_id"),
         F.concat(F.col("text"), F.lit(_IDX_APPEND_SUFFIX)).alias("text"),
     )
-
-    def stats_of(batch, dfc, cfc):
-        tf = _tokens(batch).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-        return tf.groupBy("term").agg(
-            F.count(F.lit(1)).alias(dfc), F.sum("tf").alias(cfc)
-        )
-
-    dstats = stats_of(delb, "df_d", "cf_d")
-    astats = stats_of(addb, "df_a", "cf_a")
-    merged = base.join(dstats, "term", "left").join(astats, "term", "full_outer")
     return (
-        merged.select(
-            "term",
-            (
-                F.coalesce("df", F.lit(0))
-                - F.coalesce("df_d", F.lit(0))
-                + F.coalesce("df_a", F.lit(0))
-            )
-            .cast("long")
-            .alias("df"),
-            (
-                F.coalesce("cf", F.lit(0))
-                - F.coalesce("cf_d", F.lit(0))
-                + F.coalesce("cf_a", F.lit(0))
-            )
-            .cast("long")
-            .alias("cf"),
-            F.coalesce("df_a", F.lit(0)).cast("long").alias("df_appended"),
-        )
+        _term_stats_merge(_term_stats_merge(base, delb, -1), addb, +1)
+        .withColumnRenamed("df_b", "df_appended")
         .filter(F.col("df") >= 3)
     )

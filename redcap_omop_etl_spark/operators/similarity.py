@@ -20,6 +20,8 @@ before the top-k ordering so the selected sets agree bit-for-bit.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
@@ -617,6 +619,17 @@ def _ivf_assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     return vecs.withColumn("cluster", _argmin_cluster("__v"))
 
 
+def _frozen_assign(batch: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Coarse-assign a ``(vec_id, embedding)`` batch to a FROZEN centroid
+    table (no retrain): ``(vec_id, cluster)``. The one batch assign
+    behind every ingest tick — IVF-PQ append/upsert, the on-disk append,
+    the drift audit's generations and the SemDeDup append."""
+    return _ivf_assign(
+        batch.select(F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v")),
+        centroids,
+    ).select(F.col("__vid").alias("vec_id"), "cluster")
+
+
 def ivf_topk(
     embeddings: DataFrame,
     assignments: DataFrame,
@@ -768,6 +781,62 @@ SEMDEDUP_TAU = 0.30  # isotropic synthetic vectors: max pairwise cosine
 SEMDEDUP_ANCHORS = 16
 
 
+# The SemDeDup family's steps, each defined once: the full flag pass,
+# the anchor memo, and the delete/append transitions (which the
+# registered append/delete/upsert queries and state.semdedup_tick run)
+# are compositions of these three.
+
+
+def _semdedup_members(vecs: DataFrame, cells: DataFrame) -> DataFrame:
+    """``(vec_id, __v, cluster)``: each ``(vec_id, embedding)`` vector as
+    doubles, joined to its ``(vec_id, cluster)`` cell."""
+    return vecs.select(
+        "vec_id",
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("__v"),
+    ).join(cells.select("vec_id", F.col("cluster").cast("bigint").alias("cluster")), "vec_id")
+
+
+def _semdedup_roster(members: DataFrame, n_anchors: int = SEMDEDUP_ANCHORS) -> DataFrame:
+    """Each cell's anchor roster ``(cluster, a_id, a_v)``: its
+    ``n_anchors`` lowest-id members, via the two-phase ``keyed_topk``
+    (parallelism bounded by partition count, never a corpus-wide
+    window)."""
+    from redcap_omop_etl_spark.operators.scalable_windows import keyed_topk
+
+    return keyed_topk(members, ["cluster"], [F.col("vec_id").asc()], k=n_anchors).select(
+        "cluster", F.col("vec_id").alias("a_id"), F.col("__v").alias("a_v")
+    )
+
+
+def _semdedup_flag(members: DataFrame, anchors: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
+    """Keep flags ``(vec_id, cluster, n_dup_anchors, is_kept)`` of
+    ``members`` against their cells' ``anchors``: a member is pruned iff
+    an anchor with a STRICTLY LOWER id has cosine (rounded to 4 dp) >=
+    ``tau``.
+
+    The anchor join is UNHINTED by the join-strategy policy: the anchor
+    table is n_clusters × n_anchors rows, and production SemDeDup scales
+    n_clusters with the corpus, so a forced broadcast of that
+    corpus-coupled side is the misestimated-broadcast failure DEPLOY.md
+    bans. At registered params (16×16) the cost model broadcasts it
+    anyway; at scale the equi-join on ``cluster`` co-locates each cell's
+    members with its ≤ n_anchors anchors — parallelism = cell count,
+    per-task work bounded by cell size."""
+    hits = (
+        members.join(anchors, "cluster")
+        .filter(F.col("a_id") < F.col("vec_id"))
+        .filter(F.round(cosine(F.col("__v"), F.col("a_v")), 4) >= tau)
+        .groupBy("vec_id")
+        .agg(F.count(F.lit(1)).alias("n_dup_anchors"))
+    )
+    return members.join(hits, "vec_id", "left").select(
+        "vec_id",
+        F.col("cluster").cast("bigint").alias("cluster"),
+        F.coalesce("n_dup_anchors", F.lit(0)).cast("bigint").alias("n_dup_anchors"),
+        F.col("n_dup_anchors").isNull().alias("is_kept"),
+    )
+
+
 def semdedup_flags(
     embeddings: DataFrame,
     assignments: DataFrame,
@@ -792,71 +861,30 @@ def semdedup_flags(
     space).
 
     Scale shape: the corpus is NEVER self-joined. Anchors come from
-    ``keyed_topk`` (two-phase, parallelism bounded by partition count);
-    the anchor table is ≤ n_clusters × n_anchors rows and the anchor
-    join is deliberately UNHINTED — production SemDeDup scales
-    n_clusters with the corpus, so the anchor side is corpus-coupled
-    and a forced broadcast would be the misestimated-broadcast failure
-    the join-strategy policy bans (DEPLOY.md); the cost model
-    broadcasts it at small k, and at large k the equi-join on
-    ``cluster`` co-locates each cell's members with its anchors at
-    cell-count parallelism. Each member row then does ≤ n_anchors
-    JVM-side cosines: one scan, linear in the corpus. The cap is
+    ``_semdedup_roster`` (≤ n_clusters × n_anchors rows) and each member
+    row does ≤ n_anchors JVM-side cosines in ``_semdedup_flag``: one
+    scan, linear in the corpus. The cap is
     honest: a dup group whose survivor is not among its cell's anchors
     is missed, exactly the recall/cost dial the capped
     containment/PPJoin family documents; `n_anchors` plays the role of
     the candidate cap, and production SemDeDup scales n_clusters with
     the corpus so cells (and anchor coverage) stay constant-sized.
     """
-    from redcap_omop_etl_spark.operators.scalable_windows import keyed_topk
-
-    members = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-    ).join(assignments.select(F.col(id_col).alias("vec_id"), "cluster"), "vec_id")
-    anchors = keyed_topk(
-        members, ["cluster"], [F.col("vec_id").asc()], k=n_anchors
-    ).select(
-        F.col("cluster"),
-        F.col("vec_id").alias("a_id"),
-        F.col("__v").alias("a_v"),
+    members = _semdedup_members(
+        embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
+        assignments.select(F.col(id_col).alias("vec_id"), "cluster"),
     )
-    dup_hits = (
-        # UNHINTED by the join-strategy policy: the anchor table is
-        # n_clusters × n_anchors rows, and production SemDeDup scales
-        # n_clusters with the corpus — a forced broadcast of a
-        # corpus-coupled side is the exact 256× failure mode the round-7
-        # postmortem banned. At registered params (16×16) the cost model
-        # broadcasts it anyway; at scale the equi-join on `cluster`
-        # degrades to a shuffle that co-locates each cell's members with
-        # its ≤n_anchors anchors — parallelism = cell count, per-task
-        # work bounded by cell size.
-        members.join(anchors, "cluster")
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(F.round(cosine(F.col("__v"), F.col("a_v")), 4) >= tau)
-        .groupBy("vec_id")
-        .agg(F.count(F.lit(1)).alias("n_dup_anchors"))
-    )
-    return (
-        members.join(dup_hits, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("cluster").cast("bigint").alias("cluster"),
-            F.coalesce("n_dup_anchors", F.lit(0)).cast("bigint").alias("n_dup_anchors"),
-            F.col("n_dup_anchors").isNull().alias("is_kept"),
-        )
-    )
+    return _semdedup_flag(members, _semdedup_roster(members, n_anchors), tau)
 
 
 # Materialized-view memo for the SemDeDup keep-flag table — the shared
-# prefix of dedup_semdedup and corpus_semdedup_budget (same discipline as
-# graph._minhash_components: a production curation run materializes the
-# per-corpus prune decision ONCE, then every consumer — the flag export,
-# the per-source budget rollup, the actual filter — reads it). Added in
-# round 9: the budget rollup's 2.93x slope at 256x (SCALE_r08) was the
-# flag pipeline re-running INSIDE the budget query on top of the
-# corpus-sized documents join; against the checkpointed flag table the
-# rollup is one linear join + one hash agg.
+# prefix of dedup_semdedup, corpus_semdedup_budget and the maintenance
+# ticks (same discipline as graph._minhash_components: a production
+# curation run materializes the per-corpus prune decision ONCE, then
+# every consumer — the flag export, the per-source budget rollup, the
+# actual filter — reads it). Against the checkpointed flag table the
+# budget rollup is one linear join + one hash agg, not the flag pipeline
+# re-run on top of the corpus-sized documents join.
 def semdedup_flags_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registered SemDeDup keep-flag table (16 cells, 16 anchors,
     tau=SEMDEDUP_TAU) for ``sf_dir``, computed once per (session,
@@ -877,20 +905,11 @@ def semdedup_anchors_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to the keep-flag table: it is the frozen state the incremental
     append ticks against (the embedding-space analog of the MinHash hub
     table)."""
-    from redcap_omop_etl_spark.operators.scalable_windows import keyed_topk
 
     def build():
         emb = Catalog(spark, sf_dir)["embeddings"]
         assignments, _centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=sf_dir)
-        members = emb.select(
-            "vec_id",
-            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("__v"),
-        ).join(assignments.select("vec_id", "cluster"), "vec_id")
-        return keyed_topk(
-            members, ["cluster"], [F.col("vec_id").asc()], k=SEMDEDUP_ANCHORS
-        ).select(
-            "cluster", F.col("vec_id").alias("a_id"), F.col("__v").alias("a_v")
-        ).transform(materialize)
+        return _semdedup_roster(_semdedup_members(emb, assignments)).transform(materialize)
 
     return session_memo(spark, ("semdedup_anchors", sf_dir), build)
 
@@ -1005,9 +1024,9 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "through the shared _semdedup_flags_cte fragment), the doc↔flag "
     "equi-join is unhinted (both sides corpus-coupled), and the rollup "
     "is one map-side-partial hash aggregate on the low-cardinality "
-    "source key. Round 9 flattened the 256x slope (2.93x -> linear) by "
-    "making the flag table a materialized view instead of re-running "
-    "the anchor-prune pipeline inside the rollup query.",
+    "source key. Making the flag table a materialized view instead of "
+    "re-running the anchor-prune pipeline inside the rollup query "
+    "flattened the 256x slope (2.93x -> linear).",
 )
 def corpus_semdedup_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = Catalog(spark, sf_dir)["documents"]
@@ -1038,6 +1057,13 @@ def corpus_semdedup_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 1e6 shift convention as the IVF-PQ append batch)
 _SEM_APPEND_SHIFT = 10_000_000_000  # above any bench_scale replica id
 _SEM_APPEND_MOD, _SEM_APPEND_RES = 25, 9
+
+
+def _sem_append_batch(emb: DataFrame) -> DataFrame:
+    """The registered SemDeDup ingest batch ``(vec_id, embedding)``."""
+    return emb.filter(
+        F.pmod(F.col("vec_id"), F.lit(_SEM_APPEND_MOD)) == _SEM_APPEND_RES
+    ).select((F.col("vec_id") + F.lit(_SEM_APPEND_SHIFT)).alias("vec_id"), "embedding")
 
 
 def _semdedup_append_oracle_sql(
@@ -1105,9 +1131,10 @@ def _semdedup_append_oracle_sql(
 @register(
     "semdedup_flags_append",
     _semdedup_append_oracle_sql(),
-    doc="Incremental SemDeDup — the embedding-space ingest tick "
-    "(round-9 verdict item 4), completing the pattern set by "
-    "dedup_minhash_clusters_append and ivfpq_append_search: a new "
+    doc="Incremental SemDeDup — the embedding-space ingest tick, the "
+    "twin of dedup_minhash_clusters_append and ivfpq_append_search, "
+    "run by semdedup_state_append (the transition state.semdedup_tick "
+    "commits): a new "
     "vector batch coarse-assigns to the FROZEN k-means cells (no "
     "retrain), compares against the FROZEN persisted anchor table "
     "(semdedup_anchors_memo — the embedding-space hub table) plus "
@@ -1120,73 +1147,20 @@ def _semdedup_append_oracle_sql(
     "never displace — the base anchors, and (2) no base member can "
     "gain a hit (every new anchor's id exceeds its own), so base flags "
     "are invariant; batch flags see exactly the rebuild's anchor set. "
+    "The monotonic-id guard enforces that precondition at runtime. "
     "Cost: O(batch x n_anchors) cosines + one batch-sized assign — a "
     "daily tick, never an O(corpus) re-prune. Output adds is_appended.",
 )
-def semdedup_flags_append(
-    spark: SparkSession,
-    sf_dir: str,
-    batch: DataFrame | None = None,
-    check_ids: bool = True,
-) -> DataFrame:
-    from redcap_omop_etl_spark.operators.scalable_windows import keyed_topk
-
+def semdedup_flags_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = Catalog(spark, sf_dir)["embeddings"]
-    base_flags = semdedup_flags_memo(spark, sf_dir)
-    anchors_base = semdedup_anchors_memo(spark, sf_dir)
     _assignments, centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=sf_dir)
-    if batch is None:
-        batch = emb.filter(
-            F.pmod(F.col("vec_id"), F.lit(_SEM_APPEND_MOD)) == _SEM_APPEND_RES
-        ).select(
-            (F.col("vec_id") + F.lit(_SEM_APPEND_SHIFT)).alias("vec_id"), "embedding"
-        )
-    if check_ids:
-        # The anchor-stability proof above needs STRICT ordering (unlike
-        # the cluster append's disjointness): a batch vec_id below a base
-        # id could displace a frozen lowest-id anchor and flip base
-        # members' flags. Enforce it — one 1-row job per tick.
-        from redcap_omop_etl_spark.validation import require_monotonic_ids
-
-        require_monotonic_ids(
-            base_flags.select("vec_id"),
-            batch.select("vec_id"),
-            "semdedup_flags_append",
-        )
-    nassign = _ivf_assign(
-        batch.select(F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v")),
+    flags, _anchors = semdedup_state_append(
+        semdedup_flags_memo(spark, sf_dir),
+        semdedup_anchors_memo(spark, sf_dir),
         centroids,
-    ).select(F.col("__vid").alias("vec_id"), "cluster")
-    bmembers = batch.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("__v"),
-    ).join(nassign, "vec_id")
-    cand = anchors_base.unionByName(
-        bmembers.select(
-            "cluster", F.col("vec_id").alias("a_id"), F.col("__v").alias("a_v")
-        )
+        _sem_append_batch(emb),
     )
-    anchors_union = keyed_topk(
-        cand, ["cluster"], [F.col("a_id").asc()], k=SEMDEDUP_ANCHORS
-    )
-    # UNHINTED anchor join — same corpus-coupled-side policy as
-    # semdedup_flags (anchor count scales with n_clusters in production)
-    hits = (
-        bmembers.join(anchors_union, "cluster")
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(F.round(cosine(F.col("__v"), F.col("a_v")), 4) >= SEMDEDUP_TAU)
-        .groupBy("vec_id")
-        .agg(F.count(F.lit(1)).alias("n_dup_anchors"))
-    )
-    batch_flags = bmembers.join(hits, "vec_id", "left").select(
-        "vec_id",
-        F.col("cluster").cast("bigint").alias("cluster"),
-        F.coalesce("n_dup_anchors", F.lit(0)).cast("bigint").alias("n_dup_anchors"),
-        F.col("n_dup_anchors").isNull().alias("is_kept"),
-    )
-    return base_flags.unionByName(batch_flags).withColumn(
-        "is_appended", F.col("vec_id") >= F.lit(_SEM_APPEND_SHIFT)
-    )
+    return flags.withColumn("is_appended", F.col("vec_id") >= F.lit(_SEM_APPEND_SHIFT))
 
 
 # deterministic takedown batch for the SemDeDup deletion tick: every
@@ -1210,7 +1184,8 @@ _SEM_DELETE_MOD, _SEM_DELETE_RES = 30, 2
     "AGAINST the cell's anchor set, so deleting an ANCHOR changes its "
     "cell's lowest-id anchor roster and can flip other members' flags "
     "(a doc pruned only by a now-removed anchor must come back). The "
-    "tick therefore splits cells: (1) cells that lost NO anchor pass "
+    "tick (semdedup_state_delete, the transition state.semdedup_tick "
+    "commits) therefore splits cells: (1) cells that lost NO anchor pass "
     "their frozen flags through minus the deleted rows — deleting a "
     "non-anchor member never changes the lowest-n_anchors set, and a "
     "member's flag depends only on its cell's anchors, so pass-through "
@@ -1220,53 +1195,14 @@ _SEM_DELETE_MOD, _SEM_DELETE_RES = 30, 2
     "trained on the FULL corpus, membership filtered) end-to-end.",
 )
 def semdedup_flags_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from redcap_omop_etl_spark.operators.scalable_windows import keyed_topk
-
     emb = Catalog(spark, sf_dir)["embeddings"]
-    base_flags = semdedup_flags_memo(spark, sf_dir)
-    anchors = semdedup_anchors_memo(spark, sf_dir)
-    assignments, _centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=sf_dir)
-    is_del = F.pmod(F.col("vec_id"), F.lit(_SEM_DELETE_MOD)) == _SEM_DELETE_RES
-    deleted = emb.filter(is_del).select("vec_id")
-    touched = (
-        anchors.join(
-            deleted.withColumnRenamed("vec_id", "a_id"), "a_id", "left_semi"
-        )
-        .select(F.col("cluster").cast("bigint").alias("cluster"))
-        .distinct()
+    deleted = emb.filter(
+        F.pmod(F.col("vec_id"), F.lit(_SEM_DELETE_MOD)) == _SEM_DELETE_RES
+    ).select("vec_id")
+    flags, _anchors = semdedup_state_delete(
+        semdedup_flags_memo(spark, sf_dir), semdedup_anchors_memo(spark, sf_dir), deleted, emb
     )
-    untouched_flags = base_flags.join(touched, "cluster", "left_anti").filter(~is_del)
-    members = (
-        emb.select(
-            "vec_id",
-            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("__v"),
-        )
-        .join(
-            assignments.select(
-                "vec_id", F.col("cluster").cast("bigint").alias("cluster")
-            ),
-            "vec_id",
-        )
-        .join(touched, "cluster", "left_semi")
-        .filter(~is_del)
-    )
-    anchors2 = keyed_topk(
-        members, ["cluster"], [F.col("vec_id").asc()], k=SEMDEDUP_ANCHORS
-    ).select("cluster", F.col("vec_id").alias("a_id"), F.col("__v").alias("a_v"))
-    hits = (
-        members.join(anchors2, "cluster")
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(F.round(cosine(F.col("__v"), F.col("a_v")), 4) >= SEMDEDUP_TAU)
-        .groupBy("vec_id")
-        .agg(F.count(F.lit(1)).alias("n_dup_anchors"))
-    )
-    touched_flags = members.join(hits, "vec_id", "left").select(
-        "vec_id",
-        "cluster",
-        F.coalesce("n_dup_anchors", F.lit(0)).cast("bigint").alias("n_dup_anchors"),
-        F.col("n_dup_anchors").isNull().alias("is_kept"),
-    )
-    return untouched_flags.unionByName(touched_flags)
+    return flags
 
 
 @register(
@@ -1613,6 +1549,17 @@ def _pq_sub_struct(col: str, alias: str):
     )
 
 
+def _pq_encode(batch: DataFrame, cs: DataFrame) -> DataFrame:
+    """Encode a ``(vec_id, embedding)`` batch with a FROZEN codebook
+    ``cs`` (no retrain, so existing codes stay valid):
+    ``(vec_id, subspace, codeword, d2q)``, the code-table shape
+    ``pq_assign`` returns."""
+    vs = batch.select("vec_id", _pq_sub_struct("embedding", "sv").alias("x")).select(
+        "vec_id", "x.subspace", "x.sv"
+    )
+    return _pq_argmin(vs, cs)
+
+
 def pq_assign(e: DataFrame, memo_key: str | None = None) -> tuple[DataFrame, DataFrame]:
     """Product-quantization codebook training (ONE Lloyd round from
     deterministic lowest-vec_id seeds) + code assignment, shared by the
@@ -1839,28 +1786,51 @@ def _adc_topk(codes: DataFrame, dtable: DataFrame, k: int) -> DataFrame:
     )
 
 
+class _AdcParts(NamedTuple):
+    emb: DataFrame
+    qv: list
+    centroids: DataFrame
+    cs: DataFrame
+    probes: list
+    cand: DataFrame
+    topk: DataFrame
+    dtable: DataFrame
+
+
 def _ivfpq_adc_parts(
     spark: SparkSession, sf_dir: str, k: int = 10, n_probes: int = 4
-):
-    """Shared body of the ADC search, its recall audit, and the
-    deletion-maintenance twin: memoized index state (cells + codes),
-    driver-side probe selection, candidate codes from the probed cells,
-    ADC top-k. Returns ``(emb, qv, cand, topk, dtable)`` so consumers
-    add their own projection — or re-rank a filtered candidate set —
+) -> _AdcParts:
+    """Shared body of the ADC search, its recall audit and the
+    maintenance searches: memoized index state (cells + codes, frozen
+    centroids + codebook), driver-side probe selection, candidate codes
+    from the probed cells, ADC top-k. Consumers add their own
+    projection — or re-rank a filtered or extended candidate set —
     without re-deriving index state."""
     emb = Catalog(spark, sf_dir)["embeddings"]
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").head()
     qv = [float(x) for x in qrow[0]]
     assignments, centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=sf_dir)
     codes, cs = pq_assign(emb, memo_key=sf_dir)
-    probe_clusters = _nearest_cells(centroids.collect(), qv, n_probes)
+    probes = _nearest_cells(centroids.collect(), qv, n_probes)
     dtable = _adc_dtable(cs, qv)
-    probe_members = assignments.filter(
-        F.col("cluster").isin(probe_clusters)
-    ).select("vec_id")
+    probe_members = assignments.filter(F.col("cluster").isin(probes)).select("vec_id")
     cand = codes.join(probe_members, "vec_id").filter(F.col("vec_id") != 0)
     topk = _adc_topk(cand, dtable, k)
-    return emb, qv, cand, topk, dtable
+    return _AdcParts(emb, qv, centroids, cs, probes, cand, topk, dtable)
+
+
+def _adc_result(topk: DataFrame, vecs: DataFrame, qv: list, *extra) -> DataFrame:
+    """The ADC searches' output rows: each top-k hit with its rank, code
+    distance, ``extra`` columns and the exact-cosine audit column
+    (``vecs`` holds the hits' raw vectors)."""
+    q = F.array(*[F.lit(v) for v in qv])
+    return topk.join(vecs.select("vec_id", "embedding"), "vec_id").select(
+        "vec_id",
+        "adc_rank",
+        "adc_d2q",
+        *extra,
+        F.round(cosine(F.col("embedding"), q), 4).alias("cos_sim"),
+    )
 
 
 @register(
@@ -1884,14 +1854,8 @@ def _ivfpq_adc_parts(
     "fragments (_kmeans_cte, _pq_cte).",
 )
 def similarity_ivf_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb, qv, _cand, topk, _dt = _ivfpq_adc_parts(spark, sf_dir, k=10, n_probes=4)
-    q = F.array(*[F.lit(v) for v in qv])
-    return topk.join(emb.select("vec_id", "embedding"), "vec_id").select(
-        "vec_id",
-        "adc_rank",
-        "adc_d2q",
-        F.round(cosine(F.col("embedding"), q), 4).alias("cos_sim"),
-    )
+    p = _ivfpq_adc_parts(spark, sf_dir, k=10, n_probes=4)
+    return _adc_result(p.topk, p.emb, p.qv)
 
 
 def _ivfpq_recall_oracle_sql(
@@ -1971,7 +1935,8 @@ def _ivfpq_recall_oracle_sql(
 )
 def ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = 10
-    emb, qv, cand, topk, _dt = _ivfpq_adc_parts(spark, sf_dir, k=k, n_probes=4)
+    p = _ivfpq_adc_parts(spark, sf_dir, k=k, n_probes=4)
+    emb, qv, cand, topk = p.emb, p.qv, p.cand, p.topk
     q = F.array(*[F.lit(v) for v in qv])
     exact10 = (
         emb.filter(F.col("vec_id") != 0)
@@ -2260,9 +2225,9 @@ def _ivfpq_append_oracle_sql(
 @register(
     "ivfpq_append_search",
     _ivfpq_append_oracle_sql(),
-    doc="Incremental IVF-PQ index maintenance (round-8 verdict item 5): "
-    "a production ANN pipeline ingests vectors continuously and must "
-    "append to the index WITHOUT retraining — new vectors are encoded "
+    doc="Incremental IVF-PQ index maintenance: a production ANN "
+    "pipeline ingests vectors continuously and must append to the "
+    "index WITHOUT retraining — new vectors are encoded "
     "by the FROZEN trained codebook (the same one-Lloyd-round cs the "
     "base corpus trained; no retrain, so old codes stay valid) and "
     "coarse-assigned against the FROZEN centroid table, then search "
@@ -2272,54 +2237,44 @@ def _ivfpq_append_oracle_sql(
     "Output adds is_appended so the result proves the search sees both "
     "generations. Plan: frozen index state comes from the per-session "
     "memos (ivf_build/pq_assign — zero retrain cost), the batch encode "
-    "is batch-rows x subspaces against the parameter-bounded broadcast "
-    "codebook, and the candidate union stays code-sized. The persisted "
-    "twin (ivfpq_append_index) appends ONLY the affected cluster "
+    "(_pq_encode) is batch-rows x subspaces against the parameter-"
+    "bounded codebook, the batch assign (_frozen_assign) one Arrow "
+    "argmin pass, and the candidate union stays code-sized; the upsert "
+    "runs the same body with a takedown filter. The persisted "
+    "twin (ivfpq_append_index) runs the same encode and assign and "
+    "appends ONLY the affected cluster "
     "partitions of the on-disk code table — partition-pruned writes, "
     "pinned in tests/test_round9_ops.py::TestIvfPqAppend. Oracle: the "
     "shared _kmeans_cte + _pq_cte fragments, with the batch encoded by "
     "the same frozen-codebook argmin in SQL.",
 )
 def ivfpq_append_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = Catalog(spark, sf_dir)["embeddings"]
-    k, n_probes = 10, 4
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    qv = [float(x) for x in qrow[0]]
-    assignments, centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=sf_dir)
-    codes, cs = pq_assign(emb, memo_key=sf_dir)
-    batch = emb.filter(
+    return _ivfpq_ingest_search(spark, sf_dir)
+
+
+def _ivfpq_ingest_search(spark: SparkSession, sf_dir: str, keep_base: Column | None = None) -> DataFrame:
+    """The body of ``ivfpq_append_search`` and ``ivfpq_upsert_search``:
+    the registered batch is encoded by the FROZEN codebook and
+    coarse-assigned to the FROZEN centroids, and one ADC top-k ranks
+    the probed base codes that pass ``keep_base`` (the upsert's
+    takedown filter; None keeps all) UNION the probed batch codes."""
+    p = _ivfpq_adc_parts(spark, sf_dir, k=10, n_probes=4)
+    batch = p.emb.filter(
         F.pmod(F.col("vec_id"), F.lit(_APPEND_MOD)) == _APPEND_RES
-    ).select(
-        (F.col("vec_id") + F.lit(_APPEND_SHIFT)).alias("vec_id"), "embedding"
-    )
-    nvs = batch.select("vec_id", _pq_sub_struct("embedding", "sv").alias("x")).select(
-        "vec_id", "x.subspace", "x.sv"
-    )
-    ncodes = _pq_argmin(nvs, cs).select("vec_id", "subspace", "codeword")
-    nassign = _ivf_assign(
-        batch.select(F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v")),
-        centroids,
-    ).select(F.col("__vid").alias("vec_id"), "cluster")
-    probe_clusters = _nearest_cells(centroids.collect(), qv, n_probes)
-    base_cand = codes.select("vec_id", "subspace", "codeword").join(
-        assignments.filter(F.col("cluster").isin(probe_clusters)).select("vec_id"),
+    ).select((F.col("vec_id") + F.lit(_APPEND_SHIFT)).alias("vec_id"), "embedding")
+    new_cand = _pq_encode(batch, p.cs).select("vec_id", "subspace", "codeword").join(
+        _frozen_assign(batch, p.centroids).filter(F.col("cluster").isin(p.probes)).select("vec_id"),
         "vec_id",
     )
-    new_cand = ncodes.join(
-        nassign.filter(F.col("cluster").isin(probe_clusters)).select("vec_id"),
-        "vec_id",
-    )
-    cand = base_cand.unionByName(new_cand).filter(F.col("vec_id") != 0)
-    dtable = _adc_dtable(cs, qv)
-    topk = _adc_topk(cand, dtable, k)
-    ue = emb.select("vec_id", "embedding").unionByName(batch)
-    q = F.array(*[F.lit(v) for v in qv])
-    return topk.join(ue, "vec_id").select(
-        "vec_id",
-        "adc_rank",
-        "adc_d2q",
+    base_cand = p.cand.select("vec_id", "subspace", "codeword")
+    if keep_base is not None:
+        base_cand = base_cand.filter(keep_base)
+    topk = _adc_topk(base_cand.unionByName(new_cand), p.dtable, 10)
+    return _adc_result(
+        topk,
+        p.emb.select("vec_id", "embedding").unionByName(batch),
+        p.qv,
         (F.col("vec_id") >= _APPEND_SHIFT).alias("is_appended"),
-        F.round(cosine(F.col("embedding"), q), 4).alias("cos_sim"),
     )
 
 
@@ -2348,14 +2303,8 @@ def ivfpq_append_index(
     base = new_vecs.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     )
-    assign = _ivf_assign(
-        base.select(F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v")),
-        cents,
-    ).select(F.col("__vid").alias("vec_id"), "cluster")
-    nvs = base.select("vec_id", _pq_sub_struct("embedding", "sv").alias("x")).select(
-        "vec_id", "x.subspace", "x.sv"
-    )
-    ncodes = _pq_argmin(nvs, cs).join(assign, "vec_id")
+    assign = _frozen_assign(base, cents)
+    ncodes = _pq_encode(base, cs).join(assign, "vec_id")
     ncodes.write.partitionBy("cluster").mode("append").parquet(f"{path}/codes")
     base.join(assign, "vec_id").write.partitionBy("cluster").mode("append").parquet(
         f"{path}/vectors"
@@ -2365,6 +2314,11 @@ def ivfpq_append_index(
 # deterministic takedown batch for the registered deletion query: every
 # 40th vector (mod-class 11 — never the query anchor vec_id=0)
 _DELETE_MOD, _DELETE_RES = 40, 11
+
+
+def _not_deleted() -> Column:
+    """Candidate filter dropping the registered IVF-PQ takedown batch."""
+    return F.pmod(F.col("vec_id"), F.lit(_DELETE_MOD)) != _DELETE_RES
 
 
 @register(
@@ -2393,18 +2347,9 @@ _DELETE_MOD, _DELETE_RES = 40, 11
     "identical to the base ADC search.",
 )
 def ivfpq_delete_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb, qv, cand, _topk, dtable = _ivfpq_adc_parts(spark, sf_dir, k=10, n_probes=4)
-    survivors = cand.filter(
-        F.pmod(F.col("vec_id"), F.lit(_DELETE_MOD)) != _DELETE_RES
-    )
-    topk = _adc_topk(survivors, dtable, 10)
-    q = F.array(*[F.lit(v) for v in qv])
-    return topk.join(emb.select("vec_id", "embedding"), "vec_id").select(
-        "vec_id",
-        "adc_rank",
-        "adc_d2q",
-        F.round(cosine(F.col("embedding"), q), 4).alias("cos_sim"),
-    )
+    p = _ivfpq_adc_parts(spark, sf_dir, k=10, n_probes=4)
+    survivors = p.cand.filter(_not_deleted())
+    return _adc_result(_adc_topk(survivors, p.dtable, 10), p.emb, p.qv)
 
 
 def ivfpq_delete_from_index(
@@ -2816,8 +2761,9 @@ def embedding_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 11: index-health / staleness audit — how stale do the frozen
-# coarse cells get after successive append generations?
+# Index-health / staleness audit — how stale do the frozen coarse cells
+# get after successive append generations (each generation encoded and
+# assigned by the same _pq_encode / _frozen_assign the append ticks run)?
 # ---------------------------------------------------------------------------
 
 _DRIFT_SHIFT = 10_000_000_000  # above any bench_scale replica id
@@ -3229,14 +3175,8 @@ def ivfpq_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb.filter(F.col("vec_id") >= nq), g
         )
         u = u.unionByName(batch)
-        nvs = batch.select(
-            "vec_id", _pq_sub_struct("embedding", "sv").alias("x")
-        ).select("vec_id", "x.subspace", "x.sv")
-        ncodes = _pq_argmin(nvs, cs).select("vec_id", "subspace", "codeword")
-        nassign = _ivf_assign(
-            batch.select(F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v")),
-            centroids,
-        ).select(F.col("__vid").alias("vec_id"), "cluster")
+        ncodes = _pq_encode(batch, cs).select("vec_id", "subspace", "codeword")
+        nassign = _frozen_assign(batch, centroids)
         # both arms + the next generation re-scan these; pin them with a
         # PLAN BARRIER (round 13 final session, was a persist): each
         # generation unions on top of the previous one, so the cached
@@ -3284,7 +3224,8 @@ def ivfpq_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 11: SemDeDup state-transition core + the mixed upsert tick
+# SemDeDup state transitions: the delete and append cores every registered
+# SemDeDup maintenance query and state.semdedup_tick run
 # ---------------------------------------------------------------------------
 
 
@@ -3295,18 +3236,15 @@ def semdedup_state_delete(
     embeddings: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
     """DELETE transition over the SemDeDup state pair ``(flags,
-    anchors)`` — the factored core behind ``semdedup_flags_delete`` and
-    the streaming retraction applier: cells that lost NO anchor pass
-    their frozen flags through minus the deleted rows (exact — deleting
-    a non-anchor member never changes the lowest-n anchor set, and a
-    member's flag depends only on its cell's anchors); anchor-losing
-    cells recompute flags AND roster from their surviving members.
-    ``embeddings`` is the vector store surviving members' vectors
-    resolve against; the flags table itself is the cell-membership map.
-    Invariant maintained for the next append tick: after any delete,
-    every cell's roster equals the lowest-n ids of its LIVE members."""
-    from redcap_omop_etl_spark.operators.scalable_windows import keyed_topk
-
+    anchors)``: cells that lost NO anchor pass their frozen flags
+    through minus the deleted rows (exact — deleting a non-anchor member
+    never changes the lowest-n anchor set, and a member's flag depends
+    only on its cell's anchors); anchor-losing cells recompute flags AND
+    roster from their surviving members. ``embeddings`` is the vector
+    store surviving members' vectors resolve against; the flags table
+    itself is the cell-membership map. Invariant maintained for the
+    next append tick: after any delete, every cell's roster equals the
+    lowest-n ids of its LIVE members."""
     anchors = anchors.select(
         F.col("cluster").cast("bigint").alias("cluster"), "a_id", "a_v"
     )
@@ -3319,38 +3257,13 @@ def semdedup_state_delete(
     untouched_flags = flags.join(touched, "cluster", "left_anti").join(
         deln, "vec_id", "left_anti"
     )
-    members = (
-        flags.join(touched, "cluster", "left_semi")
-        .join(deln, "vec_id", "left_anti")
-        .select("vec_id", F.col("cluster").cast("bigint").alias("cluster"))
-        .join(
-            embeddings.select(
-                "vec_id",
-                F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
-                    "__v"
-                ),
-            ),
-            "vec_id",
-        )
+    members = _semdedup_members(
+        embeddings,
+        flags.join(touched, "cluster", "left_semi").join(deln, "vec_id", "left_anti"),
     )
-    anchors2 = keyed_topk(
-        members, ["cluster"], [F.col("vec_id").asc()], k=SEMDEDUP_ANCHORS
-    ).select("cluster", F.col("vec_id").alias("a_id"), F.col("__v").alias("a_v"))
-    hits = (
-        members.join(anchors2, "cluster")
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(F.round(cosine(F.col("__v"), F.col("a_v")), 4) >= SEMDEDUP_TAU)
-        .groupBy("vec_id")
-        .agg(F.count(F.lit(1)).alias("n_dup_anchors"))
-    )
-    touched_flags = members.join(hits, "vec_id", "left").select(
-        "vec_id",
-        F.col("cluster").cast("bigint").alias("cluster"),
-        F.coalesce("n_dup_anchors", F.lit(0)).cast("bigint").alias("n_dup_anchors"),
-        F.col("n_dup_anchors").isNull().alias("is_kept"),
-    )
-    flags_out = untouched_flags.unionByName(touched_flags)
-    anchors_out = anchors.join(touched, "cluster", "left_anti").unionByName(anchors2)
+    roster = _semdedup_roster(members)
+    flags_out = untouched_flags.unionByName(_semdedup_flag(members, roster))
+    anchors_out = anchors.join(touched, "cluster", "left_anti").unionByName(roster)
     return flags_out, anchors_out
 
 
@@ -3443,10 +3356,9 @@ def semdedup_flags_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags2, anchors2 = semdedup_state_delete(base_flags, anchors_base, deleted, emb)
     flags2 = materialize(flags2, "persist")
     anchors2 = materialize(anchors2, "persist")
-    batch = emb.filter(
-        F.pmod(F.col("vec_id"), F.lit(_SEM_APPEND_MOD)) == _SEM_APPEND_RES
-    ).select((F.col("vec_id") + F.lit(_SEM_APPEND_SHIFT)).alias("vec_id"), "embedding")
-    flags3, _anchors3 = semdedup_state_append(flags2, anchors2, centroids, batch)
+    flags3, _anchors3 = semdedup_state_append(
+        flags2, anchors2, centroids, _sem_append_batch(emb)
+    )
     return flags3.withColumn(
         "is_appended", F.col("vec_id") >= F.lit(_SEM_APPEND_SHIFT)
     )
@@ -3476,48 +3388,7 @@ def semdedup_flags_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cluster partitions.",
 )
 def ivfpq_upsert_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = Catalog(spark, sf_dir)["embeddings"]
-    k, n_probes = 10, 4
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").head()
-    qv = [float(x) for x in qrow[0]]
-    assignments, centroids = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=sf_dir)
-    codes, cs = pq_assign(emb, memo_key=sf_dir)
-    batch = emb.filter(
-        F.pmod(F.col("vec_id"), F.lit(_APPEND_MOD)) == _APPEND_RES
-    ).select((F.col("vec_id") + F.lit(_APPEND_SHIFT)).alias("vec_id"), "embedding")
-    nvs = batch.select("vec_id", _pq_sub_struct("embedding", "sv").alias("x")).select(
-        "vec_id", "x.subspace", "x.sv"
-    )
-    ncodes = _pq_argmin(nvs, cs).select("vec_id", "subspace", "codeword")
-    nassign = _ivf_assign(
-        batch.select(F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v")),
-        centroids,
-    ).select(F.col("__vid").alias("vec_id"), "cluster")
-    probe_clusters = _nearest_cells(centroids.collect(), qv, n_probes)
-    base_cand = (
-        codes.select("vec_id", "subspace", "codeword")
-        .join(
-            assignments.filter(F.col("cluster").isin(probe_clusters)).select("vec_id"),
-            "vec_id",
-        )
-        .filter(F.pmod(F.col("vec_id"), F.lit(_DELETE_MOD)) != _DELETE_RES)
-    )
-    new_cand = ncodes.join(
-        nassign.filter(F.col("cluster").isin(probe_clusters)).select("vec_id"),
-        "vec_id",
-    )
-    cand = base_cand.unionByName(new_cand).filter(F.col("vec_id") != 0)
-    dtable = _adc_dtable(cs, qv)
-    topk = _adc_topk(cand, dtable, k)
-    ue = emb.select("vec_id", "embedding").unionByName(batch)
-    q = F.array(*[F.lit(v) for v in qv])
-    return topk.join(ue, "vec_id").select(
-        "vec_id",
-        "adc_rank",
-        "adc_d2q",
-        (F.col("vec_id") >= _APPEND_SHIFT).alias("is_appended"),
-        F.round(cosine(F.col("embedding"), q), 4).alias("cos_sim"),
-    )
+    return _ivfpq_ingest_search(spark, sf_dir, keep_base=_not_deleted())
 
 
 def semdedup_state_append(
@@ -3525,57 +3396,29 @@ def semdedup_state_append(
     anchors: DataFrame,
     centroids: DataFrame,
     batch: DataFrame,
-    check_ids: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """APPEND transition over the SemDeDup state pair: the batch
     coarse-assigns to the FROZEN centroids, the roster extends with
-    batch members filling under-populated cells (never displacing —
-    enforced by the monotonic-id guard), and only batch flags are
-    computed; existing flags pass through untouched. Returns
-    ``(flags_out, anchors_out)``. Factored so the registered upsert
-    tick, the catalog tick and any streaming bridge run the same proven
-    transition."""
-    from redcap_omop_etl_spark.operators.scalable_windows import keyed_topk
+    batch members filling under-populated cells, and only batch flags
+    are computed; existing flags pass through untouched. Returns
+    ``(flags_out, anchors_out)``.
 
-    anchors = anchors.select(
-        F.col("cluster").cast("bigint").alias("cluster"), "a_id", "a_v"
-    )
-    if check_ids:
-        from redcap_omop_etl_spark.validation import require_monotonic_ids
+    Exactness needs every batch id above every live id: then the
+    lowest-id roster over (anchors ∪ batch) extends and never displaces
+    the frozen anchors, and no existing member gains a hit (each new
+    anchor's id exceeds its own). ``validation.require_monotonic_ids``
+    enforces that before any work — one 1-row job per tick."""
+    from redcap_omop_etl_spark.validation import require_monotonic_ids
 
-        require_monotonic_ids(
-            flags.select("vec_id"), batch.select("vec_id"), "semdedup_state_append"
-        )
-    nassign = _ivf_assign(
-        batch.select(F.col("vec_id").alias("__vid"), F.col("embedding").alias("__v")),
-        centroids,
-    ).select(F.col("__vid").alias("vec_id"), "cluster")
-    bmembers = batch.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("__v"),
-    ).join(
-        nassign.select("vec_id", F.col("cluster").cast("bigint").alias("cluster")),
-        "vec_id",
+    require_monotonic_ids(
+        flags.select("vec_id"), batch.select("vec_id"), "semdedup_state_append"
     )
-    cand = anchors.unionByName(
-        bmembers.select(
-            "cluster", F.col("vec_id").alias("a_id"), F.col("__v").alias("a_v")
-        )
+    bmembers = _semdedup_members(batch, _frozen_assign(batch, centroids))
+    roster = _semdedup_roster(
+        anchors.select(
+            F.col("a_id").alias("vec_id"),
+            F.col("a_v").alias("__v"),
+            F.col("cluster").cast("bigint").alias("cluster"),
+        ).unionByName(bmembers)
     )
-    anchors_out = keyed_topk(
-        cand, ["cluster"], [F.col("a_id").asc()], k=SEMDEDUP_ANCHORS
-    )
-    hits = (
-        bmembers.join(anchors_out, "cluster")
-        .filter(F.col("a_id") < F.col("vec_id"))
-        .filter(F.round(cosine(F.col("__v"), F.col("a_v")), 4) >= SEMDEDUP_TAU)
-        .groupBy("vec_id")
-        .agg(F.count(F.lit(1)).alias("n_dup_anchors"))
-    )
-    batch_flags = bmembers.join(hits, "vec_id", "left").select(
-        "vec_id",
-        "cluster",
-        F.coalesce("n_dup_anchors", F.lit(0)).cast("bigint").alias("n_dup_anchors"),
-        F.col("n_dup_anchors").isNull().alias("is_kept"),
-    )
-    return flags.unionByName(batch_flags), anchors_out
+    return flags.unionByName(_semdedup_flag(bmembers, roster)), roster

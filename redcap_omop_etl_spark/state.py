@@ -1,10 +1,8 @@
 """Versioned on-disk catalog for incremental-maintenance index state.
 
-Until round 10, the frozen state the maintenance ticks read — cluster
-hub/component tables, SemDeDup anchors, PPJoin prefix index, term stats
-— lived in session-scoped memos plus ad-hoc parquet directories under
-the streaming bridges. This module formalizes ONE layout so ticks
-survive session restarts and the stream and batch paths share state by
+The frozen state the maintenance ticks read — cluster hub/component
+tables, SemDeDup anchors, term stats — has ONE layout, so ticks survive
+session restarts and the stream and batch paths share state by
 construction:
 
     {root}/{op}/{corpus_fingerprint}/v{N}/{frame_name}/   (parquet)
@@ -20,8 +18,12 @@ construction:
 - Commit protocol: parquet frames land first, the manifest is written
   LAST — a version without ``_MANIFEST.json`` is invisible to
   ``latest_version``/``load`` (the same commit-marker discipline as the
-  chunked sink's 2PC manifest). All filesystem access goes through the
-  Hadoop FileSystem API, so the root may be local, HDFS or S3A.
+  chunked sink's 2PC manifest). A tick commits exactly one version past
+  the version it read, and a save whose target is already committed
+  raises ``StateConflictError``: a tick whose base another tick already
+  moved past fails instead of committing without that tick's batch.
+  All filesystem access goes through the Hadoop FileSystem API, so the
+  root may be local, HDFS or S3A.
 
 Each index family (near-dup clusters, term stats, SemDeDup) has ONE
 bootstrap and ONE tick here; the batch maintenance loop and every
@@ -44,6 +46,15 @@ from pyspark.sql import functions as F
 from redcap_omop_etl_spark.caching import materialize
 
 MANIFEST = "_MANIFEST.json"
+
+
+class StateConflictError(RuntimeError):
+    """A save targeted a version that is already committed: another
+    tick committed on top of the same base version first. Committing
+    anyway would drop that tick's effect (and its stream's ledger
+    entry), so the caller fails instead; a streaming micro-batch then
+    replays against the new latest version, and the applied-epoch
+    ledger keeps the replay exactly-once."""
 
 
 def corpus_fingerprint(df: DataFrame, cols: list[str] | None = None) -> str:
@@ -103,20 +114,30 @@ class StateCatalog:
         fp: str,
         frames: dict[str, DataFrame],
         meta: dict | None = None,
+        base_version: int | None = None,
     ) -> int:
-        """Write ``frames`` as the next version; returns the version
-        number. The manifest commits the version (written last)."""
-        v = (self.latest_version(spark, op, fp) or 0) + 1
+        """Write ``frames`` as the version after ``base_version`` (the
+        version the caller read; None: after the latest committed one)
+        and return its number. The manifest commits the version
+        (written last, never overwritten); a target version that is
+        already committed raises ``StateConflictError``."""
+        if base_version is None:
+            base_version = self.latest_version(spark, op, fp) or 0
+        v = base_version + 1
         vdir = self.dir(op, fp, v)
+        hadoop, fs = _fs(spark, vdir)
+        if fs.exists(hadoop.Path(f"{vdir}/{MANIFEST}")):
+            raise StateConflictError(
+                f"{op}/{fp} v{v} is already committed; this tick read v{base_version}"
+            )
         # a crash mid-save leaves a manifest-less (torn) v{N} dir that is
         # invisible to latest_version — so the replayed batch re-targets
         # the SAME v{N} and the errorifexists writes below would wedge
         # until manual cleanup. A torn dir is garbage by the commit
         # protocol's own definition (no manifest == never committed), so
         # clear it before writing.
-        hadoop, fs = _fs(spark, vdir)
         vpath = hadoop.Path(vdir)
-        if fs.exists(vpath) and not fs.exists(hadoop.Path(f"{vdir}/{MANIFEST}")):
+        if fs.exists(vpath):
             fs.delete(vpath, True)
         counts = {}
         for name, df in frames.items():
@@ -132,7 +153,6 @@ class StateCatalog:
             "application_id": spark.sparkContext.applicationId,
             "meta": meta or {},
         }
-        hadoop, fs = _fs(spark, vdir)
         out = fs.create(hadoop.Path(f"{vdir}/{MANIFEST}"), False)
         out.write(bytearray(json.dumps(manifest, sort_keys=True).encode("utf-8")))
         out.close()
@@ -164,6 +184,14 @@ class StateCatalog:
         man = self.manifest(spark, op, fp, v)
         vdir = self.dir(op, fp, v)
         return {name: spark.read.parquet(f"{vdir}/{name}") for name in man["frames"]}
+
+
+def _resolve(
+    catalog: StateCatalog, spark: SparkSession, op: str, fp: str, version: int | None
+) -> int | None:
+    """The version a tick reads and commits on top of: the caller's, or
+    the latest committed one."""
+    return version if version is not None else catalog.latest_version(spark, op, fp)
 
 
 # ---------------------------------------------------------------------------
@@ -204,13 +232,15 @@ def cluster_state_tick(
     append_docs: DataFrame | None = None,
     delete_ids: DataFrame | None = None,
     meta: dict | None = None,
+    base_version: int | None = None,
 ) -> int:
-    """One maintenance tick against the LATEST committed version:
-    optional delete then optional append (the upsert composition — see
-    ``dedup_minhash_clusters_upsert``'s equivalence argument), committed
-    as the next version. Works in any session — including one started
-    after the session that built v1 died — because everything it reads
-    is catalog state plus the caller's corpus frame."""
+    """One maintenance tick against committed version ``base_version``
+    (None: the latest): optional delete then optional append (the
+    upsert composition — see ``dedup_minhash_clusters_upsert``'s
+    equivalence argument), committed as the version after it. Works in
+    any session — including one started after the session that built
+    v1 died — because everything it reads is catalog state plus the
+    caller's corpus frame."""
     from redcap_omop_etl_spark.operators.dedup import minhash_band_table
     from redcap_omop_etl_spark.operators.graph import (
         minhash_cluster_state_append,
@@ -218,7 +248,8 @@ def cluster_state_tick(
     )
 
     spark = corpus.sparkSession
-    frames = catalog.load(spark, CLUSTER_OP, fp)
+    base_version = _resolve(catalog, spark, CLUSTER_OP, fp, base_version)
+    frames = catalog.load(spark, CLUSTER_OP, fp, base_version)
     comp, hubs = frames["components"], frames["hubs"]
     if delete_ids is not None:
         comp, hubs = minhash_cluster_state_delete(comp, hubs, delete_ids, corpus)
@@ -234,7 +265,12 @@ def cluster_state_tick(
             comp, hubs, materialize(minhash_band_table(append_docs))
         )
     return catalog.save(
-        spark, CLUSTER_OP, fp, {"components": comp, "hubs": hubs}, meta=meta
+        spark,
+        CLUSTER_OP,
+        fp,
+        {"components": comp, "hubs": hubs},
+        meta=meta,
+        base_version=base_version,
     )
 
 
@@ -248,17 +284,15 @@ TERM_OP = "term_stats"
 def term_stats_bootstrap(
     catalog: StateCatalog, docs: DataFrame, fp: str | None = None
 ) -> tuple[str, int]:
-    """Build and commit v1 of the UNFLOORED per-term (df, cf) stats."""
-    from redcap_omop_etl_spark.operators.retrieval import _tokens
+    """Build and commit v1 of the UNFLOORED per-term (df, cf) stats
+    (``retrieval._term_stats``, the aggregate behind the frozen stat
+    memo)."""
+    from redcap_omop_etl_spark.operators.retrieval import _term_stats
 
     spark = docs.sparkSession
     # content fingerprint, matching cluster_state_bootstrap's contract
     fp = fp or corpus_fingerprint(docs)
-    tf = _tokens(docs).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-    stats = tf.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df"),
-        F.sum("tf").cast("long").alias("cf"),
-    )
+    stats = _term_stats(docs)
     # the cumulative takedown set rides in the state: stats subtraction
     # is NOT idempotent per id, so the tick must be able to recognize an
     # id it already removed (opt-out requests repeat in practice)
@@ -274,28 +308,23 @@ def term_stats_tick(
     append_docs: DataFrame | None = None,
     delete_ids: DataFrame | None = None,
     meta: dict | None = None,
+    base_version: int | None = None,
 ) -> int:
-    """One maintenance tick: subtract the takedown batch's aggregate
-    and/or add the ingest batch's (exact integer arithmetic — order
-    irrelevant), committed as the next version. df<=0 terms drop."""
-    from redcap_omop_etl_spark.operators.retrieval import _tokens
+    """One maintenance tick on ``base_version`` (None: the latest):
+    subtract the takedown batch's aggregate and/or add the ingest
+    batch's through ``retrieval._term_stats_merge`` (the merge the
+    registered ``retrieval_index_*`` queries run; exact integer
+    arithmetic, order irrelevant), committed as the version after it.
+    df<=0 terms drop."""
+    from redcap_omop_etl_spark.operators.retrieval import _term_stats_merge
 
     spark = corpus.sparkSession
-    frames = catalog.load(spark, TERM_OP, fp)
-    stats = frames["terms"]
+    base_version = _resolve(catalog, spark, TERM_OP, fp, base_version)
+    frames = catalog.load(spark, TERM_OP, fp, base_version)
+    out = frames["terms"]
     already = frames.get("deleted")
-    if already is None:  # pre-round-11 state layout
+    if already is None:  # a state saved before the takedown set existed
         already = spark.createDataFrame([], "doc_id long")
-
-    def agg_of(batch, dfc, cfc):
-        tf = _tokens(batch).groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-        return tf.groupBy("term").agg(
-            F.count(F.lit(1)).alias(dfc), F.sum("tf").alias(cfc)
-        )
-
-    out = stats
     deleted_out = already
     if delete_ids is not None:
         # ids already taken down in an earlier tick must NOT subtract
@@ -312,26 +341,17 @@ def term_stats_tick(
         # could actually apply — the stats would stay permanently
         # unadjusted
         deleted_out = already.unionByName(batch.select("doc_id").distinct())
-        d = agg_of(batch, "df_d", "cf_d")
-        out = out.join(d, "term", "left").select(
-            "term",
-            (F.col("df") - F.coalesce("df_d", F.lit(0))).cast("long").alias("df"),
-            (F.col("cf") - F.coalesce("cf_d", F.lit(0))).cast("long").alias("cf"),
-        )
+        out = _term_stats_merge(out, batch, -1)
     if append_docs is not None:
-        a = agg_of(append_docs, "df_a", "cf_a")
-        out = out.join(a, "term", "full_outer").select(
-            "term",
-            (F.coalesce("df", F.lit(0)) + F.coalesce("df_a", F.lit(0)))
-            .cast("long")
-            .alias("df"),
-            (F.coalesce("cf", F.lit(0)) + F.coalesce("cf_a", F.lit(0)))
-            .cast("long")
-            .alias("cf"),
-        )
-    out = out.filter(F.col("df") > 0)
+        out = _term_stats_merge(out, append_docs, +1)
+    out = out.filter(F.col("df") > 0).select("term", "df", "cf")
     return catalog.save(
-        spark, TERM_OP, fp, {"terms": out, "deleted": deleted_out}, meta=meta
+        spark,
+        TERM_OP,
+        fp,
+        {"terms": out, "deleted": deleted_out},
+        meta=meta,
+        base_version=base_version,
     )
 
 
@@ -375,20 +395,23 @@ def semdedup_tick(
     append_vecs: DataFrame | None = None,
     delete_ids: DataFrame | None = None,
     meta: dict | None = None,
+    base_version: int | None = None,
 ) -> int:
-    """One maintenance tick: optional delete (anchor-losing cells
-    recompute from survivors) then optional append (guarded frozen-
-    centroid assign + roster fill), committed as the next version —
-    the delete-then-append composition ``semdedup_flags_upsert``'s
-    oracle proves. Works in any session: everything it reads is
-    catalog state plus the caller's vector store."""
+    """One maintenance tick on ``base_version`` (None: the latest):
+    optional delete (anchor-losing cells recompute from survivors) then
+    optional append (guarded frozen-centroid assign + roster fill),
+    committed as the version after it — the delete-then-append
+    composition ``semdedup_flags_upsert``'s oracle proves. Works in any
+    session: everything it reads is catalog state plus the caller's
+    vector store."""
     from redcap_omop_etl_spark.operators.similarity import (
         semdedup_state_append,
         semdedup_state_delete,
     )
 
     spark = embeddings.sparkSession
-    frames = catalog.load(spark, SEMDEDUP_OP, fp)
+    base_version = _resolve(catalog, spark, SEMDEDUP_OP, fp, base_version)
+    frames = catalog.load(spark, SEMDEDUP_OP, fp, base_version)
     flags, anchors, centroids = (
         frames["flags"],
         frames["anchors"],
@@ -406,6 +429,7 @@ def semdedup_tick(
         fp,
         {"flags": flags, "anchors": anchors, "centroids": centroids},
         meta=meta,
+        base_version=base_version,
     )
 
 

@@ -132,11 +132,14 @@ def catalog_delete_applier(
     catalog, op: str, fp: str, store: DataFrame, stream_id: str = "delete"
 ) -> Applier:
     """Exactly-once takedown applier for index family ``op``: the
-    family's tick (``state.TICKS[op]``) with ``delete_ids`` against the
-    LATEST catalog version, committing a NEW version whose manifest
-    records the epoch. ``store`` is the corpus (cluster, term stats) or
-    vector store (SemDeDup) the takedown ids resolve against — it still
-    holds the rows until the delete commits."""
+    family's tick (``state.TICKS[op]``) with ``delete_ids`` on the
+    latest catalog version, read once per micro-batch: its ledger
+    decides the epoch, the tick loads it, and the commit lands exactly
+    one version past it (``StateCatalog.save`` raises if another tick
+    committed there first, so the batch fails and replays instead of
+    dropping that tick's effect). ``store`` is the corpus (cluster,
+    term stats) or vector store (SemDeDup) the takedown ids resolve
+    against — it still holds the rows until the delete commits."""
     from redcap_omop_etl_spark.state import TICKS
 
     tick = TICKS[op]
@@ -145,7 +148,7 @@ def catalog_delete_applier(
         v = catalog.latest_version(spark, op, fp)
         meta = _next_epoch_meta(spark, catalog, op, fp, v, epoch, stream_id)
         if meta is not None:
-            tick(catalog, fp, store, delete_ids=deleted, meta=meta)
+            tick(catalog, fp, store, delete_ids=deleted, meta=meta, base_version=v)
 
     return apply
 
@@ -168,7 +171,7 @@ def catalog_cluster_append_applier(
             state.cluster_state_bootstrap(catalog, batch_docs, fp, meta=meta)
         else:
             state.cluster_state_tick(
-                catalog, fp, batch_docs, append_docs=batch_docs, meta=meta
+                catalog, fp, batch_docs, append_docs=batch_docs, meta=meta, base_version=v
             )
 
     return apply

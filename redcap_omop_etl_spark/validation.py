@@ -140,7 +140,7 @@ class MaintenancePreconditionError(ValueError):
     the id precondition its rebuild-equivalence proof needs. Raised by
     the runtime guards below so a bad batch fails loudly instead of
     producing a silently-wrong incremental result (the append proofs in
-    ``similarity.semdedup_flags_append`` / ``graph.
+    ``similarity.semdedup_state_append`` / ``graph.
     minhash_cluster_state_append`` / ``dedup._ppj_append_tick``, whose
     batch ``dedup._ppj_append_batch`` guards, hold only under these
     conditions)."""

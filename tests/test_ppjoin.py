@@ -127,6 +127,31 @@ class TestPpjoinAppendGuard:
         assert bprefix.count() >= 1
 
 
+class TestPpjoinAppendHighIds:
+    def test_base_docs_above_batch_shift_are_verified(self, spark, tmp_path):
+        """The verify re-shingles the candidate base docs picked by the
+        semi-join against the base documents, so a base whose ids sit at
+        or above the registered batch shift still yields its pairs."""
+        from redcap_omop_etl_spark.operators.dedup import _ppj_append_batch, _ppj_append_tick
+
+        words = " ".join(f"w{i}" for i in range(40))
+        sf = str(tmp_path / "sf")
+        spark.createDataFrame(
+            [
+                (20_000_000_001, words, "en", "web", len(words)),
+                (20_000_000_002, "an unrelated short note about gardens", "en", "web", 37),
+            ],
+            "doc_id long, text string, lang string, source string, n_chars long",
+        ).write.parquet(f"{sf}/documents.parquet")
+        batch = spark.createDataFrame(
+            [(30_000_000_000, words + " w40")], "doc_id long, text string"
+        )
+        parts = _ppj_append_batch(spark, sf, batch=batch)
+        pairs, _overflow = _ppj_append_tick(spark, sf, parts=parts)
+        got = [(r["d1"], r["d2"]) for r in pairs.collect()]
+        assert got == [(20_000_000_001, 30_000_000_000)]
+
+
 def test_ppjoin_steps_defined_once():
     """Convention lint: every doc-keyed shingle explode goes through
     ``_shingle_table`` (the two source-keyed explodes stay), the PPJoin

@@ -1,6 +1,8 @@
 """Round-10 operator tests: deletion maintenance (cluster table +
-IVF-PQ index), incremental SemDeDup, incremental retrieval stats, and
-the connected-components neighborhood minimum."""
+IVF-PQ index), the multimodal decode option, the IVF-PQ recall sweep,
+and the connected-components neighborhood minimum. The SemDeDup and
+term-stats maintenance tests live in ``test_semdedup.py`` and
+``test_term_stats.py``."""
 
 from __future__ import annotations
 
@@ -165,99 +167,6 @@ class TestIvfPqDelete:
         )
 
 
-class TestSemDeDupAppend:
-    """semdedup_flags_append: the memoized base flags pass through
-    bit-identically, and batch flags land in frozen cells."""
-
-    def test_base_flags_invariant_and_batch_marked(self, spark):
-        from redcap_omop_etl_spark.operators.similarity import (
-            _SEM_APPEND_SHIFT,
-            semdedup_flags_append,
-            semdedup_flags_memo,
-        )
-
-        base = {
-            r["vec_id"]: (r["cluster"], r["n_dup_anchors"], r["is_kept"])
-            for r in semdedup_flags_memo(spark, SF_SMOKE).collect()
-        }
-        rows = semdedup_flags_append(spark, SF_SMOKE).collect()
-        out_base = {
-            r["vec_id"]: (r["cluster"], r["n_dup_anchors"], r["is_kept"])
-            for r in rows
-            if not r["is_appended"]
-        }
-        assert out_base == base
-        appended = [r for r in rows if r["is_appended"]]
-        assert appended
-        assert all(r["vec_id"] >= _SEM_APPEND_SHIFT for r in appended)
-
-    def test_anchor_memo_is_per_cell_lowest_ids(self, spark):
-        from redcap_omop_etl_spark.operators.similarity import (
-            SEMDEDUP_ANCHORS,
-            ivf_build,
-            semdedup_anchors_memo,
-        )
-        from redcap_omop_etl_spark.sources.readers import Catalog
-
-        anchors = semdedup_anchors_memo(spark, SF_SMOKE).collect()
-        emb = Catalog(spark, SF_SMOKE)["embeddings"]
-        assignments, _ = ivf_build(emb, n_clusters=16, n_iters=2, memo_key=SF_SMOKE)
-        by_cell = {}
-        for r in assignments.collect():
-            by_cell.setdefault(r["cluster"], []).append(r["vec_id"])
-        got = {}
-        for r in anchors:
-            got.setdefault(r["cluster"], []).append(r["a_id"])
-        for c, ids in got.items():
-            assert sorted(ids) == sorted(by_cell[c])[: SEMDEDUP_ANCHORS]
-
-
-class TestRetrievalIndexAppend:
-    def test_new_terms_enter_via_outer_join(self, spark):
-        from redcap_omop_etl_spark.operators.retrieval import (
-            _IDX_APPEND_MOD,
-            _IDX_APPEND_RES,
-            retrieval_index_append,
-        )
-        from redcap_omop_etl_spark.sources.readers import Catalog
-
-        rows = {r["term"]: r for r in retrieval_index_append(spark, SF_SMOKE).collect()}
-        n_batch = (
-            Catalog(spark, SF_SMOKE)["documents"]
-            .filter(
-                F.pmod(F.col("doc_id"), F.lit(_IDX_APPEND_MOD)) == _IDX_APPEND_RES
-            )
-            .count()
-        )
-        if n_batch >= 3:  # suffix terms pass the df>=3 floor
-            for t in ("zzqterm", "zzidxterm"):
-                assert rows[t]["df"] == n_batch == rows[t]["df_appended"]
-        # batch contribution is bounded by the batch, and shared terms
-        # carry a base contribution on top of it (the synthetic corpus's
-        # word pool is small, so every common term also appears in the
-        # batch — a df_appended==0 row is NOT guaranteed here)
-        assert all(r["df_appended"] <= n_batch for r in rows.values())
-        assert any(r["df"] - r["df_appended"] > 0 for r in rows.values())
-
-    def test_stats_memo_matches_direct_aggregate(self, spark):
-        from redcap_omop_etl_spark.operators.retrieval import _tokens, term_stats_memo
-        from redcap_omop_etl_spark.sources.readers import Catalog
-
-        memo = {
-            r["term"]: (r["df"], r["cf"])
-            for r in term_stats_memo(spark, SF_SMOKE).collect()
-        }
-        d = Catalog(spark, SF_SMOKE)["documents"]
-        tf = _tokens(d).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-        direct = {
-            r["term"]: (r["df"], r["cf"])
-            for r in tf.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-            .collect()
-        }
-        assert memo == direct
-
-
 class TestMultimodalDecodeKnob:
     """The round-9 landmine (has_pil=True RAISED in the featurize
     closure, so installing pillow would have broken the registered
@@ -324,71 +233,3 @@ class TestRecallSweep:
         audit = ivfpq_recall_audit(spark, SF_SMOKE).head()
         assert rows[4]["n_candidates"] == audit["n_candidates"]
         assert rows[4]["recall_ppm"] == audit["recall_ppm"]
-
-
-class TestSemDeDupDelete:
-    """semdedup_flags_delete: pass-through for cells that lost no
-    anchor; full recompute only inside anchor-losing cells."""
-
-    def test_untouched_cells_pass_through_and_deleted_gone(self, spark):
-        from redcap_omop_etl_spark.operators.similarity import (
-            _SEM_DELETE_MOD,
-            _SEM_DELETE_RES,
-            semdedup_anchors_memo,
-            semdedup_flags_delete,
-            semdedup_flags_memo,
-        )
-
-        base = {
-            r["vec_id"]: (r["cluster"], r["n_dup_anchors"], r["is_kept"])
-            for r in semdedup_flags_memo(spark, SF_SMOKE).collect()
-        }
-        anchors = semdedup_anchors_memo(spark, SF_SMOKE).collect()
-        deleted = {
-            v for v in base if v % _SEM_DELETE_MOD == _SEM_DELETE_RES
-        }
-        touched_cells = {
-            r["cluster"] for r in anchors if r["a_id"] in deleted
-        }
-        # the derived batch must exercise the anchor-promotion path
-        assert deleted and touched_cells
-        after = {
-            r["vec_id"]: (r["cluster"], r["n_dup_anchors"], r["is_kept"])
-            for r in semdedup_flags_delete(spark, SF_SMOKE).collect()
-        }
-        assert not (set(after) & deleted)
-        assert set(after) == set(base) - deleted
-        for v, row in after.items():
-            if row[0] not in touched_cells:
-                assert row == base[v], f"untouched-cell vec {v} changed"
-
-
-class TestRetrievalIndexDelete:
-    def test_subtraction_consistent_with_rebuild(self, spark):
-        from redcap_omop_etl_spark.operators.retrieval import (
-            _IDX_DELETE_MOD,
-            _IDX_DELETE_RES,
-            _tokens,
-            retrieval_index_delete,
-        )
-        from redcap_omop_etl_spark.sources.readers import Catalog
-
-        rows = {
-            r["term"]: r for r in retrieval_index_delete(spark, SF_SMOKE).collect()
-        }
-        assert rows and all(
-            r["df"] >= 3 and r["df_deleted"] >= 0 for r in rows.values()
-        )
-        # direct rebuild over survivors must agree term-for-term
-        d = Catalog(spark, SF_SMOKE)["documents"].filter(
-            F.pmod(F.col("doc_id"), F.lit(_IDX_DELETE_MOD)) != _IDX_DELETE_RES
-        )
-        tf = _tokens(d).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-        direct = {
-            r["term"]: (r["df"], r["cf"])
-            for r in tf.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-            .filter(F.col("df") >= 3)
-            .collect()
-        }
-        assert {t: (r["df"], r["cf"]) for t, r in rows.items()} == direct

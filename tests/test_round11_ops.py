@@ -65,39 +65,7 @@ class TestPreconditionGuards:
             "bucket", F.lit(123456789)
         )
         with pytest.raises(MaintenancePreconditionError, match="disjoint"):
-            minhash_cluster_state_append(base_comp, hubs, bad_banded, check_ids=True)
-
-    def test_cluster_append_guard_optout(self, spark, sf_dir):
-        """check_ids=False restores the unguarded fast path (for callers
-        that prove disjointness by construction)."""
-        from redcap_omop_etl_spark.operators.graph import (
-            _minhash_cluster_state,
-            minhash_cluster_state_append,
-        )
-
-        base_comp, hubs = _minhash_cluster_state(spark, sf_dir, family="md5")
-        fresh = spark.createDataFrame(
-            [(10_000_000, 0, "987_654_321_0")],
-            "doc long, band int, bucket string",
-        )
-        comp_out, hubs_out = minhash_cluster_state_append(
-            base_comp, hubs, fresh, check_ids=False
-        )
-        assert "component" in comp_out.columns
-        assert hubs_out.filter(F.col("hub") == 10_000_000).count() == 1
-
-    def test_semdedup_append_guard_rejects_low_id_batch(self, spark, sf_dir):
-        """A batch vec_id at/below the base range could displace a
-        frozen anchor — the append must refuse it."""
-        from redcap_omop_etl_spark.operators.similarity import semdedup_flags_append
-        from redcap_omop_etl_spark.sources.readers import Catalog
-        from redcap_omop_etl_spark.validation import MaintenancePreconditionError
-
-        emb = Catalog(spark, sf_dir)["embeddings"]
-        bad_batch = emb.limit(3).select("vec_id", "embedding")  # base ids verbatim
-        with pytest.raises(MaintenancePreconditionError, match="exceed base"):
-            semdedup_flags_append(spark, sf_dir, batch=bad_batch).collect()
-
+            minhash_cluster_state_append(base_comp, hubs, bad_banded)
 
 class TestIngestTickRouter:
     """The automated ingest-tick router (round-10 verdict item 1): a
@@ -218,40 +186,9 @@ class TestIvfpqDriftAudit:
 
 
 class TestUpsertFamily:
-    """The round-11 upsert column of the maintenance matrix: every
-    index family composes delete + append in one tick."""
-
-    def test_semdedup_upsert_composition(self, spark, sf_dir):
-        from redcap_omop_etl_spark.operators.similarity import (
-            _SEM_APPEND_SHIFT,
-            _SEM_DELETE_MOD,
-            _SEM_DELETE_RES,
-            semdedup_flags_delete,
-            semdedup_flags_upsert,
-        )
-
-        rows = semdedup_flags_upsert(spark, sf_dir).collect()
-        ids = {r["vec_id"] for r in rows}
-        # takedown batch gone, ingest batch present and flagged
-        assert not any(
-            v % _SEM_DELETE_MOD == _SEM_DELETE_RES
-            for v in ids
-            if v < _SEM_APPEND_SHIFT
-        )
-        appended = [r for r in rows if r["is_appended"]]
-        assert appended and all(r["vec_id"] >= _SEM_APPEND_SHIFT for r in appended)
-        # the survivor half IS the delete tick's output (append cannot
-        # change survivor flags: batch ids exceed every live id)
-        del_rows = {
-            (r["vec_id"], r["cluster"], r["n_dup_anchors"], r["is_kept"])
-            for r in semdedup_flags_delete(spark, sf_dir).collect()
-        }
-        surv_rows = {
-            (r["vec_id"], r["cluster"], r["n_dup_anchors"], r["is_kept"])
-            for r in rows
-            if not r["is_appended"]
-        }
-        assert surv_rows == del_rows
+    """The IVF-PQ upsert: delete + append in one tick over the frozen
+    index (the SemDeDup and term-stats upserts are tested with their
+    families in ``test_semdedup.py`` and ``test_term_stats.py``)."""
 
     def test_ivfpq_upsert_excludes_deleted_includes_appended(self, spark, sf_dir):
         from redcap_omop_etl_spark.operators.similarity import (
@@ -268,46 +205,3 @@ class TestUpsertFamily:
             if v < _APPEND_SHIFT:
                 assert v % _DELETE_MOD != _DELETE_RES
         assert {r["adc_rank"] for r in rows} == set(range(1, 11))
-
-    def test_retrieval_upsert_floor_applies_to_net_counts(self, spark, sf_dir):
-        """The floor subtlety: net df must equal rebuild df exactly, and
-        any term at the floor must owe its survival to the NET count
-        (base - del + add), not the pre-add count."""
-        from redcap_omop_etl_spark.operators.retrieval import (
-            _IDX_APPEND_MOD,
-            _IDX_APPEND_RES,
-            _IDX_APPEND_SHIFT,
-            _IDX_DELETE_MOD,
-            _IDX_DELETE_RES,
-            _tokens,
-            retrieval_index_upsert,
-        )
-        from redcap_omop_etl_spark.sources.readers import Catalog
-
-        d = Catalog(spark, sf_dir)["documents"]
-        net = d.select("doc_id", "text").filter(
-            F.pmod(F.col("doc_id"), F.lit(_IDX_DELETE_MOD)) != _IDX_DELETE_RES
-        ).unionByName(
-            d.filter(
-                F.pmod(F.col("doc_id"), F.lit(_IDX_APPEND_MOD)) == _IDX_APPEND_RES
-            ).select(
-                (F.col("doc_id") + F.lit(_IDX_APPEND_SHIFT)).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zzqterm zzidxterm")).alias("text"),
-            )
-        )
-        tf = _tokens(net).groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-        want = {
-            (r["term"], r["df"], r["cf"])
-            for r in tf.groupBy("term")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("df"),
-                F.sum("tf").cast("long").alias("cf"),
-            )
-            .filter(F.col("df") >= 3)
-            .collect()
-        }
-        got = {
-            (r["term"], r["df"], r["cf"])
-            for r in retrieval_index_upsert(spark, sf_dir).collect()
-        }
-        assert got == want

@@ -5,6 +5,7 @@ the only writer of index state."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE, term_stats_rebuild
@@ -225,6 +226,45 @@ class TestStateCatalogFamilies:
             for r in cat.load(spark, "term_stats", fp)["terms"].collect()
         }
         assert got == term_stats_rebuild(full.filter(F.col("doc_id") != 3))
+
+
+class TestStateCommitBase:
+    def test_tick_refuses_to_commit_over_an_unread_version(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A delete applier reads v1; another tick commits v2 before the
+        applier saves. The applier's tick must fail rather than commit
+        v3 built from v1 without v2's batch."""
+        from redcap_omop_etl_spark.streaming import retraction
+        from redcap_omop_etl_spark.state import (
+            TERM_OP,
+            StateCatalog,
+            StateConflictError,
+            term_stats_bootstrap,
+            term_stats_tick,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, "aa bb cc"), (2, "bb cc dd"), (3, "cc dd ee")],
+            "doc_id long, text string",
+        )
+        cat = StateCatalog(str(tmp_path / "state"))
+        fp, _v1 = term_stats_bootstrap(cat, docs)
+        other = spark.createDataFrame([(9, "ff gg")], "doc_id long, text string")
+        read_meta = retraction._next_epoch_meta
+
+        def meta_then_other_commit(*args):
+            meta = read_meta(*args)
+            term_stats_tick(cat, fp, docs, append_docs=other)  # commits v2
+            return meta
+
+        monkeypatch.setattr(retraction, "_next_epoch_meta", meta_then_other_commit)
+        apply = retraction.catalog_delete_applier(cat, TERM_OP, fp, docs)
+        with pytest.raises(StateConflictError):
+            apply(spark, spark.createDataFrame([(3,)], "doc_id long"), 0)
+        assert cat.versions(spark, TERM_OP, fp) == [1, 2]
+        terms = {r["term"] for r in cat.load(spark, TERM_OP, fp)["terms"].collect()}
+        assert {"ff", "gg", "ee"} <= terms
 
 
 class TestStreamClusterIndex:

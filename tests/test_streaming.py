@@ -1211,8 +1211,9 @@ class TestStreamToDeleteTicks:
 
     def test_applier_reads_epoch_ledger_once(self, spark, tmp_path, monkeypatch):
         """One ledger read per applier call: the latest manifest is opened
-        once for both the replay check and the next meta. The tick is
-        stubbed, so its own ``catalog.load`` read is not counted."""
+        once for both the replay check and the next meta, and the tick
+        is handed that version to build on. The tick is stubbed, so its
+        own ``catalog.load`` read is not counted."""
         from redcap_omop_etl_spark import state
         from redcap_omop_etl_spark.state import StateCatalog
         from redcap_omop_etl_spark.streaming.retraction import catalog_delete_applier
@@ -1221,7 +1222,11 @@ class TestStreamToDeleteTicks:
         cat.save(spark, "toy", "fp", {"a": spark.range(3)}, meta={"applied_epochs": {"delete": 4}})
         metas, reads = [], []
         monkeypatch.setitem(
-            state.TICKS, "toy", lambda catalog, fp, store, delete_ids, meta: metas.append(meta)
+            state.TICKS,
+            "toy",
+            lambda catalog, fp, store, delete_ids, meta, base_version: metas.append(
+                (meta, base_version)
+            ),
         )
         real_manifest = StateCatalog.manifest
 
@@ -1233,6 +1238,6 @@ class TestStreamToDeleteTicks:
         ap = catalog_delete_applier(cat, "toy", "fp", spark.range(3))
         ap(spark, spark.range(1), epoch=5)
         assert len(reads) == 1
-        assert metas == [{"epoch": 5, "stream_id": "delete", "applied_epochs": {"delete": 5}}]
+        assert metas == [({"epoch": 5, "stream_id": "delete", "applied_epochs": {"delete": 5}}, 1)]
         ap(spark, spark.range(1), epoch=4)  # already applied: no tick
         assert len(reads) == 2 and len(metas) == 1

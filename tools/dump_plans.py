@@ -258,9 +258,10 @@ SHOWCASE: dict[str, str] = {
     "text_quality_classifier_fast": "xxHash64 production twin of the "
     "quality classifier: identical broadcast weight-table plan, "
     "codegen'd hash in place of the oracle-portable interpreted md5.",
-    "dedup_semdedup": "SemDeDup (round 8): k-means cells from the "
-    "memoized ivf_build index, then each row does ≤16 codegen'd cosines "
-    "against the per-cell ANCHOR table — UNHINTED join (cost model "
+    "dedup_semdedup": "SemDeDup: k-means cells from the memoized "
+    "ivf_build index, then each row does ≤16 codegen'd cosines "
+    "(_semdedup_flag) against the per-cell ANCHOR roster "
+    "(_semdedup_roster, two-phase keyed_topk) — UNHINTED join (cost model "
     "broadcasts at small k; shuffle at cell-count parallelism when "
     "production scales k with the corpus), no corpus self-join, "
     "corpus-sized keep-flag output; the anchor cap is the recall/cost "
@@ -275,8 +276,8 @@ SHOWCASE: dict[str, str] = {
     "join, and the two 1-row summary sides combine via broadcast "
     "crossJoins — Catalyst prunes the unused adc_rank window out of "
     "the plan entirely.",
-    "similarity_ivf_pq_adc": "IVF-PQ ADC search (round 8): candidates "
-    "ranked from 8-byte PQ codes via a broadcast 8×4 integer distance "
+    "similarity_ivf_pq_adc": "IVF-PQ ADC search: candidates "
+    "ranked from 8-byte PQ codes via a broadcast 8×16 integer distance "
     "table + hash-agg sum (exact, order-free); TakeOrdered heap for "
     "top-k; raw vectors touched only for the exact-cosine audit column "
     "on the 10 survivors.",
@@ -286,15 +287,17 @@ SHOWCASE: dict[str, str] = {
     "the touched-member set — no recompute); only the touched "
     "components' survivors re-band and re-contract; the single corpus "
     "window is the output cluster_size count.",
-    "semdedup_flags_append": "Incremental SemDeDup (round 10): base "
-    "keep-flags are a frozen localCheckpoint scan passed through "
-    "verbatim; the batch coarse-assigns via the parameter-bounded "
-    "centroid crossJoin (allowlisted) and does ≤16 codegen'd cosines "
-    "against the frozen anchor table — batch-sized work end to end.",
-    "retrieval_index_append": "Incremental retrieval stats (round 10): "
-    "the frozen per-term df/cf table (localCheckpoint scan) full-outer-"
-    "merges with the batch's own tokenize+agg on the vocabulary key — "
-    "zero base-text reads in the plan; exact integer addition.",
+    "semdedup_flags_append": "Incremental SemDeDup (semdedup_state_append, "
+    "the transition the catalog tick runs): base keep-flags are a frozen "
+    "localCheckpoint scan passed through verbatim; the batch "
+    "coarse-assigns to the frozen centroids in one Arrow argmin pass "
+    "and does ≤16 codegen'd cosines against the frozen anchor roster "
+    "extended by the batch — batch-sized work end to end.",
+    "retrieval_index_append": "Incremental retrieval stats "
+    "(_term_stats_merge, the merge the catalog tick runs): the frozen "
+    "per-term df/cf table (localCheckpoint scan) full-outer-merges with "
+    "the batch's own tokenize+agg on the vocabulary key — zero "
+    "base-text reads in the plan; exact integer addition.",
     "ivfpq_recall_sweep": "n_probes tuning sweep (round 10): ADC "
     "distances + per-cell probe rank computed ONCE over the memoized "
     "codes (InMemoryTableScan reused by all arms), then four "
@@ -314,10 +317,10 @@ SHOWCASE: dict[str, str] = {
     "labels stream off the checkpointed state scan, and the single "
     "corpus-wide window is the output cluster_size count — identical "
     "shape discipline to the single-direction ticks.",
-    "semdedup_flags_upsert": "Mixed SemDeDup upsert (round 11): "
+    "semdedup_flags_upsert": "Mixed SemDeDup upsert: "
     "anchor-losing cells recompute from survivors (cell-keyed joins), "
-    "then the guarded append leg reuses semdedup_flags_append's "
-    "parameter-bounded coarse-assign + ≤16-cosine shape against the "
+    "then the guarded append leg runs semdedup_flags_append's "
+    "Arrow coarse-assign + ≤16-cosine shape against the "
     "POST-DELETE roster; survivor flags pass through from the cached "
     "delete-leg frame.",
     "ivfpq_drift_audit": "Index staleness audit (round 11): per "
