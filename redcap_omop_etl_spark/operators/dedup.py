@@ -539,8 +539,9 @@ def _shingle_hash_array(text: Column, n: int, family: str = "md5") -> Column:
     return F.array_distinct(F.transform(sh, lambda s: portable_hash60(s) % _MERSENNE_P))
 
 
-def _minhash_sig(hashes: Column, num_hashes: int) -> Column:
-    """Single-pass MinHash signature over an array of 31-bit shingle hashes.
+def _minhash_sig(hashes: Column | str, num_hashes: int) -> Column:
+    """Single-pass MinHash signature over an array of 31-bit shingle hashes
+    (``hashes``: the array column's name, or an array expression).
 
     One fold over the shingle array updates all ``num_hashes`` running
     minima via ``zip_with``/``least`` — O(shingles) array traversals
@@ -550,15 +551,22 @@ def _minhash_sig(hashes: Column, num_hashes: int) -> Column:
     (a_i·h + b_i) mod p derives deterministically from the index — no RNG,
     reproducible across runs and partitionings; all arithmetic stays below
     2^62 so ANSI mode never overflows.
+
+    The initial minima and the fold step are SQL text that Spark parses
+    once each, handed to ``aggregate`` as expressions: a handful of py4j
+    round trips per signature, where building the same tree through
+    ``pyspark.sql.functions`` cost one per node (~3.2k for 64 hashes).
+    The step is a SQL lambda, so an array expression (``near_dup_signature``'s
+    per-row shingle hashes) folds through the same text as a named column.
     """
     params = [(2 * i + 1, 104729 * (i + 1) % _MERSENNE_P) for i in range(num_hashes)]
-    init = F.array(*[F.lit(_MERSENNE_P).cast("long") for _ in range(num_hashes)])
-
-    def step(acc: Column, h: Column) -> Column:
-        perms = F.array(*[(h * a + b) % _MERSENNE_P for a, b in params])
-        return F.zip_with(acc, perms, lambda x, y: F.least(x, y))
-
-    return F.aggregate(hashes, init, step)
+    perms = ", ".join(f"(h * {a} + {b}) % {_MERSENNE_P}" for a, b in params)
+    return F.call_function(
+        "aggregate",
+        F.col(hashes) if isinstance(hashes, str) else hashes,
+        F.expr(f"array_repeat(CAST({_MERSENNE_P} AS BIGINT), {num_hashes})"),
+        F.expr(f"(acc, h) -> zip_with(acc, array({perms}), (x, y) -> least(x, y))"),
+    )
 
 
 def minhash_signatures(
@@ -573,7 +581,7 @@ def minhash_signatures(
     (a_i * h + b_i) mod p over 31-bit shingle hashes. Zero shuffles.
     ``family`` picks the shingle hash (see ``shingle_hashes``)."""
     base = shingle_hashes(df, n, text_col, id_col, family=family)
-    return base.select("doc", _minhash_sig(F.col("hashes"), num_hashes).alias("sig"))
+    return base.select("doc", _minhash_sig("hashes", num_hashes).alias("sig"))
 
 
 def minhash_lsh_pairs(
@@ -600,7 +608,7 @@ def minhash_lsh_pairs(
     # key — the extra fused recomputes cost less than materializing the
     # per-doc hash-array MEMORY_AND_DISK rows (the widest in the repo).
     base = shingle_hashes(df, n, text_col, id_col)
-    sigs = base.select("doc", _minhash_sig(F.col("hashes"), num_hashes).alias("sig"))
+    sigs = base.select("doc", _minhash_sig("hashes", num_hashes).alias("sig"))
     banded = minhash_band_rows(sigs, num_hashes, bands)
     # docs x bands rows on both sides — corpus-scaling; pinned sort-merge
     cand = (
@@ -639,27 +647,17 @@ def minhash_band_rows(sigs: DataFrame, num_hashes: int = 64, bands: int = 16) ->
     band's raw signature slice joined with "_" (a short string, so the
     banding replays verbatim in the DuckDB oracle; a fixed-width rehash
     of it would be a shuffle-width optimization, not a semantic change).
-    Zero shuffles: the explode is docs × bands."""
+    Zero shuffles: the ``inline`` is docs × bands. Emitted as one SQL
+    expression (see ``_minhash_sig``: one parse instead of a py4j round
+    trip per band-slice node)."""
     rows = num_hashes // bands
-    return (
-        sigs.select(
-            "doc",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.concat_ws(
-                                "_", *[F.element_at("sig", bi * rows + r + 1) for r in range(rows)]
-                            ).alias("bucket"),
-                        )
-                        for bi in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        )
-        .select("doc", "bk.band", "bk.bucket")
+    structs = ", ".join(
+        f"named_struct('band', {bi}, 'bucket', concat_ws('_', "
+        + ", ".join(f"element_at(sig, {bi * rows + r + 1})" for r in range(rows))
+        + "))"
+        for bi in range(bands)
     )
+    return sigs.select("doc", F.expr(f"inline(array({structs}))"))
 
 
 def minhash_band_table(

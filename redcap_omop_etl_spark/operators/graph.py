@@ -5,9 +5,12 @@ similarity.py) emits *pairs*; the deliverable a 100 TB dedup pipeline
 needs is *clusters* — pick one representative per group of transitively
 connected duplicates. That is connected components over the pair graph.
 
-Spark-first formulation: alternating large-star / small-star contraction
-as a driver loop over DataFrame joins (Kiveris et al., SoCC'14 — the
-scheme GraphFrames ships):
+Below 256k edge rows (``readers._SMALL_PLAN_ROWS``) the edges are
+collected once and labelled by a union-find on the driver; a round of
+the distributed loop costs several driver-paced jobs over a few
+kilobytes there. From the gate up, the formulation is alternating
+large-star / small-star contraction as a driver loop over DataFrame
+joins (Kiveris et al., SoCC'14 — the scheme GraphFrames ships):
 
 - each round rewires every node toward its neighborhood minimum
   (large-star: greater neighbors to the min; small-star: smaller
@@ -59,12 +62,13 @@ from redcap_omop_etl_spark.operators.dedup import (
     prefix_jaccard_pairs_capped,
     shingle_sql_cte,
 )
-from redcap_omop_etl_spark.sources.readers import Catalog, small_plan_rounds
+from redcap_omop_etl_spark.sources.readers import _SMALL_PLAN_ROWS, Catalog, small_plan_rounds
 from redcap_omop_etl_spark.workload import register
 
 
 # Observability: star-contraction round count of the most recent
-# connected_components() call (None before any call). Written, not
+# connected_components() call (0 when the driver union-find ran, None
+# before any call). Written, not
 # returned, so the 5 registered cluster consumers keep their signatures;
 # read by tools/bench_scale.py's --skewed regime to publish how many
 # rounds the heavy-hub graph takes vs the bounded-radius one.
@@ -86,7 +90,68 @@ def connected_components(
 
     Returns ``(node, component)`` where ``component`` is the minimum node
     id reachable from ``node``. Nodes are whatever appears in the edge
-    list (isolated nodes don't appear — callers union them in if needed).
+    list (isolated nodes don't appear — callers union them in if needed);
+    a node that appears only in self-loops is a singleton component, and
+    an edge with a null endpoint is ignored.
+
+    Two kernels, one answer. The min-label partition does not depend on
+    the order edges are visited in, so both return exactly equal rows:
+
+    - **Below ``readers._SMALL_PLAN_ROWS`` edge rows** (256k, the gate
+      ``small_plan_rounds`` already uses): ONE job collects the edges,
+      a min-label union-find runs on the driver, and the result is one
+      ``createDataFrame``. At this size a distributed round is 1-6
+      driver-paced jobs over a few kilobytes (a maintenance tick's
+      batch-sized merge graphs spent ~5-6 jobs per call in the loop
+      below); the probe reads at most the gate's row count, and the
+      union-find over 256k edges is well under a second of driver time.
+      ``CC_LAST_ROUNDS`` reads 0 on this path (so does perfbench's
+      per-layer ``graph.cc_rounds``).
+    - **From the gate up**: the distributed star-contraction loop
+      (``_star_contraction_components``), unchanged. The probe's job
+      is then the one extra cost of the dispatch.
+    """
+    global CC_LAST_ROUNDS
+    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    probe = raw.limit(_SMALL_PLAN_ROWS).collect()
+    if len(probe) < _SMALL_PLAN_ROWS:
+        CC_LAST_ROUNDS = 0
+        schema = raw.select(
+            F.greatest("u", "v").alias("node"), F.least("u", "v").alias("component")
+        ).schema
+        return raw.sparkSession.createDataFrame(
+            _union_find_labels(probe), schema, verifySchema=False
+        )
+    comp, CC_LAST_ROUNDS = _star_contraction_components(raw, max_iter)
+    return comp
+
+
+def _union_find_labels(pairs) -> list[tuple]:
+    """``(node, min node id of its component)`` for every node of an
+    edge list: union by minimum root, so every root is its set's
+    minimum, with path halving."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in pairs:
+        if u is None or v is None:
+            continue
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return [(x, find(x)) for x in parent]
+
+
+def _star_contraction_components(raw: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
+    """Distributed kernel of ``connected_components`` over ``raw(u, v)``:
+    ``(components, rounds run)``.
 
     Algorithm: alternating LARGE-STAR / SMALL-STAR contraction (Kiveris
     et al., "Connected Components in MapReduce and Beyond", SoCC'14 —
@@ -120,7 +185,6 @@ def connected_components(
     halves hub degree per round, but the exposure is real for
     adversarially hub-heavy edge inputs fed directly.
     """
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # a node appearing ONLY in self-loops is still a node of the graph —
     # a singleton component (the pre-round-8 propagation semantics,
     # pinned by the hypothesis property test)
@@ -150,8 +214,6 @@ def connected_components(
             lone.select(F.col("n").alias("node"), F.col("n").alias("component"))
         )
 
-    global CC_LAST_ROUNDS
-
     def _signature(frame: DataFrame):
         row = frame.agg(
             F.count(F.lit(1)).alias("n"),
@@ -165,9 +227,8 @@ def connected_components(
     # the signature's count doubles as the emptiness probe (the old
     # separate take(1) was one more job per call)
     if sig[0] == 0:
-        CC_LAST_ROUNDS = 0
         empty = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-        return _with_singletons(empty)
+        return _with_singletons(empty), 0
 
     # Size-adaptive AQE gate (round 13): with AQE on, every exchange in a
     # round materializes as its OWN job (QueryStageExec), so a round is
@@ -185,7 +246,6 @@ def connected_components(
             # ONE job per round: the signature materializes the checkpoint
             new_sig = _signature(e)
         if new_sig == sig:
-            CC_LAST_ROUNDS = rounds
             break
         sig = new_sig
     else:
@@ -198,7 +258,7 @@ def connected_components(
     comp = e.select(F.col("u").alias("node"), F.col("v").alias("component")).unionByName(
         e.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
     )
-    return _with_singletons(comp)
+    return _with_singletons(comp), rounds
 
 
 def _cc_round(e: DataFrame) -> DataFrame:

@@ -157,13 +157,40 @@ def fan_out(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     so a scan that produced fewer splits than cores serializes them. At
     100 TB scans yield thousands of splits and this is a no-op; on a small
     single-file table it buys full parallelism for the cost of shuffling a
-    few MB. Checking ``rdd.getNumPartitions`` is driver-side planning only
-    (file-split enumeration), not a job.
+    few MB.
+
+    The decision launches no job; it reads only what the planner already
+    knows:
+
+    - a ``repartition(n)``/``coalesce(n)`` on top has width ``n``, which
+      AQE leaves as is;
+    - a plan without an exchange counts its scan's splits
+      (``rdd.getNumPartitions``: file-split enumeration, planning only);
+    - any other plan with an exchange would have to RUN to report its
+      width: under AQE, ``df.rdd`` materializes every query stage (3 jobs
+      on a maintenance tick's join input) and throws them away. It counts
+      as narrow when the optimizer's size estimate is under ``target``
+      advisory partitions (``spark.sql.adaptive.advisoryPartitionSizeInBytes``),
+      the size below which AQE may coalesce it to fewer than ``target``.
+      AQE's parallelism-first coalescing keeps ``target`` partitions down
+      to ``target`` × 1 MB, so between the two sizes this widens an input
+      that was already wide: one extra round-robin shuffle of under
+      ``target`` advisory partitions.
     """
-    target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    spark = df.sparkSession
+    target = min_parallelism or spark.sparkContext.defaultParallelism
+    qe = df._jdf.queryExecution()
+    top = qe.optimizedPlan()
+    if top.nodeName() == "Repartition":
+        narrow = top.numPartitions() < target
+    elif "Exchange" not in qe.executedPlan().toString():
+        narrow = df.rdd.getNumPartitions() < target
+    else:
+        advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        narrow = int(top.stats().sizeInBytes()) < target * advisory
+    return df.repartition(target) if narrow else df
 
 
 # small_plan_rounds' gate: 256k rows (~6 MB shuffled as edge pairs) is

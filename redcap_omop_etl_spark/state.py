@@ -40,7 +40,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from redcap_omop_etl_spark.caching import materialize
@@ -139,11 +139,15 @@ class StateCatalog:
         vpath = hadoop.Path(vdir)
         if fs.exists(vpath):
             fs.delete(vpath, True)
-        counts = {}
+        # row counts ride the write itself: an Observation fills from the
+        # write job's own metrics, so a frame costs one job, not a
+        # materialize, a write and a count()
+        observed = {name: Observation() for name in frames}
         for name, df in frames.items():
-            pinned = materialize(df)
-            pinned.write.mode("errorifexists").parquet(f"{vdir}/{name}")
-            counts[name] = pinned.count()
+            df.observe(observed[name], F.count(F.lit(1)).alias("rows")).write.mode(
+                "errorifexists"
+            ).parquet(f"{vdir}/{name}")
+        counts = {name: obs.get["rows"] for name, obs in observed.items()}
         manifest = {
             "op": op,
             "corpus_fingerprint": fp,
@@ -253,7 +257,7 @@ def cluster_state_tick(
     comp, hubs = frames["components"], frames["hubs"]
     if delete_ids is not None:
         comp, hubs = minhash_cluster_state_delete(comp, hubs, delete_ids, corpus)
-        if append_docs is not None:  # a delete-only tick pins in save
+        if append_docs is not None:  # the append reads the deleted state again
             comp, hubs = materialize(comp), materialize(hubs)
     if append_docs is not None:
         # Checkpointed: the append transition reads the batch band
@@ -419,7 +423,7 @@ def semdedup_tick(
     )
     if delete_ids is not None:
         flags, anchors = semdedup_state_delete(flags, anchors, delete_ids, embeddings)
-        if append_vecs is not None:  # a delete-only tick pins in save
+        if append_vecs is not None:  # the append reads the deleted state again
             flags, anchors = materialize(flags), materialize(anchors)
     if append_vecs is not None:
         flags, anchors = semdedup_state_append(flags, anchors, centroids, append_vecs)

@@ -9,7 +9,7 @@ import pathlib
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 class TestIncrementalClusterAppend:
@@ -205,6 +205,49 @@ class TestUpsertMultiTick:
         }  # every live bucket has a hub
 
 
+def test_minhash_bands_and_signature_match_duckdb(spark):
+    """The band rows and the full-signature key, value for value, against
+    the DuckDB replay every MinHash oracle splices
+    (``minhash_banded_sql_cte``) over ~200 corpus documents."""
+    import duckdb
+
+    from redcap_omop_etl_spark.operators.dedup import (
+        minhash_band_table,
+        minhash_banded_sql_cte,
+        near_dup_signature,
+        shingle_sql_cte,
+    )
+    from redcap_omop_etl_spark.sources.readers import Catalog
+
+    docs = Catalog(spark, SF_CORRECT)["documents"].select("doc_id", "text")
+    docs = docs.orderBy("doc_id").limit(200)
+    rows = [(r["doc_id"], r["text"]) for r in docs.collect()]
+    assert len(rows) == 200
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    cte = f"WITH {shingle_sql_cte()}, {minhash_banded_sql_cte()}"
+    want_bands = set(con.execute(f"{cte} SELECT doc, band, bucket FROM banded").fetchall())
+    want_sigs = set(
+        con.execute(
+            f"{cte} SELECT doc, string_agg(sig::VARCHAR, '_' ORDER BY i) FROM sigs GROUP BY doc"
+        ).fetchall()
+    )
+
+    got_bands = {
+        (r["doc"], r["band"], r["bucket"]) for r in minhash_band_table(docs).collect()
+    }
+    got_sigs = {
+        (r["doc_id"], r["k"])
+        for r in docs.select("doc_id", near_dup_signature(F.col("text")).alias("k")).collect()
+    }
+    assert len(got_bands) == 200 * 16
+    assert got_bands == want_bands
+    assert got_sigs == want_sigs
+
+
 def test_minhash_band_window_defined_once():
     """Convention lint: every MinHash cluster path (LSH pairs, star
     edges, bootstrap, append, delete, routed ingest) goes through one
@@ -222,5 +265,5 @@ def test_minhash_band_window_defined_once():
 
     window = sites('Window.partitionBy("band", "bucket")')
     assert len(window) == 1, "bucket-minimum windows: " + ", ".join(window)
-    explode = sites('element_at("sig", bi * rows + r + 1)')
+    explode = sites("element_at(sig, {bi * rows + r + 1})")
     assert len(explode) == 1, "band-row explodes: " + ", ".join(explode)

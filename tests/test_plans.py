@@ -293,3 +293,28 @@ def test_structured_chunker_single_doc_window(spark):
         if s.startswith("Window "):
             groups = re.findall(r"\[(.*?)\]", s)
             assert len(groups) >= 2 and groups[1].strip(), line
+
+
+def test_fan_out_decides_without_a_job(spark, tmp_path):
+    # fan_out reads only what the planner knows: on a join input (a plan
+    # with exchanges) it must not run the plan's query stages to learn
+    # its width, and it must still widen a one-split scan
+    from redcap_omop_etl_spark.sources.readers import fan_out
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "one_split")
+    spark.range(200).selectExpr("id AS doc_id", "cast(id AS string) AS text").coalesce(
+        1
+    ).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    assert fan_out(scan).rdd.getNumPartitions() == sc.defaultParallelism
+
+    ids = spark.read.parquet(path).select("doc_id").filter("doc_id % 7 = 0")
+    joined = scan.join(ids.hint("merge"), "doc_id", "left_anti")
+    sc.setJobGroup("fan_out_join_input", "fan_out over a join input")
+    try:
+        fan_out(joined)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("fan_out_join_input")) == []

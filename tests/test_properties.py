@@ -201,49 +201,78 @@ class TestWinnowGuarantee:
         check()
 
 
+def _union_find(edges) -> dict:
+    """Reference labels: every node of ``edges`` -> its component's
+    minimum node, by a sequential union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 class TestConnectedComponentsProperty:
-    """Min-label propagation must agree with a sequential union-find on
-    arbitrary small graphs — chains, cliques, self-loops, disjoint parts."""
+    """Both connected-components kernels — the driver union-find below
+    the size gate and the distributed star-contraction loop above it —
+    must agree with a sequential union-find on arbitrary small graphs:
+    chains, cliques, duplicate and reversed edges, self-loop-only nodes,
+    disjoint parts."""
 
     def test_matches_union_find(self, spark):
-        from hypothesis import given, settings, strategies as st
-
-        from redcap_omop_etl_spark.operators.graph import connected_components
+        from redcap_omop_etl_spark.operators import graph
 
         edge = st.tuples(st.integers(0, 14), st.integers(0, 14))
 
         @settings(max_examples=8, deadline=None)
-        @given(edges=st.lists(edge, min_size=1, max_size=20))
-        def check(edges):
-            parent = {}
-
-            def find(x):
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            def union(a, b):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-
-            for a, b in edges:
-                union(a, b)
-            # canonical: min node id reachable
-            expected = {x: find(x) for x in parent}
-            # path compression can leave stale roots; normalize twice
-            expected = {x: find(x) for x in parent}
+        @given(
+            edges=st.lists(edge, min_size=1, max_size=20),
+            pick=st.integers(0, 19),
+            lone=st.lists(st.integers(20, 24), max_size=3),
+        )
+        def check(edges, pick, lone):
+            # one edge again and reversed, plus nodes whose only edges
+            # are self-loops (singleton components)
+            a, b = edges[pick % len(edges)]
+            edges = edges + [(a, b), (b, a)] + [(x, x) for x in lone]
+            expected = sorted(_union_find(edges).items())
 
             df = spark.createDataFrame(edges, "d1 long, d2 long")
-            got = {
-                r["node"]: r["component"]
-                for r in connected_components(df).collect()
-            }
-            assert got == expected, (edges, got, expected)
+            local = graph.connected_components(df)
+            assert graph.CC_LAST_ROUNDS == 0  # below the gate: the local kernel
+            loop, rounds = graph._star_contraction_components(
+                df.select(F.col("d1").alias("u"), F.col("d2").alias("v")), 30
+            )
+            for kernel, comp in (("local", local), ("loop", loop)):
+                got = sorted((r["node"], r["component"]) for r in comp.collect())
+                assert got == expected, (kernel, edges, got, expected)
 
         check()
+
+    def test_gate_dispatches_between_kernels(self, spark, monkeypatch):
+        from redcap_omop_etl_spark.operators import graph
+
+        monkeypatch.setattr(graph, "_SMALL_PLAN_ROWS", 4)
+        for edges, local in (
+            ([(1, 2), (2, 3), (7, 7)], True),  # 3 rows: under the gate
+            ([(1, 2), (2, 3), (3, 4), (7, 7)], False),  # 4 rows: at the gate
+            ([(5, 4), (4, 3), (3, 2), (2, 1), (9, 8), (8, 8)], False),
+        ):
+            df = spark.createDataFrame(edges, "d1 long, d2 long")
+            got = sorted(
+                (r["node"], r["component"])
+                for r in graph.connected_components(df).collect()
+            )
+            assert got == sorted(_union_find(edges).items()), edges
+            assert (graph.CC_LAST_ROUNDS == 0) == local, (edges, graph.CC_LAST_ROUNDS)
 
 
 class TestPennyAllocationProperties:

@@ -46,6 +46,39 @@ class TestStateCatalog:
         assert cat.latest_version(spark, "toy", "fp1") == 2
         assert cat.load(spark, "toy", "fp1")["a"].count() == 3
 
+    def test_manifest_row_counts_are_the_saved_rows(self, spark, tmp_path):
+        """The manifest's ``row_counts`` (observed on the write itself)
+        equal the row counts of the frames a load reads back, after a
+        bootstrap, after a delete+append tick and for an empty frame."""
+        from redcap_omop_etl_spark.state import (
+            CLUSTER_OP,
+            StateCatalog,
+            cluster_state_bootstrap,
+            cluster_state_tick,
+        )
+
+        fam = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+        docs = spark.createDataFrame(
+            [(1, fam), (2, fam), (3, fam), (10, "one two three four five six")],
+            "doc_id long, text string",
+        )
+        cat = StateCatalog(str(tmp_path / "state"))
+        fp, v1 = cluster_state_bootstrap(cat, docs)
+        v2 = cluster_state_tick(
+            cat,
+            fp,
+            docs,
+            append_docs=spark.createDataFrame([(100, fam)], "doc_id long, text string"),
+            delete_ids=spark.createDataFrame([(2,)], "doc_id long"),
+        )
+        v3 = cat.save(spark, "toy", "fp1", {"a": docs, "empty": docs.limit(0)})
+        for op, key, v in ((CLUSTER_OP, fp, v1), (CLUSTER_OP, fp, v2), ("toy", "fp1", v3)):
+            counts = cat.manifest(spark, op, key, v)["row_counts"]
+            frames = cat.load(spark, op, key, v)
+            assert counts == {name: df.count() for name, df in frames.items()}, (op, v)
+        assert cat.manifest(spark, CLUSTER_OP, fp, v2)["row_counts"]["components"] == 3
+        assert cat.manifest(spark, "toy", "fp1", v3)["row_counts"] == {"a": 4, "empty": 0}
+
     def test_tick_in_fresh_process_equals_rebuild(self, spark, tmp_path):
         """Session A bootstraps v1; a SUBPROCESS with its own fresh
         SparkSession loads the catalog, applies a delete+append tick and

@@ -14,7 +14,12 @@ read/write bytes and the first line of the stage's callsite. The
 per-query header also counts jobs excluding broadcast-exchange jobs
 (asynchronous ``$anonfun$withThreadLocalCaptured`` jobs whose last stage
 is a result stage), which move the raw count by ±1 between runs of the
-same code; compare job counts on that figure.
+same code; compare job counts on that figure. The timed pass also
+counts py4j round trips (every Python-to-JVM call goes through
+``ClientServerConnection.send_command``) and the seconds spent inside
+them, and reports the driver seconds: the part of the timed wall in
+which no Spark job of the query was running (planning, Python
+orchestration, result handling).
 """
 
 from __future__ import annotations
@@ -30,6 +35,48 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from redcap_omop_etl_spark import workload
 from redcap_omop_etl_spark.caching import clear_session_memos, unpersist_operator_caches
 from redcap_omop_etl_spark.session import build_session
+
+
+class Py4jCounter:
+    """Counts py4j round trips, and the seconds spent in them, while
+    active (wraps ``ClientServerConnection.send_command``)."""
+
+    def __init__(self) -> None:
+        self.calls = 0
+        self.seconds = 0.0
+
+    def __enter__(self) -> "Py4jCounter":
+        from py4j.clientserver import ClientServerConnection
+
+        self._orig = orig = ClientServerConnection.send_command
+
+        def counted(conn, command):
+            t = time.perf_counter()
+            try:
+                return orig(conn, command)
+            finally:
+                self.calls += 1
+                self.seconds += time.perf_counter() - t
+
+        ClientServerConnection.send_command = counted
+        return self
+
+    def __exit__(self, *exc) -> None:
+        from py4j.clientserver import ClientServerConnection
+
+        ClientServerConnection.send_command = self._orig
+
+
+def job_free_seconds(jobs: dict, jids: list[int], t0_ms: float, t1_ms: float) -> float:
+    """Seconds of the window [t0_ms, t1_ms] in which none of ``jids``
+    was running."""
+    busy, end = 0.0, t0_ms
+    for a, b in sorted((jobs[j]["t0"], jobs[j].get("t1", jobs[j]["t0"])) for j in jids):
+        a, b = max(a, end), min(b, t1_ms)
+        if b > a:
+            busy += b - a
+            end = b
+    return max(0.0, (t1_ms - t0_ms) - busy) / 1e3
 
 
 def parse_eventlog(path: str) -> dict:
@@ -107,6 +154,7 @@ def main() -> None:
     unknown = [n for n in sys.argv[1:] if n not in qs]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)
+    windows: dict[str, tuple[float, float]] = {}
     for name in names:
         unpersist_operator_caches()
         clear_session_memos()
@@ -124,11 +172,16 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"__mark__{name}")
         spark.range(1).write.format("noop").mode("overwrite").save()
         spark.sparkContext.setJobDescription(name)
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        t0, epoch0 = time.perf_counter(), time.time()
+        with Py4jCounter() as py4j:
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
+        windows[name] = (epoch0 * 1e3, epoch0 * 1e3 + wall * 1e3)
         spark.sparkContext.setJobDescription(None)
-        print(f"\n=== {name}: {wall:.3f}s ===")
+        print(
+            f"\n=== {name}: {wall:.3f}s, {py4j.calls} py4j round trips "
+            f"({py4j.seconds:.3f}s in them) ==="
+        )
     # flush the event log by stopping the session, then parse
     app_id = spark.sparkContext.applicationId
     spark.stop()
@@ -185,6 +238,8 @@ def main() -> None:
                     f"sw={s['sw']/1e6:8.2f}MB  {s['name'][:80]}"
                 )
         print(f"  ## inter-job gap total: {gap_total:.3f}s")
+        if name in windows:
+            print(f"  ## driver seconds (no job running): {job_free_seconds(jobs, jids, *windows[name]):.3f}s")
 
 
 if __name__ == "__main__":
